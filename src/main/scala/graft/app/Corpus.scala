@@ -44,10 +44,12 @@ object Corpus {
     }
   }
 
-  def corpusDir(sfDir: String): String = {
-    val base = new java.io.File(sfDir).getName
-    s"/root/repo/target/corpus/$Version/$base"
-  }
+  /** Under `graft.corpus.dir`, else `GRAFT_CORPUS_DIR`, else `target/corpus`
+    * in the working directory (the checkout, when run through sbt). */
+  def corpusDir(sfDir: String): String =
+    sys.props.get("graft.corpus.dir").orElse(sys.env.get("GRAFT_CORPUS_DIR"))
+      .getOrElse(new java.io.File("target/corpus").getAbsolutePath) +
+      s"/$Version/${new java.io.File(sfDir).getName}"
 
   def pagesPath(sfDir: String): String = s"${corpusDir(sfDir)}/pages.parquet"
   def goldenPath(sfDir: String): String = s"${corpusDir(sfDir)}/golden.parquet"

@@ -6,10 +6,9 @@ import graft.engine.{DocOut, Eval, Pipeline}
 
 /** spark-submit entry point for the extraction engine.
   *
-  * Usage:
+  * Usage (prints the docs this run wrote; a resume counts only what it redid):
   *   Main --input <pages path|table> --output <dir>
-  *        [--partitions N] [--salts K] [--buckets B] [--resume]
-  *        [--eval <golden path>]
+  *        [--partitions N] [--buckets B] [--resume] [--eval <golden path>]
   *
   * On a real cluster this is `spark-submit --class graft.app.Main ...`; in
   * the sandbox it runs under sbt with a local master. The session honors an
@@ -22,7 +21,6 @@ object Main {
     val input = opts.getOrElse("input", sys.error("--input required"))
     val output = opts.getOrElse("output", sys.error("--output required"))
     val partitions = opts.get("partitions").map(_.toInt).getOrElse(32)
-    val salts = opts.get("salts").map(_.toInt).getOrElse(8)
     val buckets = opts.get("buckets").map(_.toInt).getOrElse(Pipeline.DefaultBuckets)
     val resume = opts.contains("resume")
 
@@ -37,9 +35,9 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()
-    val n = Pipeline.run(spark, input, output, partitions, salts, resume, buckets)
+    val n = Pipeline.run(spark, input, output, resume, buckets)
     val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[graft] extracted $n docs in $sec%.1f s (${n / sec}%.1f docs/s) -> $output")
+    println(f"[graft] wrote $n docs in $sec%.1f s (${n / sec}%.1f docs/s) -> $output")
 
     opts.get("eval").foreach { goldenPath =>
       import spark.implicits._

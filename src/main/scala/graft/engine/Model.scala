@@ -15,7 +15,7 @@ final case class PairOut(head: Int, tail: Int)
 final case class MultiOut(head: Int, tails: Seq[Int])
 
 /** One decoded document: the engine's output row. `bucket` is the
-  * deterministic resume/write unit (url-hash), `host` feeds skew handling.
+  * deterministic resume/write unit (url-hash), `host` is [[Pipeline.hostOf]].
   */
 final case class DocOut(
     url: String,

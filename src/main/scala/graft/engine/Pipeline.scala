@@ -1,22 +1,22 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.html.{HtmlParser, Lineizer}
+import graft.html.Lineizer
 
 /** The engine: Common-Crawl-style pages -> decoded documents, expressed as
   * typed Dataset stages over Catalyst (SURVEY.md §3.4).
   *
   * Scale posture (10^12 docs / 1000 executors):
-  *  - the pipeline is map-only per document — the ONLY shuffle is the
-  *    optional salted repartition up front; aggregations (lineage, metrics)
-  *    ride partial+final hash aggregation;
+  *  - the kernel is map-only per document; a run's ONE shuffle is the hash
+  *    exchange on `bucket` feeding the write. `bucket` is a url hash,
+  *    uniform by construction: no range sampling, no host salting;
   *  - `html` (the fat binary column) is pruned at scan time via an explicit
   *    select, and dropped from the output row immediately after lineize;
-  *  - skewed hosts are handled by explicit salting: partition key is
-  *    (host, xxhash64(url) % saltsPerHost), so one hot host spreads over
-  *    `saltsPerHost` partitions while small hosts stay co-located;
+  *  - nothing is cached or read back: lineage is tallied during the write;
   *  - writes are bucketed by a deterministic url hash: dynamic partition
   *    overwrite of a bucket is idempotent, so a resumed run redoes only
   *    unfinished buckets (anti-join against the lineage table);
@@ -77,18 +77,6 @@ object Pipeline {
     if (pathOrTable.contains("/")) spark.read.parquet(pathOrTable)
     else spark.read.table(pathOrTable)
 
-  /** Salted repartition for skewed hosts. Key = (host, url-hash % salts):
-    * hot hosts spread across `salts` partitions; the shuffle is the only
-    * wide dependency in the whole pipeline.
-    */
-  def saltedByHost(pages: DataFrame, partitions: Int, salts: Int): DataFrame = {
-    val withKeys = pages
-      .withColumn("host", regexp_extract(col("url"), "^[a-z]+://([^/]+)/", 1))
-      .withColumn("salt", pmod(xxhash64(col("url")), lit(salts)))
-    withKeys.repartition(partitions, col("host"), col("salt"))
-      .drop("host", "salt")
-  }
-
   /** Main extraction stage: prune to (url, html, lang) then run the typed
     * kernel over partitions. `html` never survives this stage.
     */
@@ -138,10 +126,10 @@ object Pipeline {
     * 1% drift re-parses 10^10 pages, not 10^12. The price is one url+digest
     * equi-join between crawl and prev: the prev side ships only
     * (url, digest), but the crawl side carries html through the anti-join
-    * shuffle — the same wide-dependency class as [[saltedByHost]]'s salt
-    * repartition, i.e. one corpus-wide shuffle, not a new cost tier. On a
+    * shuffle — the same wide-dependency class as [[runFrom]]'s bucket
+    * exchange, i.e. one corpus-wide shuffle, not a new cost tier. On a
     * real deployment both tables are bucket-partitioned by url
-    * ([[writeDecoded]]'s layout), so a storage-partitioned (bucketed) join
+    * ([[runFrom]]'s layout), so a storage-partitioned (bucketed) join
     * co-locates the sides and removes even that shuffle. AQE splits
     * hot-url skew either way.
     */
@@ -176,22 +164,22 @@ object Pipeline {
       .as[LineageRow]
   }
 
-  /** Range-partitioned, bucket-directory write (Iceberg-style layout;
-    * dynamic overwrite per bucket is idempotent).
+  /** [[lineage]]'s sums as one typed aggregate, for [[runFrom]] to observe:
+    * bucket b's (docs, tokens, kv pairs, kernel micros) sit at `4b` to `4b+3`.
     */
-  def writeDecoded(decoded: Dataset[DocOut], outDir: String): Unit =
-    decoded
-      .repartitionByRange(col("bucket"), col("url"))
-      .sortWithinPartitions(col("bucket"), col("url"))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(s"$outDir/decoded")
-
-  def writeLineage(decoded: Dataset[DocOut], outDir: String): Unit =
-    lineage(decoded).coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/lineage")
+  final class BucketTally(buckets: Int)
+      extends Aggregator[(Int, Int, Int, Long), Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](4 * buckets)
+    def reduce(t: Array[Long], d: (Int, Int, Int, Long)): Array[Long] = {
+      val i = 4 * d._1
+      t(i) += 1; t(i + 1) += d._2; t(i + 2) += d._3; t(i + 3) += d._4
+      t
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = { a.indices.foreach(i => a(i) += b(i)); a }
+    def finish(t: Array[Long]): Array[Long] = t
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder()
+  }
 
   /** Resume: drop pages whose bucket is already marked done in the lineage
     * table (left anti join — broadcast, the lineage side is tiny).
@@ -214,19 +202,21 @@ object Pipeline {
     }
   }
 
-  /** Full run: read -> (resume) -> salt -> extract -> write + lineage. */
-  def run(
-      spark: SparkSession,
-      inputPath: String,
-      outDir: String,
-      partitions: Int,
-      salts: Int = 8,
-      resume: Boolean = false,
-      buckets: Int = DefaultBuckets
-  ): Long =
-    runFrom(spark, readPages(spark, inputPath), outDir, partitions, salts, resume, buckets)
+  /** Full run: read -> (resume) -> extract -> write + lineage. */
+  def run(spark: SparkSession, inputPath: String, outDir: String,
+      resume: Boolean = false, buckets: Int = DefaultBuckets): Long =
+    runFrom(spark, readPages(spark, inputPath), outDir, 0, 0, resume, buckets)
 
-  /** Full run over an already-constructed pages frame. */
+  /** Full run over a pages frame in one pass: (resume filter) -> extract ->
+    * one hash exchange on `bucket` -> sort by (bucket, url) -> bucket
+    * directory write. Lineage is a [[BucketTally]] observed after the
+    * exchange, in the write's result stage, where Spark applies a task's
+    * accumulator update once even if a stage is retried. A resumed run
+    * appends its lineage rows (its buckets are those no earlier run
+    * finished). Returns the docs this call wrote. `partitions` and `salts`
+    * are ignored, kept for existing callers: the exchange width is
+    * `spark.sql.shuffle.partitions`, which AQE coalesces.
+    */
   def runFrom(
       spark: SparkSession,
       pages0: DataFrame,
@@ -236,13 +226,22 @@ object Pipeline {
       resume: Boolean = false,
       buckets: Int = DefaultBuckets
   ): Long = {
-    val pages1 = if (resume) resumeFilter(spark, pages0, outDir, buckets) else pages0
-    val pages = saltedByHost(pages1, partitions, salts)
-    val decoded = extract(pages, buckets).persist()
-    try {
-      writeDecoded(decoded, outDir)
-      writeLineage(decoded, outDir)
-      decoded.count()
-    } finally decoded.unpersist()
+    import spark.implicits._
+    val pages = if (resume) resumeFilter(spark, pages0, outDir, buckets) else pages0
+    val tally = Observation()
+    extract(pages, buckets)
+      .repartition(col("bucket"))
+      .observe(tally, udaf(new BucketTally(buckets)).apply(
+        col("bucket"), col("nTokens"), col("nKv"), col("kernelUs")).as("t"))
+      .sortWithinPartitions(col("bucket"), col("url"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").parquet(s"$outDir/decoded")
+    val t = tally.get("t").asInstanceOf[collection.Seq[Long]]
+    // one row per bucket with docs, wallMs truncated as lineage truncates it
+    val rows = (0 until buckets).filter(b => t(4 * b) > 0).map(b =>
+      LineageRow(b, t(4 * b), t(4 * b + 1), t(4 * b + 2), t(4 * b + 3) / 1000L, "done"))
+    rows.toDS().coalesce(1).write.mode(if (resume) "append" else "overwrite")
+      .parquet(s"$outDir/lineage")
+    rows.map(_.nDocs).sum
   }
 }

@@ -1,14 +1,14 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.app.Corpus
 
 /** Distributed-correctness gates (SURVEY.md §5.2): byte-identical text per
   * url vs the oracle goldens through the REAL Spark pipeline, invariance to
-  * partitioning/salting/input order, idempotent resume, and the windowed-D3
-  * parity backend.
+  * partitioning/input order, idempotent resume with a complete lineage
+  * ledger, and the windowed-D3 parity backend.
   */
 class PipelineSpec extends AnyFunSuite {
 
@@ -50,34 +50,96 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("result set invariant to parallelism, salting, and input order") {
+  test("result set invariant to parallelism and input order") {
     ensured()
     val pages = spark.read.parquet(Corpus.pagesPath(sfDir))
     def fingerprint(df: org.apache.spark.sql.DataFrame): Long =
       df.select(xxhash64(col("url"), col("text"), col("nTokens"), col("nKv")).as("h"))
         .agg(expr("bit_xor(h)")).collect()(0).getLong(0)
     val base = fingerprint(Pipeline.extract(pages).toDF())
-    val salted = fingerprint(Pipeline.extract(Pipeline.saltedByHost(pages, 7, 3)).toDF())
     val shuffled = fingerprint(Pipeline.extract(pages.orderBy(rand(42))).toDF())
     val coalesced = fingerprint(Pipeline.extract(pages.repartition(1)).toDF())
-    assert(base == salted && base == shuffled && base == coalesced)
+    assert(base == shuffled && base == coalesced)
   }
+
+  /** The pages of the even buckets: the part of the corpus an interrupted
+    * run finished.
+    */
+  private def evenBuckets(pages: DataFrame): DataFrame = pages.filter(
+    udf((u: String) => Pipeline.bucketOf(u, Pipeline.DefaultBuckets) % 2 == 0).apply(col("url")))
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
 
   test("resume skips done buckets and total output is complete and duplicate-free") {
     ensured()
-    val outDir = java.nio.file.Files.createTempDirectory("resume").toString
+    val outDir = tempDir("resume")
     val pages = spark.read.parquet(Corpus.pagesPath(sfDir))
     // first run: only half the buckets (simulated interrupted run)
-    val half = pages.filter(
-      udf((u: String) => Pipeline.bucketOf(u, Pipeline.DefaultBuckets) % 2 == 0).apply(col("url")))
-    val dHalf = Pipeline.extract(half)
-    Pipeline.writeDecoded(dHalf, outDir)
-    Pipeline.writeLineage(dHalf, outDir)
+    val half = evenBuckets(pages)
+    Pipeline.runFrom(spark, half, outDir, 4)
     val remaining = Pipeline.resumeFilter(spark, pages, outDir)
     val remBuckets = Pipeline.extract(remaining).select("bucket").distinct()
       .collect().map(_.getInt(0)).toSet
     assert(remBuckets.forall(_ % 2 == 1), "resume must only re-run unfinished buckets")
     assert(remaining.count() + half.count() == pages.count())
+  }
+
+  test("a resumed run appends its lineage: one done row per bucket, no duplicate url") {
+    ensured()
+    import spark.implicits._
+    val outDir = tempDir("resume-lineage")
+    val pages = spark.read.parquet(Corpus.pagesPath(sfDir))
+    val nFirst = Pipeline.runFrom(spark, evenBuckets(pages), outDir, 4)
+    val nResumed = Pipeline.runFrom(spark, pages, outDir, 4, resume = true)
+    val nPages = pages.count()
+    assert(nFirst > 0 && nResumed > 0 && nFirst + nResumed == nPages)
+    val want = pages.select("url").as[String].collect()
+      .groupBy(Pipeline.bucketOf(_, Pipeline.DefaultBuckets)).map { case (b, us) => b -> us.length.toLong }
+    def ledger() = spark.read.parquet(s"$outDir/lineage").as[LineageRow].collect()
+    val rows = ledger()
+    assert(rows.map(_.bucket).sorted.toSeq == want.keys.toSeq.sorted,
+      "exactly one lineage row per bucket, from both runs")
+    assert(rows.forall(r => r.status == "done" && r.nDocs == want(r.bucket)))
+    val decoded = spark.read.parquet(s"$outDir/decoded")
+    assert(decoded.count() == nPages && decoded.select("url").distinct().count() == nPages)
+    // nothing is left, so a further resume writes no doc and no row
+    assert(Pipeline.runFrom(spark, pages, outDir, 4, resume = true) == 0L)
+    assert(ledger().sortBy(_.bucket).toSeq == rows.sortBy(_.bucket).toSeq)
+  }
+
+  test("runFrom writes what extract computes, and lineage equal to the SQL lineage") {
+    ensured()
+    import spark.implicits._
+    val outDir = tempDir("run-from")
+    val pages = spark.read.parquet(Corpus.pagesPath(sfDir))
+    assert(Pipeline.runFrom(spark, pages, outDir, 4) == pages.count())
+    def perUrl(d: Dataset[DocOut]) = d.select("url", "text", "nTokens", "nKv")
+      .as[(String, String, Int, Int)].collect().sortBy(_._1).toSeq
+    val written = spark.read.parquet(s"$outDir/decoded").as[DocOut]
+    assert(perUrl(written) == perUrl(Pipeline.extract(pages)))
+    def byBucket(l: Dataset[LineageRow]) = l.collect().sortBy(_.bucket).toSeq
+    val observed = byBucket(spark.read.parquet(s"$outDir/lineage").as[LineageRow])
+    // kernelUs is a timing, so a fresh extract's wallMs differs; the
+    // observed tally must equal the SQL lineage of the rows it wrote,
+    // wallMs truncation included
+    assert(observed == byBucket(Pipeline.lineage(written)))
+    assert(observed.map(_.copy(wallMs = 0L)) ==
+      byBucket(Pipeline.lineage(Pipeline.extract(pages))).map(_.copy(wallMs = 0L)))
+  }
+
+  test("hostOf: ports, scheme case, no trailing slash, userinfo, query and fragment") {
+    // current behaviour, pinned: DocOut.host is a golden column
+    Seq(
+      "https://a.b:8080/x" -> "a.b",
+      "HTTPS://Example.COM/x" -> "Example.COM",
+      "https://a.b" -> "a.b",
+      "https://u@h/" -> "u@h",
+      "https://u:p@h/" -> "u",
+      "https://a.b?q=1" -> "a.b",
+      "https://a.b#top" -> "a.b",
+      "a.b/x" -> "a.b"
+    ).foreach { case (url, host) => assert(Pipeline.hostOf(url) == host, url) }
   }
 
   test("incremental re-extraction: kernel leg bounded by the delta, result equals full extract") {
@@ -154,28 +216,6 @@ class PipelineSpec extends AnyFunSuite {
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(digest.getBytes("UTF-8")).map(b => f"$b%02x").mkString
     assert(md == "67c7d73b47cb609337f3a8552ded7f86")
-  }
-
-  test("salting spreads a hot host across partitions, small hosts stay co-located") {
-    ensured()
-    import spark.implicits._
-    // adversarial skew: one host owns 90% of the corpus
-    val hot = (0 until 9000).map(i => (s"https://hot.example/$i", i.toString))
-    val cold = (0 until 1000).map(i => (s"https://cold-$i.example/x", i.toString))
-    val pages = (hot ++ cold).toDF("url", "payload")
-    val salted = Pipeline.saltedByHost(pages, partitions = 16, salts = 8)
-    val perPartition = salted
-      .select(col("url"), org.apache.spark.sql.functions.spark_partition_id().as("pid"))
-      .groupBy("pid").count().collect().map(_.getLong(1))
-    val hotSpread = salted
-      .filter(col("url").startsWith("https://hot.example/"))
-      .select(org.apache.spark.sql.functions.spark_partition_id())
-      .distinct().count()
-    assert(hotSpread >= 6, s"hot host must spread over ~salts partitions, got $hotSpread")
-    // a partition may receive a few of the 8 salt buckets (hash collisions)
-    // but never the whole hot host
-    assert(perPartition.max <= 9000 * 0.4,
-      s"no partition may hold the bulk of the hot host: max=${perPartition.max}")
   }
 
   test("windowed parse-spots backend matches the kernel (two-backend parity)") {

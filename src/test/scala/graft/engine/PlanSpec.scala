@@ -212,7 +212,7 @@ class PlanSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("plan-resume").toString
     val pages = spark.read.parquet(Corpus.pagesPath(sfDir))
     val d = Pipeline.extract(pages.limit(50))
-    Pipeline.writeLineage(d, out)
+    Pipeline.lineage(d).write.parquet(s"$out/lineage")
     val p = Pipeline.resumeFilter(spark, pages, out)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("graft_bucket"), s"native expression missing:\n$p")
@@ -229,6 +229,64 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("url") && p.contains("html"))
     assert(!p.contains("warc_ts"), s"fat column not pruned from scan:\n$p")
     assert(!p.contains("Exchange"), s"extract stage must be map-only:\n$p")
+  }
+
+  test("runFrom: one hash exchange on bucket, html never shuffled, nothing cached") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    Corpus.ensure(spark, sfDir)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    def isMarker(qe: QueryExecution) = qe.analyzed.output.map(_.name) == Seq("plan_spec_marker")
+    val queries =
+      try {
+        val out = java.nio.file.Files.createTempDirectory("plan-run-from").toString
+        Pipeline.runFrom(spark, spark.read.parquet(Corpus.pagesPath(sfDir)), out, 4)
+        // listener events arrive in order: once this marker query's is
+        // in, every query runFrom ran has been seen
+        spark.range(1).toDF("plan_spec_marker").collect()
+        val deadline = System.nanoTime() + 60000000000L
+        def seenNow = seen.toArray(Array.empty[QueryExecution]).toSeq
+        while (!seenNow.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(50)
+        assert(seenNow.exists(isMarker), "listener events did not arrive")
+        seenNow.filterNot(isMarker)
+      } finally spark.listenerManager.unregister(listener)
+    // the final adaptive plans, through query stages and command wrappers
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => (other.children ++ other.innerChildren.collect { case c: SparkPlan => c })
+        .flatMap(nodes)
+    })
+    val all = queries.flatMap(qe => nodes(qe.executedPlan))
+    val exchanges = all.collect { case e: Exchange => e }.distinct
+    val shown = queries.map(_.executedPlan.toString).mkString("\n----\n")
+    assert(exchanges.size == 1, s"runFrom must run exactly one exchange:\n$shown")
+    exchanges.head match {
+      case s: ShuffleExchangeExec => s.outputPartitioning match {
+        case HashPartitioning(Seq(key: org.apache.spark.sql.catalyst.expressions.Attribute), _) =>
+          assert(key.name == "bucket", s"exchange must hash on bucket:\n$shown")
+        case other => fail(s"exchange must hash-partition on bucket, got $other:\n$shown")
+      }
+      case other => fail(s"the exchange must be a shuffle, got ${other.nodeName}:\n$shown")
+    }
+    assert(exchanges.forall(!_.output.exists(_.name == "html")), s"html crossed an exchange:\n$shown")
+    // the tally sits above the exchange, in the write's result stage,
+    // where a retried stage cannot count a partition twice
+    val tallies = all.collect { case c: CollectMetricsExec => c }
+    assert(tallies.size == 1 && nodes(tallies.head).exists(_.isInstanceOf[Exchange]),
+      s"lineage must be observed after the exchange:\n$shown")
+    assert(!all.exists(_.isInstanceOf[InMemoryTableScanExec]) &&
+      !queries.exists(_.withCachedData.exists(_.isInstanceOf[InMemoryRelation])),
+      s"runFrom must cache nothing:\n$shown")
   }
 
   test("d7 contamination probes broadcast (no shuffle of the corpus side for the join)") {
