@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
   *   - [[h32]]   <->  `CAST(('0x' || substring(md5(x),1,8)) AS BIGINT)`
   *   - [[dot]]   <->  `list_reduce(list_transform(...), (x,y) -> x+y)`
   *   - [[micro]] <->  `CAST(floor(x * 1000000.0) AS BIGINT)`
+  *   - [[urlHost]] <-> [[sqlUrlHost]], the same `regexp_extract`
   * (the word/shingle primitives live in the typed kernels —
   * Dedup.shingleRows — since the higher-order column forms are
   * CodegenFallback; only their DuckDB mirrors remain here.)
@@ -37,6 +38,17 @@ object ColFns {
     * session, which every library entry point registers).
     */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+
+  /** A url's host: after a lowercase `[a-z]+://` scheme, everything up to
+    * the first `/`, `:`, `?` or `#` (no port, no path; userinfo is kept).
+    * The one definition Prep and LinkGraph share. [[Prep.hostCap]]'s
+    * `^https?://([^/]+)` and [[graft.engine.Pipeline.hostOf]] answer
+    * differently on ports, uppercase schemes and userinfo; OpsSpec and
+    * PipelineSpec pin all three.
+    */
+  def urlHost(url: Column): Column = regexp_extract(url, UrlHost, 1)
+
+  private val UrlHost = "^[a-z]+://([^/:?#]+)"
 
   /** floor(x * 1e6) as BIGINT — the hash-stable way to emit a double:
     * floor is exact given identical IEEE inputs, unlike round (HALF_UP in
@@ -67,6 +79,9 @@ object ColFns {
 
   def sqlCosine(a: String, b: String, dim: Int): String =
     s"(${sqlDot(a, b, dim)} / (sqrt(${sqlDot(a, a, dim)}) * sqrt(${sqlDot(b, b, dim)})))"
+
+  /** DuckDB equivalent of [[urlHost]] on SQL fragment `url`. */
+  def sqlUrlHost(url: String): String = s"regexp_extract($url, '$UrlHost', 1)"
 
   def sqlMicro(x: String): String = s"CAST(floor(($x) * 1000000.0) AS BIGINT)"
 }

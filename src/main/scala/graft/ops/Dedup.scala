@@ -236,12 +236,52 @@ object Dedup {
       .distinct()
   }
 
-  /** Shared no-self-join band-pair kernel for 64-bit-signature joins
-    * ([[simhashPairs]] text, [[Media.aHashPairs]] images): capped buckets
-    * collect into bounded (doc_id, hi, lo) lists, pairs + hamming
-    * (Long.bitCount over both halves == bit_count(xor)) emit in a typed
-    * kernel. Guards duplicate doc_ids within a bucket (no self-pairs,
-    * matching the relational a.doc_id < b.doc_id the DuckDB mirrors use).
+  /** The blocking + block-purging half of the banded-64 near-dup chain
+    * shared by every 64-bit fingerprint family (text [[simhashPairs]],
+    * image [[Media.aHashPairs]], audio [[Media.audioPairs]], video
+    * [[Media.videoPairs]] and their components): a `(doc_id, hi, lo)`
+    * fingerprint frame (two unsigned-32 halves) explodes into its four
+    * 16-bit band keys `h0,h1,l0,l1`, then [[capBuckets]]. Pigeonhole: a
+    * pair within hamming distance 3 shares at least one exact band, so
+    * recall up to 3 is exact up to bucket-cap eviction. 16-bit bands give
+    * 65,536 keys per band (8-bit bands would make the join O(N²/1024) by
+    * construction) and the cap bounds whatever still collides — a
+    * corpus-scale run of flat images all hashing to 0 stays linear.
+    */
+  private[ops] def banded64(fp: DataFrame, cap: Int): DataFrame = {
+    val bandKeys = for ((p, half) <- Seq("h" -> "hi", "l" -> "lo"); b <- 0 until 2)
+      yield concat(lit(s"$p$b:"),
+        shiftright(col(half), 16 * b).bitwiseAND(lit(65535L)).cast("string"))
+    capBuckets(fp.select(col("doc_id"), col("hi"), col("lo"),
+      explode(array(bandKeys: _*)).as("bkey")), cap)
+  }
+
+  /** DuckDB mirror of [[banded64]] + [[bandedHammingPairsUnordered]]: the
+    * `bands`, `capped` and `pairs(id_a, id_b, hamming)` CTEs over the
+    * fingerprint CTE `fp`, whose 64-bit halves are the columns `hi`/`lo`.
+    * The cap's tie-break keys are (doc_id, hi, lo), the Spark frame's
+    * column order.
+    */
+  private[ops] def sqlBanded64Pairs(fp: String, hi: String, lo: String,
+                                    cap: Int, maxHamming: Int): String = {
+    val bands = for ((p, half) <- Seq("h" -> hi, "l" -> lo); b <- 0 until 2)
+      yield s"'$p$b:' || (($half >> ${16 * b}) & 65535)"
+    s"""bands AS (SELECT doc_id, $hi, $lo,
+       |    unnest([${bands.mkString(", ")}]) AS bkey FROM $fp),
+       |capped AS ${sqlCapBuckets("bands", s"doc_id, $hi, $lo", cap)},
+       |pairs AS (SELECT DISTINCT id_a, id_b, hamming FROM (
+       |    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |      CAST(bit_count(xor(a.$hi, b.$hi)) + bit_count(xor(a.$lo, b.$lo)) AS INT) AS hamming
+       |    FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id)
+       |  WHERE hamming <= $maxHamming)""".stripMargin
+  }
+
+  /** Shared no-self-join band-pair kernel for the [[banded64]] families:
+    * capped buckets collect into bounded (doc_id, hi, lo) lists, pairs +
+    * hamming (Long.bitCount summed over both halves, as in SQL) emit in a
+    * typed kernel. Guards duplicate doc_ids within a bucket (no
+    * self-pairs, matching the relational a.doc_id < b.doc_id of
+    * [[sqlBanded64Pairs]]).
     */
   private[ops] def bandedHammingPairs(banded: DataFrame, maxHamming: Int): DataFrame =
     bandedHammingPairsUnordered(banded, maxHamming).orderBy("id_a", "id_b")
@@ -429,7 +469,7 @@ object Dedup {
     * from h32('x|' w) — a literal 1<<63 overflows BIGINT in both engines,
     * so the signature never lives in one column), computed in ONE pass
     * over the exploded words: 64 codegen'd sign-sums with map-side partial
-    * aggregation.
+    * aggregation. Emits the [[banded64]] fingerprint frame (doc_id, hi, lo).
     */
   private[ops] def simhash64(docs: DataFrame): DataFrame = {
     val ex = docs
@@ -446,35 +486,20 @@ object Dedup {
     def sig(pfx: String) = (0 until 32)
       .map(b => when(col(s"$pfx$b") >= 0, lit(1L << b)).otherwise(lit(0L)))
       .reduce(_ + _)
-    grouped.select(col("doc_id"), sig("s").as("sim_lo"), sig("t").as("sim_hi"))
+    grouped.select(col("doc_id"), sig("t").as("hi"), sig("s").as("lo"))
   }
 
-  /** SimHash near-dup pairs, Manku-style: 64-bit signature banded into
-    * four 16-bit bands (pigeonhole: any pair within hamming distance 3
-    * shares at least one exact band — so recall is EXACT for the default
-    * maxHamming UP TO bucket-cap eviction: [[capBuckets]] runs before the
-    * join, and a pair whose members are evicted from every shared bucket
-    * is lost even at hamming <= 3 — see the capBuckets recall note; the
-    * per-bucket salt makes all-bucket eviction the unlikely case rather
-    * than the guaranteed one), capped band buckets, bucket-join,
-    * verify with the summed bit_count over both halves. A 32-bit hash
-    * with 8-bit bands would make the join O(N²/1024) BY CONSTRUCTION
-    * (only 1,024 possible band keys); 16-bit bands give 65,536 keys per
-    * band and the cap bounds whatever still collides.
+  /** SimHash near-dup pairs, Manku-style: the [[simhash64]] signature
+    * through the shared [[banded64]] chain (four 16-bit bands, capped band
+    * buckets, bucket-join, verify with the summed bit_count over both
+    * halves). Recall is exact for the default maxHamming up to bucket-cap
+    * eviction — see the [[capBuckets]] recall note; the per-bucket salt
+    * makes all-bucket eviction the unlikely case rather than the
+    * guaranteed one.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 2,
-                   bucketCap: Int = 20): DataFrame = {
-    val sig = simhash64(docs)
-    val bandKeys =
-      (0 until 2).map(b => concat(lit(s"l$b:"), shiftright(col("sim_lo"), 16 * b)
-        .bitwiseAND(lit(65535L)).cast("string"))) ++
-      (0 until 2).map(b => concat(lit(s"h$b:"), shiftright(col("sim_hi"), 16 * b)
-        .bitwiseAND(lit(65535L)).cast("string")))
-    val banded = capBuckets(
-      sig.select(col("doc_id"), col("sim_hi").as("hi"), col("sim_lo").as("lo"),
-        explode(array(bandKeys: _*)).as("bkey")), bucketCap)
-    bandedHammingPairs(banded, maxHamming)
-  }
+                   bucketCap: Int = 20): DataFrame =
+    bandedHammingPairs(banded64(simhash64(docs), bucketCap), maxHamming)
 
   def simhashPairsSql(table: String, maxHamming: Int = 2,
                       bucketCap: Int = 20): String = {
@@ -483,24 +508,13 @@ object Dedup {
       (0 until 32).map(b => s"sum(((g >> $b) & 1)*2 - 1) AS t$b")).mkString(", ")
     def sig(pfx: String) = (0 until 32)
       .map(b => s"(CASE WHEN $pfx$b >= 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")
-    val bands =
-      (0 until 2).map(b => s"'l$b:' || ((sim_lo >> ${16 * b}) & 65535)") ++
-      (0 until 2).map(b => s"'h$b:' || ((sim_hi >> ${16 * b}) & 65535)")
     s"""WITH w AS (SELECT doc_id, unnest(${sqlWords("text")}) AS word FROM $table),
        |h AS (SELECT doc_id, ${sqlH32("word")} AS h, ${sqlH32("'x|' || word")} AS g FROM w),
        |s AS (SELECT doc_id, $sums FROM h GROUP BY doc_id),
        |sig AS (SELECT doc_id, CAST(${sig("s")} AS BIGINT) AS sim_lo,
        |    CAST(${sig("t")} AS BIGINT) AS sim_hi FROM s),
-       |bands AS (SELECT doc_id, sim_lo, sim_hi,
-       |    unnest([${bands.mkString(", ")}]) AS bkey FROM sig),
-       |capped AS ${sqlCapBuckets("bands", "doc_id, sim_hi, sim_lo", bucketCap)}
-       |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.sim_lo, b.sim_lo))
-       |     + bit_count(xor(a.sim_hi, b.sim_hi)) AS INT) AS hamming
-       |FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.sim_lo, b.sim_lo))
-       |    + bit_count(xor(a.sim_hi, b.sim_hi)) <= $maxHamming
-       |ORDER BY id_a, id_b""".stripMargin
+       |${sqlBanded64Pairs("sig", "sim_hi", "sim_lo", bucketCap, maxHamming)}
+       |SELECT id_a, id_b, hamming FROM pairs ORDER BY id_a, id_b""".stripMargin
   }
 
   /** Connected components over the MinHash-LSH candidate-pair graph: the
@@ -563,12 +577,6 @@ object Dedup {
     val edges = undirected
       .union(undirected.select(col("src"), col("src").as("dst")))
       .persist()
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      System.err.println(f"[cc] $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      t0 = System.nanoTime()
-    }
     var prevSum: java.math.BigDecimal = null
     var labels: DataFrame = null
     var converged = false
@@ -621,14 +629,11 @@ object Dedup {
         if (iters % 3 == 0) merged.localCheckpoint()
         else merged.persist()
       val s = labelSum(next)
-      lap(s"round $iters")
       if (labels != null) labels.unpersist()
       labels = next
       converged = s == prevSum
       prevSum = s
     }
-    if (dbg)
-      System.err.println(s"[componentsFrom] converged in $iters rounds")
     edges.unpersist()
     // re-attach the untouched singleton mass: identity components
     val out = nodes.select(col("doc_id"))
@@ -636,6 +641,21 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("component"))
     out.orderBy("doc_id")
   }
+
+  /** The undirected-reachability CTEs of every components oracle: `edges`
+    * (both directions of the `pairs` CTE's (id_a, id_b)) and the recursive
+    * `reach(node, lbl)` seeded with every node's own id (column `id` of
+    * `nodes`). UNION dedups, so the recursion stops at the transitive
+    * closure; the caller's tail takes min(lbl) per node — the mirror of
+    * [[componentsFrom]]. Needs WITH RECURSIVE on the enclosing query.
+    */
+  private[ops] def sqlReachCtes(pairs: String, id: String, nodes: String): String =
+    s"""edges AS (SELECT id_a AS src, id_b AS dst FROM $pairs
+       |  UNION ALL SELECT id_b, id_a FROM $pairs),
+       |reach(node, lbl) AS (
+       |  SELECT $id, $id FROM $nodes
+       |  UNION
+       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)""".stripMargin
 
   def dedupComponentsSql(table: String, k: Int = 8, n: Int = 4,
                          bucketCap: Int = 10): String = {
@@ -656,12 +676,7 @@ object Dedup {
        |capped AS ${sqlCapBuckets("bands", "doc_id", bucketCap)},
        |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM $table
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
+       |${sqlReachCtes("pairs", "doc_id", table)}
        |SELECT node AS doc_id, min(lbl) AS component
        |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
   }

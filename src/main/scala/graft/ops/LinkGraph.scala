@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.Pipeline
 import graft.html.HtmlParser
-import graft.ops.ColFns.{h32, sqlH32}
+import graft.ops.ColFns.{h32, sqlH32, sqlUrlHost, urlHost}
 
 /** Host link-graph operators over the web-pages table: anchor-edge
   * extraction (x6), iterative host PageRank (g1) and the politeness-aware
@@ -194,7 +194,7 @@ object LinkGraph {
   def frontierSchedule(pages: DataFrame, iters: Int = 3): DataFrame = {
     val withHost = pages.select(
       col("url"),
-      regexp_extract(col("url"), "^[a-z]+://([^/:?#]+)", 1).as("host"))
+      urlHost(col("url")).as("host"))
     val slot = row_number().over(
       Window.partitionBy(col("host")).orderBy(h32(col("url")), col("url")))
     withHost
@@ -293,7 +293,7 @@ object LinkGraph {
     */
   private def sqlResolveHost(href: String, srcHost: String): String =
     s"""CASE WHEN $href LIKE 'http://%' OR $href LIKE 'https://%'
-       |         THEN NULLIF(regexp_extract($href, '^[a-z]+://([^/:?#]+)', 1), '')
+       |         THEN NULLIF(${sqlUrlHost(href)}, '')
        |         WHEN $href LIKE '//%'
        |         THEN NULLIF(regexp_extract($href, '^//([^/:?#]+)', 1), '')
        |         WHEN $href LIKE '/%' THEN $srcHost
@@ -307,7 +307,7 @@ object LinkGraph {
   private[ops] def linkEdgesCoreSql(pagesGlob: String): String =
     s"""p AS (SELECT url, decode(html) AS h
        |  FROM read_parquet('$pagesGlob', hive_partitioning=1)),
-       |anc AS (SELECT regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1) AS src_host,
+       |anc AS (SELECT ${sqlUrlHost("url")} AS src_host,
        |    unnest(regexp_extract_all(h, 'href="([^"]*)"', 1)) AS href FROM p),
        |res AS (SELECT src_host,
        |    ${sqlResolveHost("href", "src_host")} AS dst_host
@@ -332,7 +332,7 @@ object LinkGraph {
       "'&lt;','<'),'&gt;','>'),'&quot;','\"'),'&apos;',''''),'&amp;','&')"
     s"""WITH p AS (SELECT url, decode(html) AS h
        |  FROM read_parquet('$pagesGlob', hive_partitioning=1)),
-       |ex AS (SELECT regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1) AS src_host,
+       |ex AS (SELECT ${sqlUrlHost("url")} AS src_host,
        |    regexp_extract_all(h, '$pat', 1) AS hs,
        |    regexp_extract_all(h, '$pat', 2) AS ts FROM p),
        |zi AS (SELECT src_host, hs, ts, unnest(generate_series(1, len(hs))) AS i FROM ex),
@@ -389,7 +389,7 @@ object LinkGraph {
 
   def frontierScheduleSql(pagesGlob: String, iters: Int = 3): String =
     s"""WITH ${hostRankCoreSql(pagesGlob, iters)},
-       |pg AS (SELECT url, regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1) AS host
+       |pg AS (SELECT url, ${sqlUrlHost("url")} AS host
        |  FROM read_parquet('$pagesGlob', hive_partitioning=1)),
        |slotted AS (SELECT url, host,
        |    CAST(ROW_NUMBER() OVER (PARTITION BY host

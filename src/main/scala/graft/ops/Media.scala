@@ -238,8 +238,8 @@ object Media {
       * of the published audio-fingerprint scheme, not a global-mean test:
       * one changed sample touches ONE window and therefore at most TWO
       * comparisons, so a single-sample edit moves the fingerprint by
-      * hamming <= 2 and the 4-band pigeonhole join below has GUARANTEED
-      * recall for it. All-long integer arithmetic (energy sums bounded by
+      * hamming <= 2 and the 4-band pigeonhole join of [[audioPairs]] has
+      * GUARANTEED recall for it. All-long integer arithmetic (energy sums bounded by
       * 16384 * n — exact to ~10^14-sample streams). Returns (hi, lo)
       * unsigned-32 halves, the [[ahash]] convention.
       */
@@ -451,10 +451,9 @@ object Media {
   final case class AHashRow(doc_id: Long, width: Int, height: Int,
       ahash_hi: Long, ahash_lo: Long)
 
-  /** Image perceptual near-dup hash (aHash) through the typed kernel —
-    * image near-dup detection joins on these the same way simhashPairs
-    * bands text signatures. Map-only; the shuffle-free analogue of the
-    * text fingerprint ops.
+  /** Image perceptual hash (aHash) with the image's dimensions, through the
+    * typed kernel, sorted for presentation (m4). Map-only; the near-dup
+    * pairs band the same kernel's bits unsorted ([[fingerprint64]]).
     */
   def aHash(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
@@ -471,15 +470,14 @@ object Media {
     * same integer cross-multiplied mean test.
     */
   def aHashSql(parquetGlob: String): String =
-    s"""${aHashCte(parquetGlob)}
+    s"""WITH ${aHashCte(parquetGlob)}
        |SELECT * FROM ah ORDER BY doc_id""".stripMargin
 
-  /** The hash recomputation as a reusable CTE chain ending in `ah`.
-    * `recursive` prefixes WITH RECURSIVE for callers whose query tail
-    * recurses ([[imageComponentsSql]]).
+  /** The hash recomputation as a reusable CTE chain ending in
+    * `ah(doc_id, width, height, ahash_hi, ahash_lo)`; image nodes are `img`.
     */
-  private def aHashCte(parquetGlob: String, recursive: Boolean = false): String =
-    s"""WITH ${if (recursive) "RECURSIVE " else ""}img AS (SELECT doc_id, payload, meta.width AS w, meta.height AS h,
+  private def aHashCte(parquetGlob: String): String =
+    s"""img AS (SELECT doc_id, payload, meta.width AS w, meta.height AS h,
        |    ((3 * meta.width + 3) // 4) * 4 AS rowsize
        |  FROM read_parquet('$parquetGlob') WHERE kind = 'image'),
        |pxg AS (SELECT doc_id, w, h,
@@ -737,157 +735,163 @@ object Media {
        |SELECT doc_id, string_agg(CAST(v AS VARCHAR), ',' ORDER BY idx) AS gray
        |FROM cells GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  /** Image near-dup pairs over the perceptual hash: band the 64-bit ahash
-    * into four 16-bit bands (pigeonhole: any pair within hamming distance
-    * 3 shares at least one exact band; pairs at hamming 4 are found iff
-    * they share a band — mirrored recall, documented), capped band buckets
-    * ([[graft.ops.Dedup.capBuckets]]), bucket-join, verify with the summed
-    * bit_count over both halves — the visual analogue of the simhash text
-    * join (H3b). Eight 8-bit bands would give only 2,048 possible band
-    * keys — a join that is O(N²/bands) by construction, made worse by real
-    * image corpora concentrating on near-black/near-white hashes; 16-bit
-    * bands give 65,536 keys per band and the cap bounds the rest (a
-    * corpus-scale run of flat images all hashing to 0 stays linear).
+  // ----- near-dup pairs and clusters: image (m5/m7), audio (m10/m11) and
+  // ----- video (m12/m13) share Dedup's one banded-64 chain; each kind
+  // ----- supplies only its 64-bit fingerprint
+
+  final case class Fp64Row(doc_id: Long, hi: Long, lo: Long)
+
+  /** The `(doc_id, hi, lo)` fingerprint frame of one media kind through the
+    * typed kernel — image [[MediaKernel.ahash]], audio
+    * [[MediaKernel.audioFp]], video [[MediaKernel.videoFp]] — map-only at
+    * input parallelism and unsorted (a sort here would cost a range
+    * exchange ahead of the banding, whose window exchange discards it).
     */
-  def aHashPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
-                 bucketCap: Int = 40): DataFrame =
-    // default maxHamming=3 == the 4-band pigeonhole bound, so default
-    // recall is EXACT up to bucket-cap eviction (capBuckets runs before
-    // the join: a pair evicted from every shared bucket is lost even at
-    // hamming <= 3 — see the Dedup.capBuckets recall note; a hamming-4
-    // pair is found only if it shares a band — callers raising maxHamming
-    // accept that mirrored recall trade).
-    // Shared no-self-join pair kernel (the Dedup.simhashPairs construction)
-    Dedup.bandedHammingPairs(aHashBanded(media, bucketCap), maxHamming)
-
-  /** The capped banded-signature frame both [[aHashPairs]] and
-    * [[imageComponents]] join on — ONE definition of the band keys.
-    */
-  private def aHashBanded(media: Dataset[MediaRow], bucketCap: Int): DataFrame = {
-    val h = aHash(media)
-    val bandKeys =
-      (0 until 2).map(b => concat(lit(s"h$b:"),
-        shiftright(col("ahash_hi"), 16 * b).bitwiseAND(lit(65535L)).cast("string"))) ++
-      (0 until 2).map(b => concat(lit(s"l$b:"),
-        shiftright(col("ahash_lo"), 16 * b).bitwiseAND(lit(65535L)).cast("string")))
-    Dedup.capBuckets(
-      h.select(col("doc_id"), col("ahash_hi").as("hi"), col("ahash_lo").as("lo"),
-        explode(array(bandKeys: _*)).as("bkey")), bucketCap)
-  }
-
-  /** The band-key expressions over `ah`, as SQL (shared by the m5 pair
-    * mirror and the m7 components mirror — one definition, no drift).
-    */
-  private def aHashBandsSql: String =
-    ((0 until 2).map(b => s"'h$b:' || ((ahash_hi >> ${16 * b}) & 65535)") ++
-      (0 until 2).map(b => s"'l$b:' || ((ahash_lo >> ${16 * b}) & 65535)"))
-      .mkString(", ")
-
-  def aHashPairsSql(parquetGlob: String, maxHamming: Int = 3,
-                    bucketCap: Int = 40): String =
-    s"""${aHashCte(parquetGlob)},
-       |bands AS (SELECT doc_id, ahash_hi, ahash_lo,
-       |    unnest([$aHashBandsSql]) AS bkey FROM ah),
-       |capped AS ${graft.ops.Dedup.sqlCapBuckets("bands", "doc_id, ahash_hi, ahash_lo", bucketCap)}
-       |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.ahash_hi, b.ahash_hi))
-       |     + bit_count(xor(a.ahash_lo, b.ahash_lo)) AS INT) AS hamming
-       |FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.ahash_hi, b.ahash_hi))
-       |    + bit_count(xor(a.ahash_lo, b.ahash_lo)) <= $maxHamming
-       |ORDER BY id_a, id_b""".stripMargin
-
-  final case class AudioFpRow(doc_id: Long, fp_hi: Long, fp_lo: Long)
-
-  /** Audio near-dup pairs: the [[MediaKernel.audioFp]] fingerprint (64
-    * neighbor-window energy-difference bits, map-only at input
-    * parallelism) through the SAME 4x16-bit banding, capped buckets and
-    * no-self-join pair kernel as the image (m5) and text-simhash (d5)
-    * families — near-dup detection now spans all of text, embeddings,
-    * images and audio on one shared join discipline. Recall: a
-    * single-sample edit flips at most 2 fingerprint bits (see the kernel
-    * note), within the 4-band pigeonhole bound of 3, so planted
-    * one-nudge duplicates are found EXACTLY (up to bucket-cap eviction —
-    * the [[graft.ops.Dedup.capBuckets]] recall note).
-    */
-  def audioPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
-                 bucketCap: Int = 40): DataFrame =
-    Dedup.bandedHammingPairs(audioBanded(media, bucketCap), maxHamming)
-
-  /** Video near-dup pairs (m12) — the third modality on the SAME banded
-    * join discipline: the fingerprint is the 8x8 block aHash of the
-    * TEMPORAL-SUM frame (per-pixel sums over all frames; skipping the
-    * per-frame mean keeps the block test `bs*px > total*bc` exact — the
-    * mean would divide every term by nf uniformly, so the sums give the
-    * identical bit pattern with no flooring), then the m5/m10 4x16-bit
-    * bands, capped buckets, no-self-join pair kernel.
-    */
-  def videoPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
-                 bucketCap: Int = 40): DataFrame =
-    Dedup.bandedHammingPairs(videoBanded(media, bucketCap), maxHamming)
-
-  private def videoBanded(media: Dataset[MediaRow], bucketCap: Int): DataFrame = {
+  private def fingerprint64(media: Dataset[MediaRow], kind: String): DataFrame = {
     import media.sparkSession.implicits._
-    val h = media.filter(_.kind == "video").mapPartitions(_.map { r =>
-      val (hi, lo) = MediaKernel.videoFp(r.media)
-      AudioFpRow(r.doc_id, hi, lo)
+    val fp: Array[Byte] => (Long, Long) = kind match {
+      case "image" => b => { val (_, _, hi, lo) = MediaKernel.ahash(b); (hi, lo) }
+      case "audio" => MediaKernel.audioFp
+      case "video" => MediaKernel.videoFp
+    }
+    media.filter(_.kind == kind).mapPartitions(_.map { r =>
+      val (hi, lo) = fp(r.media)
+      Fp64Row(r.doc_id, hi, lo)
     }).toDF()
-    val bandKeys =
-      (0 until 2).map(b => concat(lit(s"h$b:"),
-        shiftright(col("fp_hi"), 16 * b).bitwiseAND(lit(65535L)).cast("string"))) ++
-      (0 until 2).map(b => concat(lit(s"l$b:"),
-        shiftright(col("fp_lo"), 16 * b).bitwiseAND(lit(65535L)).cast("string")))
-    Dedup.capBuckets(
-      h.select(col("doc_id"), col("fp_hi").as("hi"), col("fp_lo").as("lo"),
-        explode(array(bandKeys: _*)).as("bkey")), bucketCap)
   }
 
-  /** Video near-dup CLUSTERS — closing the pairs→clusters symmetry for
+  /** Near-dup CLUSTERS of one media kind — the pairs→clusters step for
     * every modality (text d6, embeddings s6, images m7, audio m11, video
-    * m13) on the one shared [[Dedup.componentsFrom]] propagation core;
-    * nodes are all video rows so no-dup clips stay singletons.
+    * m13) on the one [[Dedup.componentsFrom]] propagation core. Nodes are
+    * all rows of the kind (a narrow kind-pruned doc_id scan), so items
+    * with no near-dup stay singletons; the pair leg is the UNORDERED
+    * kernel, so no operator-embedded sort enters the fixpoint loop.
     */
-  def videoComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
-                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame = {
-    val nodes = media.toDF().filter(col("kind") === "video").select(col("doc_id"))
-    val pairs = Dedup
-      .bandedHammingPairsUnordered(videoBanded(media, bucketCap), maxHamming)
+  private def components(media: Dataset[MediaRow], kind: String, maxHamming: Int,
+                         bucketCap: Int, maxIters: Int): DataFrame = {
+    val nodes = media.toDF().filter(col("kind") === kind).select(col("doc_id"))
+    val pairs = Dedup.bandedHammingPairsUnordered(
+      Dedup.banded64(fingerprint64(media, kind), bucketCap), maxHamming)
       .select(col("id_a"), col("id_b"))
     Dedup.componentsFrom(nodes, pairs, maxIters)
   }
 
-  /** DuckDB mirror of [[videoComponents]]: the m12 fingerprint chain, the
-    * same pair predicate, then recursive-CTE reachability with min-label
-    * per node (the d6/s6/m7/m11 oracle idiom).
+  /** DuckDB mirror of a pairs query: fingerprint CTEs ending in `ah`, whose
+    * halves are the columns `hi`/`lo`, then the shared
+    * [[Dedup.sqlBanded64Pairs]] chain.
     */
-  def videoComponentsSql(parquetGlob: String, maxHamming: Int = 3,
-                         bucketCap: Int = 40): String = {
-    val pairsSql = videoPairsSql(parquetGlob, maxHamming, bucketCap)
-    // reuse the full pairs query as a nested subquery (WITH-in-subquery),
-    // keeping ONE definition of the fingerprint + band chain
-    s"""WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM (
-       |$pairsSql
-       |)),
-       |vnodes AS (SELECT doc_id FROM read_parquet('$parquetGlob')
-       |  WHERE kind = 'video'),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM vnodes
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
+  private def pairsSql(fpCtes: String, hi: String, lo: String,
+                       maxHamming: Int, bucketCap: Int): String =
+    s"""WITH $fpCtes,
+       |${Dedup.sqlBanded64Pairs("ah", hi, lo, bucketCap, maxHamming)}
+       |SELECT id_a, id_b, hamming FROM pairs ORDER BY id_a, id_b""".stripMargin
+
+  /** DuckDB mirror of [[components]]: the same fingerprint and pair CTEs,
+    * then recursive-CTE reachability from every node in `nodes`, min-label
+    * per node.
+    */
+  private def componentsSql(fpCtes: String, hi: String, lo: String, nodes: String,
+                            maxHamming: Int, bucketCap: Int): String =
+    s"""WITH RECURSIVE $fpCtes,
+       |${Dedup.sqlBanded64Pairs("ah", hi, lo, bucketCap, maxHamming)},
+       |${Dedup.sqlReachCtes("pairs", "doc_id", nodes)}
        |SELECT node AS doc_id, min(lbl) AS component
        |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
-  }
 
-  /** DuckDB mirror of [[videoPairs]]: the fingerprint recomputed from the
-    * write-side frame truth (per-pixel temporal sums, the engine's block
-    * geometry, the same cross-multiplied mean test), then the shared
-    * band / cap / join / bit_count chain.
+  /** Image near-dup pairs over the perceptual hash, the visual analogue of
+    * the simhash text join. Default maxHamming=3 is the 4-band pigeonhole
+    * bound, so default recall is EXACT up to bucket-cap eviction (the
+    * [[Dedup.capBuckets]] recall note); a hamming-4 pair is found only if
+    * it shares a band — callers raising maxHamming accept that mirrored
+    * recall trade. Real image corpora concentrate on near-black/near-white
+    * hashes; the cap keeps those buckets linear.
     */
-  def videoPairsSql(parquetGlob: String, maxHamming: Int = 3,
+  def aHashPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
+                 bucketCap: Int = 40): DataFrame =
+    Dedup.bandedHammingPairs(Dedup.banded64(fingerprint64(media, "image"), bucketCap),
+      maxHamming)
+
+  /** DuckDB mirror of [[aHashPairs]] over [[aHashCte]]. */
+  def aHashPairsSql(parquetGlob: String, maxHamming: Int = 3,
                     bucketCap: Int = 40): String =
-    s"""WITH v AS (SELECT doc_id, payload, meta.width AS fw, meta.height AS fh,
+    pairsSql(aHashCte(parquetGlob), "ahash_hi", "ahash_lo", maxHamming, bucketCap)
+
+  /** Image near-dup clusters over the [[aHashPairs]] graph. */
+  def imageComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
+                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame =
+    components(media, "image", maxHamming, bucketCap, maxIters)
+
+  def imageComponentsSql(parquetGlob: String, maxHamming: Int = 3,
+                         bucketCap: Int = 40): String =
+    componentsSql(aHashCte(parquetGlob), "ahash_hi", "ahash_lo", "img",
+      maxHamming, bucketCap)
+
+  /** Audio near-dup pairs over the [[MediaKernel.audioFp]] fingerprint (64
+    * neighbor-window energy-difference bits). A single-sample edit flips at
+    * most 2 bits (see the kernel note), within the pigeonhole bound of 3,
+    * so planted one-nudge duplicates are found EXACTLY up to bucket-cap
+    * eviction.
+    */
+  def audioPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
+                 bucketCap: Int = 40): DataFrame =
+    Dedup.bandedHammingPairs(Dedup.banded64(fingerprint64(media, "audio"), bucketCap),
+      maxHamming)
+
+  /** The audio fingerprint recomputed from write-side sample truth (window
+    * energies via list slices over the payload string), as CTEs ending in
+    * `ah(doc_id, fp_hi, fp_lo)`; audio nodes are `au`.
+    */
+  private def audioFpCte(parquetGlob: String): String =
+    s"""au AS (SELECT doc_id, payload, length(payload) AS n
+       |  FROM read_parquet('$parquetGlob') WHERE kind = 'audio'),
+       |ew AS (SELECT doc_id, n,
+       |    list_transform(generate_series(0, 63), w ->
+       |      COALESCE(list_sum(list_transform(
+       |        generate_series((w * n) // 64 + 1, ((w + 1) * n) // 64),
+       |        j -> (ord(substring(payload, j, 1)) - 128)
+       |           * (ord(substring(payload, j, 1)) - 128))), 0)) AS es
+       |  FROM au),
+       |bits AS (SELECT doc_id, w,
+       |    CASE WHEN es[w + 1] > es[((w + 1) % 64) + 1] THEN 1 ELSE 0 END AS bit
+       |  FROM (SELECT doc_id, es, unnest(range(64)) AS w FROM ew)),
+       |ah AS (SELECT doc_id,
+       |  CAST(COALESCE(sum(CASE WHEN bit = 1 AND w >= 32
+       |    THEN 1::BIGINT << (w - 32) END), 0) AS BIGINT) AS fp_hi,
+       |  CAST(COALESCE(sum(CASE WHEN bit = 1 AND w < 32
+       |    THEN 1::BIGINT << w END), 0) AS BIGINT) AS fp_lo
+       |  FROM bits GROUP BY doc_id)""".stripMargin
+
+  def audioPairsSql(parquetGlob: String, maxHamming: Int = 3,
+                    bucketCap: Int = 40): String =
+    pairsSql(audioFpCte(parquetGlob), "fp_hi", "fp_lo", maxHamming, bucketCap)
+
+  /** Audio near-dup clusters over the [[audioPairs]] graph. */
+  def audioComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
+                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame =
+    components(media, "audio", maxHamming, bucketCap, maxIters)
+
+  def audioComponentsSql(parquetGlob: String, maxHamming: Int = 3,
+                         bucketCap: Int = 40): String =
+    componentsSql(audioFpCte(parquetGlob), "fp_hi", "fp_lo", "au", maxHamming, bucketCap)
+
+  /** Video near-dup pairs over the [[MediaKernel.videoFp]] fingerprint: the
+    * 8x8 block aHash of the TEMPORAL-SUM frame (per-pixel sums over all
+    * frames; skipping the per-frame mean keeps the block test
+    * `bs*px > total*bc` exact — the mean would divide every term by nf
+    * uniformly, so the sums give the identical bit pattern).
+    */
+  def videoPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
+                 bucketCap: Int = 40): DataFrame =
+    Dedup.bandedHammingPairs(Dedup.banded64(fingerprint64(media, "video"), bucketCap),
+      maxHamming)
+
+  /** The video fingerprint recomputed from the write-side frame truth
+    * (per-pixel temporal sums, the engine's block geometry, the same
+    * cross-multiplied mean test), as CTEs ending in `ah(doc_id, fp_hi,
+    * fp_lo)`; video nodes are `v`.
+    */
+  private def videoFpCte(parquetGlob: String): String =
+    s"""v AS (SELECT doc_id, payload, meta.width AS fw, meta.height AS fh,
        |    meta.width * meta.height AS px,
        |    length(payload) // (meta.width * meta.height) AS nf
        |  FROM read_parquet('$parquetGlob') WHERE kind = 'video'),
@@ -917,160 +921,18 @@ object Media {
        |    THEN 1::BIGINT << (k - 32) END), 0) AS BIGINT) AS fp_hi,
        |  CAST(COALESCE(sum(CASE WHEN bit = 1 AND k < 32
        |    THEN 1::BIGINT << k END), 0) AS BIGINT) AS fp_lo
-       |  FROM kb GROUP BY doc_id),
-       |bands AS (SELECT doc_id, fp_hi, fp_lo,
-       |    unnest([$audioBandsSql]) AS bkey FROM ah),
-       |capped AS ${Dedup.sqlCapBuckets("bands", "doc_id, fp_hi, fp_lo", bucketCap)}
-       |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.fp_hi, b.fp_hi))
-       |     + bit_count(xor(a.fp_lo, b.fp_lo)) AS INT) AS hamming
-       |FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.fp_hi, b.fp_hi))
-       |    + bit_count(xor(a.fp_lo, b.fp_lo)) <= $maxHamming
-       |ORDER BY id_a, id_b""".stripMargin
+       |  FROM kb GROUP BY doc_id)""".stripMargin
 
-  private def audioFingerprint(media: Dataset[MediaRow]): DataFrame = {
-    import media.sparkSession.implicits._
-    media.filter(_.kind == "audio").mapPartitions(_.map { r =>
-      val (hi, lo) = MediaKernel.audioFp(r.media)
-      AudioFpRow(r.doc_id, hi, lo)
-    }).toDF()
-  }
-
-  private def audioBanded(media: Dataset[MediaRow], bucketCap: Int): DataFrame = {
-    val h = audioFingerprint(media)
-    val bandKeys =
-      (0 until 2).map(b => concat(lit(s"h$b:"),
-        shiftright(col("fp_hi"), 16 * b).bitwiseAND(lit(65535L)).cast("string"))) ++
-      (0 until 2).map(b => concat(lit(s"l$b:"),
-        shiftright(col("fp_lo"), 16 * b).bitwiseAND(lit(65535L)).cast("string")))
-    Dedup.capBuckets(
-      h.select(col("doc_id"), col("fp_hi").as("hi"), col("fp_lo").as("lo"),
-        explode(array(bandKeys: _*)).as("bkey")), bucketCap)
-  }
-
-  private def audioBandsSql: String =
-    ((0 until 2).map(b => s"'h$b:' || ((fp_hi >> ${16 * b}) & 65535)") ++
-      (0 until 2).map(b => s"'l$b:' || ((fp_lo >> ${16 * b}) & 65535)"))
-      .mkString(", ")
-
-  /** Shared fingerprint + band + cap CTE chain (through `capped`) for the
-    * audio pair/components oracles — recomputes the fingerprint from
-    * write-side sample truth (window energies via list slices over the
-    * payload string).
-    */
-  private def audioCappedCte(parquetGlob: String, bucketCap: Int): String =
-    s"""au AS (SELECT doc_id, payload, length(payload) AS n
-       |  FROM read_parquet('$parquetGlob') WHERE kind = 'audio'),
-       |ew AS (SELECT doc_id, n,
-       |    list_transform(generate_series(0, 63), w ->
-       |      COALESCE(list_sum(list_transform(
-       |        generate_series((w * n) // 64 + 1, ((w + 1) * n) // 64),
-       |        j -> (ord(substring(payload, j, 1)) - 128)
-       |           * (ord(substring(payload, j, 1)) - 128))), 0)) AS es
-       |  FROM au),
-       |bits AS (SELECT doc_id, w,
-       |    CASE WHEN es[w + 1] > es[((w + 1) % 64) + 1] THEN 1 ELSE 0 END AS bit
-       |  FROM (SELECT doc_id, es, unnest(range(64)) AS w FROM ew)),
-       |ah AS (SELECT doc_id,
-       |  CAST(COALESCE(sum(CASE WHEN bit = 1 AND w >= 32
-       |    THEN 1::BIGINT << (w - 32) END), 0) AS BIGINT) AS fp_hi,
-       |  CAST(COALESCE(sum(CASE WHEN bit = 1 AND w < 32
-       |    THEN 1::BIGINT << w END), 0) AS BIGINT) AS fp_lo
-       |  FROM bits GROUP BY doc_id),
-       |bands AS (SELECT doc_id, fp_hi, fp_lo,
-       |    unnest([$audioBandsSql]) AS bkey FROM ah),
-       |capped AS ${Dedup.sqlCapBuckets("bands", "doc_id, fp_hi, fp_lo", bucketCap)}""".stripMargin
-
-  /** DuckDB mirror of [[audioPairs]]: the shared fingerprint chain, then
-    * the same band / cap / join / bit_count predicate as [[aHashPairsSql]].
-    */
-  def audioPairsSql(parquetGlob: String, maxHamming: Int = 3,
+  def videoPairsSql(parquetGlob: String, maxHamming: Int = 3,
                     bucketCap: Int = 40): String =
-    s"""WITH ${audioCappedCte(parquetGlob, bucketCap)}
-       |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.fp_hi, b.fp_hi))
-       |     + bit_count(xor(a.fp_lo, b.fp_lo)) AS INT) AS hamming
-       |FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.fp_hi, b.fp_hi))
-       |    + bit_count(xor(a.fp_lo, b.fp_lo)) <= $maxHamming
-       |ORDER BY id_a, id_b""".stripMargin
+    pairsSql(videoFpCte(parquetGlob), "fp_hi", "fp_lo", maxHamming, bucketCap)
 
-  /** Audio near-dup CLUSTERS — the fourth modality of the pairs→clusters
-    * family (text d6, embeddings s6, images m7): connected components over
-    * the [[audioPairs]] graph through the SHARED
-    * [[Dedup.componentsFrom]] min-label propagation core. Nodes are all
-    * audio rows, so clips with no near-dup stay singleton components; the
-    * pair leg is the UNORDERED kernel (no operator-embedded sort enters
-    * the fixpoint loop).
-    */
-  def audioComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
-                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame = {
-    val nodes = media.toDF().filter(col("kind") === "audio").select(col("doc_id"))
-    val pairs = Dedup
-      .bandedHammingPairsUnordered(audioBanded(media, bucketCap), maxHamming)
-      .select(col("id_a"), col("id_b"))
-    Dedup.componentsFrom(nodes, pairs, maxIters)
-  }
+  /** Video near-dup clusters over the [[videoPairs]] graph. */
+  def videoComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
+                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame =
+    components(media, "video", maxHamming, bucketCap, maxIters)
 
-  /** DuckDB mirror of [[audioComponents]]: the shared fingerprint chain,
-    * the m10 pair predicate, then recursive-CTE reachability with
-    * min-label per node (the d6/s6/m7 oracle idiom).
-    */
-  def audioComponentsSql(parquetGlob: String, maxHamming: Int = 3,
+  def videoComponentsSql(parquetGlob: String, maxHamming: Int = 3,
                          bucketCap: Int = 40): String =
-    s"""WITH RECURSIVE ${audioCappedCte(parquetGlob, bucketCap)},
-       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.fp_hi, b.fp_hi))
-       |      + bit_count(xor(a.fp_lo, b.fp_lo)) <= $maxHamming),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM au
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
-       |SELECT node AS doc_id, min(lbl) AS component
-       |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
-
-  /** Image near-dup CLUSTERS: connected components over the [[aHashPairs]]
-    * graph — the visual member of the pairs→clusters family (text d6,
-    * embeddings s6), sharing [[Dedup.componentsFrom]]'s min-label
-    * propagation core (bounded-lineage fixpoint, O(1) decimal convergence
-    * test). Nodes are ALL image rows (a narrow kind-pruned doc_id scan), so
-    * images with no near-dup stay singleton components. The pair leg uses
-    * the UNORDERED kernel — no operator-embedded global sort enters the
-    * fixpoint loop's plan.
-    */
-  def imageComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
-                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame = {
-    val nodes = media.toDF().filter(col("kind") === "image").select(col("doc_id"))
-    val pairs = Dedup
-      .bandedHammingPairsUnordered(aHashBanded(media, bucketCap), maxHamming)
-      .select(col("id_a"), col("id_b"))
-    Dedup.componentsFrom(nodes, pairs, maxIters)
-  }
-
-  /** DuckDB mirror of [[imageComponents]]: the shared hash + band CTEs,
-    * the m5 pair predicate, then recursive-CTE reachability (the d6/s6
-    * oracle idiom) with min-label per node.
-    */
-  def imageComponentsSql(parquetGlob: String, maxHamming: Int = 3,
-                         bucketCap: Int = 40): String =
-    s"""${aHashCte(parquetGlob, recursive = true)},
-       |bands AS (SELECT doc_id, ahash_hi, ahash_lo,
-       |    unnest([$aHashBandsSql]) AS bkey FROM ah),
-       |capped AS ${graft.ops.Dedup.sqlCapBuckets("bands", "doc_id, ahash_hi, ahash_lo", bucketCap)},
-       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.ahash_hi, b.ahash_hi))
-       |      + bit_count(xor(a.ahash_lo, b.ahash_lo)) <= $maxHamming),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM img
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
-       |SELECT node AS doc_id, min(lbl) AS component
-       |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
+    componentsSql(videoFpCte(parquetGlob), "fp_hi", "fp_lo", "v", maxHamming, bucketCap)
 }

@@ -516,7 +516,7 @@ object Prep {
     * the join form dropped them.
     */
   private[ops] def robotsWinnerKey(url: Column): Column = {
-    val host = regexp_extract(url, "^[a-z]+://([^/:?#]+)", 1)
+    val host = urlHost(url)
     val path = regexp_extract(url, "^[a-z]+://[^/]+(/.*)$", 1)
     def gate(salt: String, m: Int) = h32(concat(host, lit(salt))) % m === 0
     // key layout: 4-digit length ':' allow ':' rule_path — CONSTANT per
@@ -534,7 +534,7 @@ object Prep {
   def robotsRules(pages: DataFrame): DataFrame =
     pages
       .select(col("url"),
-        regexp_extract(col("url"), "^[a-z]+://([^/:?#]+)", 1).as("host"),
+        urlHost(col("url")).as("host"),
         robotsWinnerKey(col("url")).as("k"))
       .filter(col("k").isNotNull)
       .select(col("url"), col("host"),
@@ -546,7 +546,7 @@ object Prep {
   def robotsRulesSql(pagesGlob: String): String = {
     def gate(salt: String, m: Int) = s"${sqlH32(s"host || '$salt'")} % $m = 0"
     s"""WITH pg AS (SELECT url,
-       |    regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1) AS host,
+       |    ${sqlUrlHost("url")} AS host,
        |    regexp_extract(url, '^[a-z]+://[^/]+(/.*)$$', 1) AS path
        |  FROM read_parquet('$pagesGlob', hive_partitioning=1)),
        |hosts AS (SELECT DISTINCT host FROM pg),
@@ -589,7 +589,7 @@ object Prep {
     import org.apache.spark.sql.expressions.Window
     require(budget > 0, "positive budget")
     val hw = pages
-      .select(regexp_extract(col("url"), "^[a-z]+://([^/:?#]+)", 1).as("host"))
+      .select(urlHost(col("url")).as("host"))
       .groupBy(col("host")).agg(count(lit(1)).as("w"))
     val tot = hw.agg(sum(col("w")).as("tw"))
     val based = hw.crossJoin(broadcast(tot))
@@ -618,7 +618,7 @@ object Prep {
     * bucketed construction provably equals.
     */
   def budgetApportionSql(pagesGlob: String, budget: Long = 1000L): String =
-    s"""WITH hw AS (SELECT regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1) AS host,
+    s"""WITH hw AS (SELECT ${sqlUrlHost("url")} AS host,
        |    CAST(count(*) AS BIGINT) AS w
        |  FROM read_parquet('$pagesGlob', hive_partitioning=1) GROUP BY host),
        |t AS (SELECT CAST(sum(w) AS BIGINT) AS tw FROM hw),
@@ -648,7 +648,7 @@ object Prep {
     */
   def crawlDiff(pages: DataFrame): DataFrame = {
     val base = pages.select(col("url"),
-      regexp_extract(col("url"), "^[a-z]+://([^/:?#]+)", 1).as("host"),
+      urlHost(col("url")).as("host"),
       md5(col("html")).as("ch"))
     val snap2 = base
       .filter(h32(concat(col("url"), lit(":del"))) % 7 =!= 0)
@@ -677,7 +677,7 @@ object Prep {
   /** DuckDB mirror of [[crawlDiff]] — same constructed second snapshot. */
   def crawlDiffSql(pagesGlob: String): String =
     s"""WITH base AS (SELECT url,
-       |    regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1) AS host,
+       |    ${sqlUrlHost("url")} AS host,
        |    md5(decode(html)) AS ch
        |  FROM read_parquet('$pagesGlob', hive_partitioning=1)),
        |snap2 AS (
@@ -987,12 +987,7 @@ object Prep {
        |    FROM bands) WHERE rn <= $bucketCap),
        |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM cappedb a JOIN cappedb b ON a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM exsurv
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
+       |${Dedup.sqlReachCtes("pairs", "doc_id", "exsurv")},
        |comp AS (SELECT node AS doc_id, min(lbl) AS component
        |  FROM reach GROUP BY node),
        |canon AS (SELECT e.* FROM exsurv e

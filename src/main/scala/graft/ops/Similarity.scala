@@ -147,12 +147,7 @@ object Similarity {
        |  FROM k a JOIN k b
        |    ON a.jk = b.jk AND a.vec_id < b.vec_id),
        |pair AS (SELECT id_a, id_b FROM p WHERE cos >= $thresh),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pair
-       |  UNION ALL SELECT id_b, id_a FROM pair),
-       |reach(node, lbl) AS (
-       |  SELECT vec_id, vec_id FROM $table
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
+       |${Dedup.sqlReachCtes("pair", "vec_id", table)}
        |SELECT node AS vec_id, min(lbl) AS component
        |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin
   }
@@ -1029,12 +1024,7 @@ object Similarity {
        |  FROM kk a JOIN kk b
        |    ON a.jk = b.jk AND a.vec_id < b.vec_id),
        |pair AS (SELECT id_a, id_b FROM p WHERE cos >= $thresh),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pair
-       |  UNION ALL SELECT id_b, id_a FROM pair),
-       |reach(node, lbl) AS (
-       |  SELECT vec_id, vec_id FROM $table
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
+       |${Dedup.sqlReachCtes("pair", "vec_id", table)},
        |comp AS (SELECT node AS vec_id, min(lbl) AS component
        |  FROM reach GROUP BY node),
        |tg AS (SELECT c.vec_id, a.cid, c.component,

@@ -45,6 +45,5 @@ class OracleSqlSpec extends AnyFunSuite {
         s"added: ${added.mkString(", ")}; removed: ${removed.mkString(", ")}. " +
         s"If on purpose, copy $out to src/test/resources/ and declare the change.")
     }
-    assert(actual.size == 113, s"expected 113 oracle queries, got ${actual.size}")
   }
 }

@@ -1,7 +1,9 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkEntry
 import graft.app.Corpus
@@ -33,6 +35,38 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, sfDir).queryExecution
       .explainString(ExplainMode.fromString("formatted"))
   }
+
+  /** `run`'s result and every query execution it triggers, as a
+    * QueryExecutionListener sees them (actions, checkpoints and writes).
+    */
+  private def executedBy[T](run: => T): (T, Seq[QueryExecution]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    def isMarker(qe: QueryExecution) = qe.analyzed.output.map(_.name) == Seq("plan_spec_marker")
+    try {
+      val result = run
+      // listener events arrive in order: once this marker query's is in,
+      // every query `run` ran has been seen
+      spark.range(1).toDF("plan_spec_marker").collect()
+      val deadline = System.nanoTime() + 60000000000L
+      def seenNow = seen.toArray(Array.empty[QueryExecution]).toSeq
+      while (!seenNow.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(seenNow.exists(isMarker), "listener events did not arrive")
+      (result, seenNow.filterNot(isMarker))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** A plan's nodes, through adaptive plans and query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => (other.children ++ other.innerChildren.collect { case c: SparkPlan => c })
+      .flatMap(nodes)
+  })
 
   test("q1: filter pushed to the parquet scan, columns pruned") {
     val p = plan("q1_agg")
@@ -91,9 +125,9 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("d2/d5/m5/m10 band joins: buckets capped via the staged group-limit (never uncapped self-join)") {
+  test("d2/d5/m5/m10/m12 band joins: buckets capped via the staged group-limit (never uncapped self-join)") {
     Seq("d2_minhash_lsh", "d5_simhash_pairs", "m5_ahash_pairs",
-        "m10_audio_pairs").foreach { q =>
+        "m10_audio_pairs", "m12_video_pairs").foreach { q =>
       val p = plan(q)
       // the capped band frame feeds BOTH legs of the self-join, so the
       // two-stage cap shows up once (reused exchange) or twice (2 or 4
@@ -106,6 +140,29 @@ class PlanSpec extends AnyFunSuite {
       assert(p.contains("pmod"), s"$q stage-1 must sub-bucket by pmod:\n$p")
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
         s"$q band join must stay an equi-join:\n$p")
+    }
+  }
+
+  test("banded-64 family: no range exchange below the band Generate (fingerprints stay unsorted)") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    Corpus.ensure(spark, sfDir)
+    Seq("d5_simhash_pairs", "m5_ahash_pairs", "m7_image_components", "m10_audio_pairs",
+        "m11_audio_components", "m12_video_pairs", "m13_video_components").foreach { q =>
+      // the components queries run their pair pipeline while the frame is
+      // built (componentsFrom checkpoints it), so the listener catches it
+      val (df, ran) = executedBy(SparkEntry.queries(q)(spark, sfDir))
+      val plans = (ran :+ df.queryExecution).map(_.executedPlan)
+      val bandGens = plans.flatMap(nodes).collect {
+        case g: GenerateExec if g.generator.toString.contains("h0:") => g
+      }
+      assert(bandGens.nonEmpty, s"$q: no band Generate in:\n${plans.mkString("\n----\n")}")
+      val ranged = bandGens.flatMap(g => g.children.flatMap(nodes)).collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(ranged.isEmpty,
+        s"$q: the fingerprint frame is range-sorted before banding:\n${bandGens.head.treeString}")
     }
   }
 
@@ -233,39 +290,14 @@ class PlanSpec extends AnyFunSuite {
 
   test("runFrom: one hash exchange on bucket, html never shuffled, nothing cached") {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.CollectMetricsExec
     import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
     import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
-    import org.apache.spark.sql.util.QueryExecutionListener
     Corpus.ensure(spark, sfDir)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    val (_, queries) = executedBy {
+      val out = java.nio.file.Files.createTempDirectory("plan-run-from").toString
+      Pipeline.runFrom(spark, spark.read.parquet(Corpus.pagesPath(sfDir)), out, 4)
     }
-    spark.listenerManager.register(listener)
-    def isMarker(qe: QueryExecution) = qe.analyzed.output.map(_.name) == Seq("plan_spec_marker")
-    val queries =
-      try {
-        val out = java.nio.file.Files.createTempDirectory("plan-run-from").toString
-        Pipeline.runFrom(spark, spark.read.parquet(Corpus.pagesPath(sfDir)), out, 4)
-        // listener events arrive in order: once this marker query's is
-        // in, every query runFrom ran has been seen
-        spark.range(1).toDF("plan_spec_marker").collect()
-        val deadline = System.nanoTime() + 60000000000L
-        def seenNow = seen.toArray(Array.empty[QueryExecution]).toSeq
-        while (!seenNow.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(50)
-        assert(seenNow.exists(isMarker), "listener events did not arrive")
-        seenNow.filterNot(isMarker)
-      } finally spark.listenerManager.unregister(listener)
-    // the final adaptive plans, through query stages and command wrappers
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case other => (other.children ++ other.innerChildren.collect { case c: SparkPlan => c })
-        .flatMap(nodes)
-    })
     val all = queries.flatMap(qe => nodes(qe.executedPlan))
     val exchanges = all.collect { case e: Exchange => e }.distinct
     val shown = queries.map(_.executedPlan.toString).mkString("\n----\n")

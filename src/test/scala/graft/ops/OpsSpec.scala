@@ -1071,6 +1071,30 @@ class OpsSpec extends AnyFunSuite {
     assert(got.count(_._1 == "hot.example") == 3, "hot host must be capped at k")
   }
 
+  test("url hosts: ColFns.urlHost and hostCap's host on ports, case, userinfo and queries") {
+    import spark.implicits._
+    // current answers, pinned. The two forms (and Pipeline.hostOf, pinned
+    // in PipelineSpec) disagree here; one definition would change results.
+    val cases = Seq(
+      // url                     urlHost  hostCap
+      ("https://a.b:8080/x",     "a.b",   "a.b:8080"),
+      ("HTTPS://Example.COM/x",  "",      ""),
+      ("https://a.b",            "a.b",   "a.b"),
+      ("https://u@h/",           "u@h",   "u@h"),
+      ("https://u:p@h/",         "u",     "u:p@h"),
+      ("https://a.b?q=1",        "a.b",   "a.b?q=1"),
+      ("ftp://a.b/x",            "a.b",   ""))
+    val pages = cases.map(_._1).toDF("url")
+    val urlHost = pages.select(col("url"), ColFns.urlHost(col("url")))
+      .as[(String, String)].collect().toMap
+    val capHost = Prep.hostCap(pages, k = cases.size).select("url", "host")
+      .as[(String, String)].collect().toMap
+    cases.foreach { case (url, h, ch) =>
+      assert(urlHost(url) == h, s"urlHost($url)")
+      assert(capHost(url) == ch, s"hostCap host of $url")
+    }
+  }
+
   test("crawlFreshness: span and bounds per host") {
     import spark.implicits._
     import java.sql.Timestamp
