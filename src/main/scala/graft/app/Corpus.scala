@@ -138,7 +138,8 @@ object Corpus {
       // of ~120 KB at sf0.1; every pages-backed query re-paid the listing +
       // per-file footer reads on each scan (x9 reads pages three times). A
       // range-partition on (lang, salt) with 4 deterministic salts per lang
-      // yields exactly one file per (lang, salt) — 32 files, which both cuts
+      // yields about one file per (lang, salt) — about 32 files (range
+      // bounds are sampled, so two adjacent keys can share a split), which cuts
       // the per-scan open overhead 8x and keeps the scan splittable into
       // defaultParallelism tasks (Spark's bytesPerCore sizing: 32 files of
       // ~1 MB still plan as 32 splits at the bench's 128m maxPartitionBytes).

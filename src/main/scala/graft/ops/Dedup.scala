@@ -151,8 +151,8 @@ object Dedup {
   }
 
   /** The bucket-key-salted cap priority, as SQL (shared by
-    * [[sqlCapBuckets]] and the hand-inlined [[Prep.endToEndSql]] mirrors —
-    * one definition so the engines can't drift).
+    * [[sqlCapBuckets]] and [[Prep.endToEndSql]]'s per-source cap — one
+    * definition so the engines can't drift).
     */
   private[ops] def sqlCapPri(keyCol: String): String =
     sqlH32(s"CAST(doc_id AS VARCHAR) || ':' || CAST($keyCol AS VARCHAR) || ':bcap'")
@@ -313,12 +313,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** The full production LSH pair chain (docs -> shingles -> signatures ->
-    * bands -> capped buckets -> distinct pairs) as a CTE block exposing
-    * `lshp(id_a, id_b)` — ONE definition shared by [[lshCandidatePairsSql]]
-    * and the [[lshRecallSql]] audit so the audited path and the production
-    * path can never drift (the [[sqlDupSpanCtes]] discipline).
-    */
   /** The shingle -> signature -> band chain as a CTE block exposing
     * `bands(doc_id, bkey)` — the SQL mirror of [[minhashBandRows]], shared
     * by [[sqlLshPairCtes]] and [[incrementalGateSql]] (one definition).
@@ -336,8 +330,15 @@ object Dedup {
        |  FROM sig, generate_series(0,${k / 2 - 1}) AS t(b))""".stripMargin
   }
 
-  private def sqlLshPairCtes(table: String, k: Int, n: Int,
-                             bucketCap: Int): String = {
+  /** The full production LSH pair chain (docs -> shingles -> signatures ->
+    * bands -> capped buckets -> distinct pairs) as a CTE block exposing
+    * `lshp(id_a, id_b)` — ONE definition shared by [[lshCandidatePairsSql]],
+    * the [[lshRecallSql]] audit and the components mirrors
+    * ([[dedupComponentsSql]], [[Prep.endToEndSql]]) so the audited path and
+    * the production path can never drift (the [[sqlDupSpanCtes]] discipline).
+    */
+  private[ops] def sqlLshPairCtes(table: String, k: Int, n: Int,
+                                  bucketCap: Int): String = {
     s"""${sqlBandCtes(table, k, n)},
        |capped AS ${sqlCapBuckets("bands", "doc_id", bucketCap)},
        |lshp AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -658,28 +659,15 @@ object Dedup {
        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)""".stripMargin
 
   def dedupComponentsSql(table: String, k: Int = 8, n: Int = 4,
-                         bucketCap: Int = 10): String = {
+                         bucketCap: Int = 10): String =
     // candidate pairs exactly as lshCandidatePairsSql (incl. the band
     // bucket cap), then undirected min-reachable-id per node via a
     // recursive CTE (UNION dedups -> the recursion terminates at the
     // transitive closure)
-    val w = sqlWords("text")
-    val sh = sqlShingles("w", n)
-    val slotHash = sqlH32("h || '|' || s")
-    s"""WITH RECURSIVE docs0 AS (SELECT doc_id, $w AS w FROM $table),
-       |sh AS (SELECT doc_id, $sh AS shingles FROM docs0),
-       |sig AS (SELECT doc_id, list_transform(generate_series(0,${k - 1}),
-       |    h -> list_min(list_transform(shingles, s -> $slotHash))) AS mh
-       |  FROM sh WHERE len(shingles) > 0),
-       |bands AS (SELECT doc_id, md5(b || ':' || mh[2*b+1] || ',' || mh[2*b+2]) AS bkey
-       |  FROM sig, generate_series(0,${k / 2 - 1}) AS t(b)),
-       |capped AS ${sqlCapBuckets("bands", "doc_id", bucketCap)},
-       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |${sqlReachCtes("pairs", "doc_id", table)}
+    s"""WITH RECURSIVE ${sqlLshPairCtes(table, k, n, bucketCap)},
+       |${sqlReachCtes("lshp", "doc_id", table)}
        |SELECT node AS doc_id, min(lbl) AS component
        |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
-  }
 
   /** Leakage-safe train/test split — the assignment a training run must
     * make BEFORE holding out an eval set: a deterministic hash split at

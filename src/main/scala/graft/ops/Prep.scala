@@ -531,6 +531,19 @@ object Prep {
       key("/de/doc-1", 1, gate(":r3", 2)))
   }
 
+  /** The winner's allow digit ("0"/"1") in a [[robotsWinnerKey]]. */
+  private def winnerAllow(k: Column): Column = substring(k, 6, 1)
+
+  /** Whether the longest matching rule allows `url`: the row-local fetch
+    * gate. NULL (a falsy filter) when no rule matches.
+    */
+  def robotsAllowed(url: Column): Column = winnerAllow(robotsWinnerKey(url)) === "1"
+
+  /** One row per input page row that some rule matches: (url, host, the
+    * winning rule_path, allow). Precondition: page urls are unique. The
+    * rules are row-local, so a url listed twice yields two rows here, while
+    * the [[robotsRulesSql]] mirror's GROUP BY url, host yields one.
+    */
   def robotsRules(pages: DataFrame): DataFrame =
     pages
       .select(col("url"),
@@ -539,7 +552,7 @@ object Prep {
       .filter(col("k").isNotNull)
       .select(col("url"), col("host"),
         expr("substring(k, 8)").as("rule_path"),
-        substring(col("k"), 6, 1).cast("int").as("allow"))
+        winnerAllow(col("k")).cast("int").as("allow"))
       .orderBy(col("url"))
 
   /** DuckDB mirror — same constructed rules, same argmax key. */
@@ -961,10 +974,6 @@ object Prep {
       defaultRate: Double = 0.35, capPerSource: Int = 30,
       budget: Long = 256L, targetPerShard: Long = 1000000L,
       k: Int = 8, n: Int = 4, bucketCap: Int = 10): String = {
-    val w = sqlWords("text")
-    val sh = sqlShingles("w", n)
-    val slotHash = sqlH32("h || '|' || s")
-    val bpri = Dedup.sqlCapPri("bkey")
     val spri = Dedup.sqlCapPri("source")
     val nShards = shardsForSql("samp", targetPerShard)
     val rateCase = rates.map { case (l, r) => s"WHEN lang = '$l' THEN ${(r * 1e6).toLong}" }
@@ -975,19 +984,8 @@ object Prep {
        |exsurv AS (SELECT d.doc_id, d.lang, d.source, d.text
        |  FROM $table d JOIN firsts f
        |  ON md5(d.text) IS NOT DISTINCT FROM f.th AND d.doc_id = f.canonical),
-       |docs0 AS (SELECT doc_id, $w AS w FROM exsurv),
-       |sh AS (SELECT doc_id, $sh AS shingles FROM docs0),
-       |sig AS (SELECT doc_id, list_transform(generate_series(0,${k - 1}),
-       |    h -> list_min(list_transform(shingles, s -> $slotHash))) AS mh
-       |  FROM sh WHERE len(shingles) > 0),
-       |bands AS (SELECT doc_id, md5(b || ':' || mh[2*b+1] || ',' || mh[2*b+2]) AS bkey
-       |  FROM sig, generate_series(0,${k / 2 - 1}) AS t(b)),
-       |cappedb AS (SELECT doc_id, bkey FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY bkey ORDER BY $bpri, doc_id) AS rn
-       |    FROM bands) WHERE rn <= $bucketCap),
-       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM cappedb a JOIN cappedb b ON a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |${Dedup.sqlReachCtes("pairs", "doc_id", "exsurv")},
+       |${Dedup.sqlLshPairCtes("exsurv", k, n, bucketCap)},
+       |${Dedup.sqlReachCtes("lshp", "doc_id", "exsurv")},
        |comp AS (SELECT node AS doc_id, min(lbl) AS component
        |  FROM reach GROUP BY node),
        |canon AS (SELECT e.* FROM exsurv e

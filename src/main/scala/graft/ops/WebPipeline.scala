@@ -32,13 +32,12 @@ import graft.ops.ColFns.{h32, sqlH32}
 object WebPipeline {
 
   def webPipeline(pages: DataFrame, k: Int = 10, nSub: Int = 16): DataFrame = {
-    // the robots gate is row-local (Prep.robotsWinnerKey): the former
+    // the robots gate is row-local (Prep.robotsAllowed): the former
     // allowed-set SEMI-JOIN shuffled every page's payload by url to make a
     // per-row yes/no decision (guide §8 anti-pattern); as a filter the
     // disallowed pages die in the scan and NOTHING shuffles before the
     // parse kernel
-    val gated = pages.filter(
-      substring(Prep.robotsWinnerKey(col("url")), 6, 1) === "1")
+    val gated = pages.filter(Prep.robotsAllowed(col("url")))
     val ext = Pipeline.extract(gated)
       .toDF().select(col("url"), col("host"), col("nKv"))
     val ranked = ext.join(LinkGraph.hostRank(pages), Seq("host"))

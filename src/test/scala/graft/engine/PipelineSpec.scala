@@ -128,6 +128,25 @@ class PipelineSpec extends AnyFunSuite {
       byBucket(Pipeline.lineage(Pipeline.extract(pages))).map(_.copy(wallMs = 0L)))
   }
 
+  test("runFrom spawns no process") {
+    ensured()
+    import scala.jdk.CollectionConverters._
+    // the real path: Hadoop's chmod commands name the canonical file
+    val outDir = java.nio.file.Paths.get(tempDir("no-fork")).toRealPath().toString
+    val pages = spark.read.parquet(Corpus.pagesPath(sfDir))
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try Pipeline.runFrom(spark, pages, outDir, 4) finally rec.stop()
+    val dump = java.nio.file.Files.createTempFile("run-from", ".jfr")
+    rec.dump(dump)
+    rec.close()
+    val spawned = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+      .map(_.getString("command")).filter(_.contains(outDir))
+    java.nio.file.Files.delete(dump)
+    assert(spawned.size == 0, s"processes on $outDir, e.g. ${spawned.take(3).mkString("; ")}")
+  }
+
   test("hostOf: ports, scheme case, no trailing slash, userinfo, query and fragment") {
     // current behaviour, pinned: DocOut.host is a golden column
     Seq(
