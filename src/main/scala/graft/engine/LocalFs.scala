@@ -1,10 +1,9 @@
 package graft.engine
 
 import java.nio.file.Files
-import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermission}
+import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermissions}
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 
 /** Hadoop's checksummed `file:` file system, minus a process per file.
   *
@@ -19,28 +18,28 @@ final class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 
 object LocalFs {
 
-  // enum order is owner rwx, group rwx, others rwx: bit 8 - i of the mode
-  private val Perms = PosixFilePermission.values
-
-  /** The 9 permission bits of `mode` as a NIO permission set. */
-  private def posix(mode: Int): java.util.Set[PosixFilePermission] = {
-    val s = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-    for (i <- Perms.indices if (mode & (0x100 >> i)) != 0) s.add(Perms(i))
-    s
-  }
+  /** Per-write Hadoop options that route a write's `file:` paths through
+    * [[LocalFs]]; other schemes are untouched. The FileSystem cache is keyed
+    * by scheme, not implementation, so it is bypassed, or a cached stock
+    * `LocalFileSystem` would be handed back.
+    */
+  val WriteOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   /** `RawLocalFileSystem` whose `setPermission` is a `chmod(2)` through
-    * NIO. It defers to the stock method when libhadoop is loaded (that is
-    * already a syscall), when the path's file system has no POSIX view, and
-    * for a sticky-bit mode, which a NIO permission set cannot carry.
+    * NIO, following symlinks as the stock `chmod` does. It defers to the
+    * stock method when the path's file system has no POSIX view, and for a
+    * sticky-bit mode, which a NIO permission set cannot carry.
     */
   final class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit = {
-      val view =
-        if (NativeIO.isAvailable || permission.getStickyBit) null
-        else Files.getFileAttributeView(pathToFile(p).toPath, classOf[PosixFileAttributeView])
-      if (view == null) super.setPermission(p, permission)
-      else view.setPermissions(posix(permission.toShort))
+      val view = Files.getFileAttributeView(pathToFile(p).toPath, classOf[PosixFileAttributeView])
+      if (view == null || permission.getStickyBit) super.setPermission(p, permission)
+      else
+        // the "rwxr-x---" form; not toString, which subclasses (FsCreateModes) override
+        view.setPermissions(PosixFilePermissions.fromString(permission.getUserAction.SYMBOL +
+          permission.getGroupAction.SYMBOL + permission.getOtherAction.SYMBOL))
     }
   }
 }

@@ -23,21 +23,13 @@ import graft.html.Lineizer
   *  - nothing driver-side is O(docs);
   *  - local commits fork nothing: without libhadoop, Hadoop's `file:`
   *    file system forks a `chmod` for every file, `.crc` and directory it
-  *    creates (~3 per bucket), so both writes pass [[LocalCommit]], which
-  *    routes `file:` through [[LocalFs]] (same modes, set through NIO).
-  *    The options name only the `file:` scheme: a no-op for other outputs.
+  *    creates (~3 per bucket), so both writes pass [[LocalFs.WriteOptions]],
+  *    which route `file:` through [[LocalFs]] (same modes, set through
+  *    NIO). The options name only the `file:` scheme: a no-op elsewhere.
   */
 object Pipeline {
 
   final val DefaultBuckets = 256
-
-  /** Per-write Hadoop options: `file:` paths go through [[LocalFs]]. The
-    * FileSystem cache is keyed by scheme, not implementation, so it is
-    * bypassed, or a cached stock `LocalFileSystem` would be handed back.
-    */
-  private val LocalCommit = Map(
-    "fs.file.impl" -> classOf[LocalFs].getName,
-    "fs.file.impl.disable.cache" -> "true")
 
   /** Cheap host extraction (no java.net.URI exceptions in the hot path). */
   def hostOf(url: String): String = {
@@ -247,13 +239,13 @@ object Pipeline {
       .observe(tally, udaf(new BucketTally(buckets)).apply(
         col("bucket"), col("nTokens"), col("nKv"), col("kernelUs")).as("t"))
       .sortWithinPartitions(col("bucket"), col("url"))
-      .write.options(LocalCommit).option("partitionOverwriteMode", "dynamic")
+      .write.options(LocalFs.WriteOptions).option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").partitionBy("bucket").parquet(s"$outDir/decoded")
     val t = tally.get("t").asInstanceOf[collection.Seq[Long]]
     // one row per bucket with docs, wallMs truncated as lineage truncates it
     val rows = (0 until buckets).filter(b => t(4 * b) > 0).map(b =>
       LineageRow(b, t(4 * b), t(4 * b + 1), t(4 * b + 2), t(4 * b + 3) / 1000L, "done"))
-    rows.toDS().coalesce(1).write.options(LocalCommit).mode(if (resume) "append" else "overwrite")
+    rows.toDS().coalesce(1).write.options(LocalFs.WriteOptions).mode(if (resume) "append" else "overwrite")
       .parquet(s"$outDir/lineage")
     rows.map(_.nDocs).sum
   }

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, FileSystem, LocalFileSystem, Path}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.permission.{FsCreateModes, FsPermission}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[LocalFs]] is the stock checksummed `LocalFileSystem` but for how a mode
@@ -48,6 +48,16 @@ class LocalFsSpec extends AnyFunSuite {
     ours.setPermission(oFile, new FsPermission(Integer.parseInt("640", 8).toShort))
     stock.setPermission(sFile, new FsPermission(Integer.parseInt("640", 8).toShort))
     assert(perms(oFile) == perms(sFile) && perms(oFile) == "rw-r-----")
+  }
+
+  test("a create-modes permission applies its masked mode, as the stock chmod does") {
+    // FsCreateModes (FileContext's create/mkdir mode) overrides toString
+    val (dir, file) = layout(ours, "create-modes")
+    val modes = FsCreateModes.create(new FsPermission(Integer.parseInt("750", 8).toShort),
+      new FsPermission(Integer.parseInt("777", 8).toShort))
+    ours.setPermission(file, modes)
+    ours.setPermission(dir, modes)
+    assert(perms(file) == "rwxr-x---" && perms(dir) == "rwxr-x---")
   }
 
   test("the .crc sidecar is written and a corrupted byte fails the read") {
