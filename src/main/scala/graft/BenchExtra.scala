@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc per-query timing harness for optimization work (guide §1).
@@ -11,9 +12,49 @@ import org.apache.spark.sql.SparkSession
   * plus optional repeats and a noop-sink mode (guide §1.4) that forces every
   * column to be computed so projection-pruning can't flatter a number.
   *
+  * Each query prints one line: `med`/`min` seconds, every rep's seconds,
+  * then the Spark work of the median rep — `jobs`, `stages` (completed),
+  * `tasks`, `taskSec` (summed executor run time) and `gcSec` (summed JVM GC
+  * time); a query whose every rep fails prints none. Many jobs/stages over
+  * little task time mark a query whose wall clock is orchestration, not
+  * compute. The counts come from a listener and are read after each timed
+  * region closes, so the timings are unaffected.
+  *
   * Usage: runMain graft.BenchExtra [--reps N] [--noop] q1 q2 ...  (or: all)
   */
 object BenchExtra {
+
+  /** Counts the Spark work submitted between [[reset]] and [[drain]]. */
+  private final class JobCounter extends SparkListener {
+    private var jobs, stages, tasks = 0
+    private var taskMs, gcMs = 0L
+    private var open = 0 // jobs started and not yet ended; survives reset
+    private var lastEventNs = System.nanoTime()
+
+    private def event(f: => Unit): Unit = synchronized { f; lastEventNs = System.nanoTime() }
+    override def onJobStart(e: SparkListenerJobStart): Unit = event { jobs += 1; open += 1 }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = event(open -= 1)
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = event(stages += 1)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = event {
+      tasks += 1
+      Option(e.taskMetrics).foreach { m => taskMs += m.executorRunTime; gcMs += m.jvmGCTime }
+    }
+
+    def reset(): Unit = synchronized { jobs = 0; stages = 0; tasks = 0; taskMs = 0L; gcMs = 0L }
+
+    /** Waits (at most 5 s) until every started job has ended and the
+      * listener bus has been quiet for 100 ms — the bus delivers events
+      * asynchronously — then formats the counts since [[reset]].
+      */
+    def drain(): String = {
+      val until = System.nanoTime() + 5000000000L
+      while (System.nanoTime() < until &&
+        synchronized(open > 0 || System.nanoTime() - lastEventNs < 100000000L))
+        Thread.sleep(10)
+      synchronized(f"jobs=$jobs%3d stages=$stages%3d tasks=$tasks%5d " +
+        f"taskSec=${taskMs / 1e3}%8.2f gcSec=${gcMs / 1e3}%6.2f")
+    }
+  }
 
   private def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -53,6 +94,8 @@ object BenchExtra {
       if (names.isEmpty || names.contains("all")) all.keys.toSeq.sorted
       else names.toSeq
     val spark = session(cpus)
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
     graft.app.Corpus.ensure(spark, sfDir)
     def run(name: String): Unit = {
       val df = all(name)(spark, sfDir)
@@ -65,15 +108,16 @@ object BenchExtra {
         System.err.println(s"warm $n failed: $e") }
     }
     val out = sel.map { n =>
-      val ts = (1 to reps).map { r =>
+      val runs = (1 to reps).map { r =>
         spark.sparkContext.setJobDescription(s"timed:$n:$r")
-        try time(run(n)) catch { case scala.util.control.NonFatal(_) => -1.0 }
+        counter.reset()
+        val t = try time(run(n)) catch { case scala.util.control.NonFatal(_) => -1.0 }
+        (t, counter.drain())
       }
-      val ok = ts.filter(_ >= 0)
-      val med =
-        if (ok.isEmpty) -1.0
-        else { val s = ok.sorted; s(s.size / 2) }
-      println(f"$n%-24s med=${med}%8.3f min=${if (ok.isEmpty) -1.0 else ok.min}%8.3f  ${ts.map(t => f"$t%.3f").mkString(" ")}")
+      val ts = runs.map(_._1)
+      val ok = runs.filter(_._1 >= 0).sortBy(_._1)
+      val (med, counts) = if (ok.isEmpty) (-1.0, "") else ok(ok.size / 2)
+      println(f"$n%-24s med=${med}%8.3f min=${if (ok.isEmpty) -1.0 else ok.head._1}%8.3f  ${ts.map(t => f"$t%.3f").mkString(" ")}  $counts")
       n -> med
     }
     println("TOTAL(med) " + f"${out.map(_._2).filter(_ >= 0).sum}%.3f")

@@ -2,7 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.DocBuilder
-import graft.engine.{DocOut, KvOut, LineOut, MultiOut, PairOut, Pipeline}
+import graft.engine.{DocOut, Pipeline}
 import graft.synth.{CorpusGen, PageRow}
 
 /** Materializes the deterministic synthetic corpus (pages + oracle goldens)
@@ -77,25 +77,8 @@ object Corpus {
   def goldenFor(docIdx: Long, buckets: Int): DocOut = {
     val (ann, page) = CorpusGen.pageFor(docIdx)
     val sample = DocBuilder.build(ann)
-    val d = DocBuilder.decodeSample(sample)
-    DocOut(
-      url = page.url,
-      host = Pipeline.hostOf(page.url),
-      lang = page.lang,
-      bucket = Pipeline.bucketOf(page.url, buckets),
-      nTokens = sample.tokens.length,
-      nLines = d.lines.length,
-      nKv = d.kvPairs.length,
-      kernelUs = 0L, // oracle path: no kernel timing
-      text = d.extractedText,
-      lines = d.lines.map(l => LineOut(l.text, l.box)),
-      kv = d.kvPairs.map(p => KvOut(p.key, p.value, p.keyBox, p.valueBox)),
-      lineExtraction = d.lineExtraction.map(p => PairOut(p._1, p._2)),
-      entHead = d.entHead.map(m => MultiOut(m._1, m._2)),
-      entTail = d.entTail.map(m => MultiOut(m._1, m._2)),
-      groupHead = d.groupHead.map(p => PairOut(p._1, p._2)),
-      groupTail = d.groupTail.map(p => PairOut(p._1, p._2))
-    )
+    Pipeline.docOut(page.url, page.lang, buckets, sample.nTokens,
+      DocBuilder.decodeSample(sample), kernelUs = 0L) // oracle path: no kernel timing
   }
 
   /** Deterministic per-document spot table for the windowed parse-spots

@@ -52,24 +52,6 @@ object Boxes {
     (x0.toLong << 48) | (y0.toLong << 32) | (x1.toLong << 16) | y1.toLong
   }
 
-  /** [[mergeBbox]] over boxes(s..eIncl) without materializing the slice —
-    * the decode chain merges a range per line/chain step on the hot path.
-    */
-  def mergeBboxRange(boxes: IndexedSeq[Vector[Int]], s: Int, eIncl: Int): Vector[Int] = {
-    var minX, minY = Int.MaxValue
-    var maxX, maxY = Int.MinValue
-    var k = s
-    while (k <= eIncl) {
-      val b = boxes(k)
-      if (b(0) < minX) minX = b(0)
-      if (b(1) < minY) minY = b(1)
-      if (b(2) > maxX) maxX = b(2)
-      if (b(3) > maxY) maxY = b(3)
-      k += 1
-    }
-    Vector(minX, minY, maxX, maxY)
-  }
-
   /** Component-wise min/min/max/max over a non-empty box list. */
   def mergeBbox(boxes: Seq[Seq[Int]]): Vector[Int] = {
     var minX, minY = Int.MaxValue

@@ -98,8 +98,4 @@ object TextNorm {
     while (b > a && pyIsSpace(s.charAt(b - 1))) b -= 1
     if (a == 0 && b == s.length) s else s.substring(a, b)
   }
-
-  /** Python `str.isspace()`: true iff non-empty and all chars are space. */
-  def pyIsSpaceStr(s: String): Boolean =
-    s.nonEmpty && s.forall(pyIsSpace)
 }

@@ -54,15 +54,23 @@ object Pipeline {
     val ann = Lineizer.lineizeStreamBytes(html, url)
     val sample = DocBuilder.build(ann)
     val d = DocBuilder.decodeSampleFast(sample)
+    docOut(url, lang, buckets, sample.nTokens, d, (System.nanoTime() - t0) / 1000L)
+  }
+
+  /** A decoded document as the engine's output row; shared by
+    * [[extractDoc]] and the golden corpus (`Corpus.goldenFor`).
+    */
+  def docOut(url: String, lang: String, buckets: Int, nTokens: Int,
+      d: DecodedDoc, kernelUs: Long): DocOut =
     DocOut(
       url = url,
       host = hostOf(url),
       lang = lang,
       bucket = bucketOf(url, buckets),
-      nTokens = sample.nTokens,
+      nTokens = nTokens,
       nLines = d.lines.length,
       nKv = d.kvPairs.length,
-      kernelUs = (System.nanoTime() - t0) / 1000L,
+      kernelUs = kernelUs,
       text = d.extractedText,
       lines = d.lines.map(l => LineOut(l.text, l.box)),
       kv = d.kvPairs.map(p => KvOut(p.key, p.value, p.keyBox, p.valueBox)),
@@ -72,7 +80,6 @@ object Pipeline {
       groupHead = d.groupHead.map(p => PairOut(p._1, p._2)),
       groupTail = d.groupTail.map(p => PairOut(p._1, p._2))
     )
-  }
 
   /** Read the pages table. Iceberg-format when a catalog table name is
     * given and the runtime is present; Parquet path otherwise (identical

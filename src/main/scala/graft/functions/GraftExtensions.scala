@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -114,7 +114,4 @@ object GraftFunctions {
     */
   def bucketExpr(colName: String, buckets: Int): Column =
     expr(s"graft_bucket($colName, $buckets)")
-
-  def builderWithExtensions(b: SparkSession.Builder): SparkSession.Builder =
-    b.withExtensions(new GraftExtensions)
 }

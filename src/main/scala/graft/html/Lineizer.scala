@@ -775,11 +775,4 @@ object Lineizer {
     val (width, height) = if (dimW >= 0) (dimW, dimH) else (1000, 1414)
     assemble(blocks, width, height, uid)
   }
-
-  /** Full kernel body: html bytes -> annotation -> token sample -> decoded
-    * document. The single per-document function the Spark engine maps over
-    * partitions (pred path: mutual-best assignment).
-    */
-  def extract(uid: String, htmlBytes: Array[Byte]): DecodedDoc =
-    DocBuilder.decodeSampleFast(DocBuilder.build(lineizeStreamBytes(htmlBytes, uid)))
 }

@@ -1252,20 +1252,4 @@ object Prep {
        |SELECT g.lang, CAST(g.pct AS INT) AS pct, CAST(min(c.v) AS BIGINT) AS v
        |FROM g JOIN c ON c.lang = g.lang AND c.cum >= g.rnk
        |GROUP BY g.lang, g.pct ORDER BY g.lang, g.pct""".stripMargin
-
-  def packChunksSql(table: String, budget: Long = 256L, nShards: Int = 8): String =
-    s"""WITH t AS (SELECT doc_id, lang, doc_id % $nShards AS shard,
-       |    CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tokens
-       |  FROM $table),
-       |c AS (SELECT doc_id, lang, shard, n_tokens,
-       |    sum(n_tokens) OVER (PARTITION BY lang, shard ORDER BY doc_id
-       |      ROWS UNBOUNDED PRECEDING) AS cum
-       |  FROM t)
-       |SELECT lang, CAST(shard AS INT) AS shard,
-       |  CAST(floor((cum - n_tokens) / $budget) AS BIGINT) AS chunk_id,
-       |  CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(n_tokens) AS BIGINT) AS chunk_tokens,
-       |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-       |FROM c GROUP BY lang, shard, chunk_id
-       |ORDER BY lang, shard, chunk_id""".stripMargin
 }

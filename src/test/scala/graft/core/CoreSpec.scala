@@ -284,6 +284,14 @@ class QuadCorpusSpec extends AnyFunSuite {
       assert(DocBuilder.decodeSampleFast(sample, decodeGt = true) ==
         DocBuilder.decodeSample(sample, decodeGt = true), s"doc $i gt")
     }
+    // a page with no entities: zero tokens, and both paths decode nothing
+    val empty = DocBuilder.build(AnnDoc("u", 1000, 1414, Vector.empty, Vector.empty, Vector.empty))
+    assert(empty.nTokens == 0)
+    Seq(false, true).foreach { gt =>
+      val d = DocBuilder.decodeSampleFast(empty, decodeGt = gt)
+      assert(d == DocBuilder.decodeSample(empty, decodeGt = gt), s"empty gt=$gt")
+      assert(d.lines.isEmpty && d.kvPairs.isEmpty && d.extractedText.isEmpty, s"empty gt=$gt")
+    }
   }
 }
 

@@ -1,7 +1,9 @@
 package graft.html
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.app.Corpus
 import graft.core._
+import graft.engine.Pipeline
 import graft.synth.CorpusGen
 
 /** The engine-side mirror of the reference's GT round-trip invariant
@@ -34,14 +36,12 @@ class RoundTripSpec extends AnyFunSuite {
 
   test("engine extract == oracle decode, byte-identical text per url") {
     (0L until nDocs.toLong).foreach { idx =>
-      val (ann, page) = CorpusGen.pageFor(idx)
-      val engine = Lineizer.extract(page.url, page.html)
-      val oracle = DocBuilder.decodeSample(DocBuilder.build(ann))
-      assert(engine.extractedText == oracle.extractedText, s"doc $idx text")
-      assert(engine.lines == oracle.lines, s"doc $idx lines")
-      assert(engine.kvPairs == oracle.kvPairs, s"doc $idx kv")
-      assert(engine.groupHead == oracle.groupHead, s"doc $idx groupHead")
-      assert(engine.entTail == oracle.entTail, s"doc $idx entTail")
+      val (_, page) = CorpusGen.pageFor(idx)
+      val engine = Pipeline.extractDoc(page.url, page.html, page.lang, Pipeline.DefaultBuckets)
+      val oracle = Corpus.goldenFor(idx, Pipeline.DefaultBuckets)
+      assert(engine.text == oracle.text, s"doc $idx text")
+      // every column but kernelUs, a timing
+      assert(engine.copy(kernelUs = oracle.kernelUs) == oracle, s"doc $idx")
     }
   }
 
@@ -158,7 +158,8 @@ class RoundTripSpec extends AnyFunSuite {
     bad(at - 1) = 0x85.toByte
     bad(at) = 0xE3.toByte
     bad(at + 1) = 0xFF.toByte
-    val doc = Lineizer.extract("u", bad)
+    def extract(html: Array[Byte]) = Pipeline.extractDoc("u", html, "en", Pipeline.DefaultBuckets)
+    val doc = extract(bad)
     assert(doc.lines.nonEmpty, "block must still be extracted")
     val text = doc.lines.head.text
     assert(text.startsWith("ok") && text.contains('�'),
@@ -166,12 +167,13 @@ class RoundTripSpec extends AnyFunSuite {
     // truncated multibyte at end-of-buffer must not crash either
     val cut = java.util.Arrays.copyOf(good, good.length - 20)
     cut(cut.length - 1) = 0xE4.toByte
-    Lineizer.extract("u", cut) // no exception = pass
+    extract(cut) // no exception = pass
+    // a page without positioned (styled) blocks has no lines
+    assert(extract("<html><body><p>hello world</p></body></html>".getBytes("UTF-8")).lines.isEmpty)
   }
 
   test("style box parse: unicode whitespace and overlong digit runs are not matches") {
-    def lineTexts(html: String): Vector[String] =
-      Lineizer.lineize(HtmlParser.parse(html), "u").entities.flatMap(_.lines.map(_.text))
+    def lineTexts(d: AnnDoc): Vector[String] = d.entities.flatMap(_.lines.map(_.text))
     // U+2028 between key and colon: regex \s never matched it; nor do we
     val u2028 = "left\u2028:1px;top:2px;width:3px;height:4px"
     // 12-digit run wraps Int; must be treated as no-match, not garbage
@@ -181,7 +183,9 @@ class RoundTripSpec extends AnyFunSuite {
       s"""<html><body><div style="$u2028">BAD1</div>
          |<div style="$overlong">BAD2</div>
          |<div style="$good">GOOD</div></body></html>""".stripMargin
-    assert(lineTexts(html) == Vector("GOOD"))
+    assert(lineTexts(Lineizer.lineize(HtmlParser.parse(html), "u")) == Vector("GOOD"))
+    // the engine's byte scanner has its own style parser
+    assert(lineTexts(Lineizer.lineizeStreamBytes(html.getBytes("UTF-8"), "u")) == Vector("GOOD"))
   }
 
   test("stray slash inside a tag terminates (round-1 parser hung on <x</b>)") {
@@ -190,7 +194,8 @@ class RoundTripSpec extends AnyFunSuite {
     Seq("<div><x</div>ok",
         "<br/ >after",
         """<a /href="u">t</a>""",
-        "<p / / />x").foreach { h =>
+        "<p / / />x",
+        "<<<>>>not html &&& <div").foreach { h =>
       val html = s"<html><body>$h</body></html>"
       val tree = Lineizer.lineize(HtmlParser.parse(html), "u")
       val stream = Lineizer.lineizeStream(html, "u")
