@@ -9,9 +9,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * Without libhadoop, `RawLocalFileSystem.setPermission` runs
   * `Shell.execCommand("chmod", ...)`: one forked process for every file,
-  * `.crc` sidecar and directory a write creates (three per bucket of a
-  * [[Pipeline.runFrom]] write). [[LocalFs.Raw]] sets the same mode with
-  * `java.nio.file` instead. Everything else — checksums, umask, layout,
+  * `.crc` sidecar and directory a write creates (a file and its `.crc` per
+  * write task of a [[Pipeline.runFrom]] write). [[LocalFs.Raw]] sets the
+  * same mode with `java.nio.file` instead. Everything else — checksums, umask, layout,
   * rename/delete semantics — is the stock `LocalFileSystem`'s.
   */
 final class LocalFs extends LocalFileSystem(new LocalFs.Raw)

@@ -37,8 +37,10 @@ final case class DocOut(
 )
 
 /** Per-bucket lineage row enabling checkpoint-resume (SURVEY.md §2 A8):
-  * buckets are deterministic functions of url, so a re-run overwrites the
-  * same bucket idempotently and finished buckets are skipped by anti-join.
+  * buckets are deterministic functions of url, and the ledger of these
+  * rows is the commit of `Pipeline.runFrom`'s decoded files: a file counts
+  * exactly when its buckets are listed here, finished buckets are skipped
+  * by anti-join, and a resume deletes files whose buckets are not listed.
   * `wallMs` is the summed kernel wall time of the bucket's docs (SURVEY
   * §4.2 side-output), giving per-bucket cost attribution for free.
   */

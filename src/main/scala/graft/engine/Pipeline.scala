@@ -1,6 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Observation, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -17,15 +19,18 @@ import graft.html.Lineizer
   *  - `html` (the fat binary column) is pruned at scan time via an explicit
   *    select, and dropped from the output row immediately after lineize;
   *  - nothing is cached or read back: lineage is tallied during the write;
-  *  - writes are bucketed by a deterministic url hash: dynamic partition
-  *    overwrite of a bucket is idempotent, so a resumed run redoes only
-  *    unfinished buckets (anti-join against the lineage table);
+  *  - files are data-sized: each write task commits one Parquet file sorted
+  *    by (bucket, url), so a file's lineage is a url range per bucket and a
+  *    call's file count follows the exchange width, not the bucket count;
+  *  - the lineage ledger is the commit: a decoded file counts exactly when
+  *    its buckets are in the ledger, so a resumed run redoes only the
+  *    buckets no earlier run finished (anti-join against the ledger);
   *  - nothing driver-side is O(docs);
   *  - local commits fork nothing: without libhadoop, Hadoop's `file:`
   *    file system forks a `chmod` for every file, `.crc` and directory it
-  *    creates (~3 per bucket), so both writes pass [[LocalFs.WriteOptions]],
-  *    which route `file:` through [[LocalFs]] (same modes, set through
-  *    NIO). The options name only the `file:` scheme: a no-op elsewhere.
+  *    creates, so both writes pass [[LocalFs.WriteOptions]], which route
+  *    `file:` through [[LocalFs]] (same modes, set through NIO). The
+  *    options name only the `file:` scheme: a no-op elsewhere.
   */
 object Pipeline {
 
@@ -83,10 +88,11 @@ object Pipeline {
 
   /** Read the pages table. Iceberg-format when a catalog table name is
     * given and the runtime is present; Parquet path otherwise (identical
-    * downstream code — SURVEY.md §7.0).
+    * downstream code — SURVEY.md §7.0). A path is read with the declared
+    * [[PageSlim]] schema: no footer pass over the input infers it.
     */
   def readPages(spark: SparkSession, pathOrTable: String): DataFrame =
-    if (pathOrTable.contains("/")) spark.read.parquet(pathOrTable)
+    if (pathOrTable.contains("/")) spark.read.schema(Encoders.product[PageSlim].schema).parquet(pathOrTable)
     else spark.read.table(pathOrTable)
 
   /** Main extraction stage: prune to (url, html, lang) then run the typed
@@ -139,11 +145,11 @@ object Pipeline {
     * equi-join between crawl and prev: the prev side ships only
     * (url, digest), but the crawl side carries html through the anti-join
     * shuffle — the same wide-dependency class as [[runFrom]]'s bucket
-    * exchange, i.e. one corpus-wide shuffle, not a new cost tier. On a
-    * real deployment both tables are bucket-partitioned by url
-    * ([[runFrom]]'s layout), so a storage-partitioned (bucketed) join
-    * co-locates the sides and removes even that shuffle. AQE splits
-    * hot-url skew either way.
+    * exchange, i.e. one corpus-wide shuffle, not a new cost tier. Were
+    * both tables written as a bucketed table on url, a storage-partitioned
+    * join would co-locate the sides and remove even that shuffle;
+    * [[runFrom]]'s files are sorted by (bucket, url) but not registered as
+    * one. AQE splits hot-url skew either way.
     */
   def extractIncremental(pages: DataFrame, prev: DataFrame,
       buckets: Int = DefaultBuckets): DataFrame = {
@@ -193,26 +199,39 @@ object Pipeline {
     def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder()
   }
 
-  /** Resume: drop pages whose bucket is already marked done in the lineage
-    * table (left anti join — broadcast, the lineage side is tiny).
+  /** `outDir`'s file system as the writes see it ([[LocalFs.WriteOptions]]
+    * applied), for resume's ledger check and deletes.
     */
-  def resumeFilter(spark: SparkSession, pages: DataFrame, outDir: String, buckets: Int = DefaultBuckets): DataFrame = {
-    val lineagePath = s"$outDir/lineage"
-    val fs = new java.io.File(lineagePath.stripPrefix("file:"))
-    if (!fs.exists()) pages
-    else {
-      val done = spark.read.parquet(lineagePath)
-        .filter(col("status") === "done")
-        .select(col("bucket"))
-      // native codegen'd expression, NOT a Scala udf: resume re-scans the
-      // full input at 10^12-doc scale and must stay in whole-stage codegen
-      pages
-        .withColumn("bucket",
-          graft.functions.GraftFunctions.bucketExpr("url", buckets))
-        .join(broadcast(done), Seq("bucket"), "left_anti")
-        .drop("bucket")
-    }
+  private def outFs(spark: SparkSession, outDir: String): FileSystem = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    LocalFs.WriteOptions.foreach { case (k, v) => conf.set(k, v) }
+    new Path(outDir).getFileSystem(conf)
   }
+
+  /** The buckets `outDir`'s ledger marks done, or None when it has no ledger. */
+  private def doneBuckets(spark: SparkSession, fs: FileSystem, outDir: String): Option[DataFrame] =
+    if (!fs.exists(new Path(s"$outDir/lineage"))) None
+    else Some(spark.read.schema(Encoders.product[LineageRow].schema).parquet(s"$outDir/lineage")
+      .filter(col("status") === "done")
+      .select(col("bucket")))
+
+  /** Drop pages whose bucket is in `done` (left anti join — broadcast, the
+    * ledger side is tiny).
+    */
+  private def skipDone(pages: DataFrame, done: DataFrame, buckets: Int): DataFrame =
+    // native codegen'd expression, NOT a Scala udf: resume re-scans the
+    // full input at 10^12-doc scale and must stay in whole-stage codegen
+    pages
+      .withColumn("bucket",
+        graft.functions.GraftFunctions.bucketExpr("url", buckets))
+      .join(broadcast(done), Seq("bucket"), "left_anti")
+      .drop("bucket")
+
+  /** Resume: drop pages whose bucket is already marked done in the lineage
+    * table; all of them when `outDir` has no ledger.
+    */
+  def resumeFilter(spark: SparkSession, pages: DataFrame, outDir: String, buckets: Int = DefaultBuckets): DataFrame =
+    doneBuckets(spark, outFs(spark, outDir), outDir).fold(pages)(skipDone(pages, _, buckets))
 
   /** Full run: read -> (resume) -> extract -> write + lineage. */
   def run(spark: SparkSession, inputPath: String, outDir: String,
@@ -220,14 +239,27 @@ object Pipeline {
     runFrom(spark, readPages(spark, inputPath), outDir, 0, 0, resume, buckets)
 
   /** Full run over a pages frame in one pass: (resume filter) -> extract ->
-    * one hash exchange on `bucket` -> sort by (bucket, url) -> bucket
-    * directory write. Lineage is a [[BucketTally]] observed after the
+    * one hash exchange on `bucket` -> sort by (bucket, url) -> one Parquet
+    * file per write task. Lineage is a [[BucketTally]] observed after the
     * exchange, in the write's result stage, where Spark applies a task's
-    * accumulator update once even if a stage is retried. A resumed run
-    * appends its lineage rows (its buckets are those no earlier run
-    * finished). Returns the docs this call wrote. `partitions` and `salts`
-    * are ignored, kept for existing callers: the exchange width is
-    * `spark.sql.shuffle.partitions`, which AQE coalesces.
+    * accumulator update once even if a stage is retried. Returns the docs
+    * this call wrote. `partitions` and `salts` are ignored, kept for
+    * existing callers: the exchange width is `spark.sql.shuffle.partitions`,
+    * which AQE coalesces.
+    *
+    * Invariant: a file under `decoded` is committed exactly when its
+    * buckets are in the `lineage` ledger. It holds because each run writes
+    * only buckets outside the ledger, and its ledger rows list every bucket
+    * it wrote, so no file mixes ledgered and unledgered buckets.
+    *  - A fresh run (`resume = false`, or no ledger yet) deletes the ledger
+    *    first, overwrites `decoded`, then writes the ledger. Killed before
+    *    the end, it leaves no ledger, and a resume is a fresh run.
+    *  - A resumed run first deletes the decoded files holding a bucket the
+    *    ledger does not list (the output of a resumed run killed between
+    *    its decoded commit and its ledger append) and the committed task
+    *    output a killed append left under `decoded/_temporary`, which the
+    *    next job commit would otherwise move in. It then skips the done
+    *    buckets, appends to `decoded` and appends its ledger rows.
     */
   def runFrom(
       spark: SparkSession,
@@ -239,20 +271,34 @@ object Pipeline {
       buckets: Int = DefaultBuckets
   ): Long = {
     import spark.implicits._
-    val pages = if (resume) resumeFilter(spark, pages0, outDir, buckets) else pages0
+    val fs = outFs(spark, outDir)
+    val done = if (resume) doneBuckets(spark, fs, outDir) else None
+    val pages = done match {
+      case None =>
+        fs.delete(new Path(s"$outDir/lineage"), true)
+        pages0
+      case Some(d) =>
+        fs.delete(new Path(s"$outDir/decoded/_temporary"), true)
+        spark.read.schema("bucket INT").parquet(s"$outDir/decoded")
+          .select(col("bucket"), col("_metadata.file_path").as("file"))
+          .join(broadcast(d), Seq("bucket"), "left_anti")
+          .select("file").distinct().as[String].collect()
+          .foreach(f => fs.delete(new Path(new java.net.URI(f)), false))
+        skipDone(pages0, d, buckets)
+    }
+    val mode = if (done.isDefined) "append" else "overwrite"
     val tally = Observation()
     extract(pages, buckets)
       .repartition(col("bucket"))
       .observe(tally, udaf(new BucketTally(buckets)).apply(
         col("bucket"), col("nTokens"), col("nKv"), col("kernelUs")).as("t"))
       .sortWithinPartitions(col("bucket"), col("url"))
-      .write.options(LocalFs.WriteOptions).option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("bucket").parquet(s"$outDir/decoded")
+      .write.options(LocalFs.WriteOptions).mode(mode).parquet(s"$outDir/decoded")
     val t = tally.get("t").asInstanceOf[collection.Seq[Long]]
     // one row per bucket with docs, wallMs truncated as lineage truncates it
     val rows = (0 until buckets).filter(b => t(4 * b) > 0).map(b =>
       LineageRow(b, t(4 * b), t(4 * b + 1), t(4 * b + 2), t(4 * b + 3) / 1000L, "done"))
-    rows.toDS().coalesce(1).write.options(LocalFs.WriteOptions).mode(if (resume) "append" else "overwrite")
+    rows.toDS().coalesce(1).write.options(LocalFs.WriteOptions).mode(mode)
       .parquet(s"$outDir/lineage")
     rows.map(_.nDocs).sum
   }

@@ -8,8 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.UrlBucket
 
 /** Native Catalyst expression for the engine's url -> bucket assignment
-  * (FNV-1a 64 mod buckets, graft.core.UrlBucket — the bucket layout of
-  * Pipeline.runFrom's write and the resume anti-join key).
+  * (FNV-1a 64 mod buckets, graft.core.UrlBucket — the exchange and sort
+  * key of Pipeline.runFrom's write and the resume anti-join key).
   *
   * Codegen'd `UnaryExpression`, not a Scala UDF: the resume path scans the
   * FULL input table at 10^12-doc scale, and a row-at-a-time interpreted UDF

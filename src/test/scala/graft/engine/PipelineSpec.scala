@@ -85,6 +85,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(remaining.count() + half.count() == pages.count())
   }
 
+  test("resume finds the ledger of an output on a non-file: scheme") {
+    ensured()
+    // viewfs over a local directory: the ledger check goes through Hadoop
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.viewfs.mounttable.pipeline-spec.link./out", s"file://${tempDir("viewfs")}")
+    val outDir = "viewfs://pipeline-spec/out"
+    val pages = spark.read.parquet(Corpus.pagesPath(sfDir))
+    val nFirst = Pipeline.runFrom(spark, evenBuckets(pages), outDir, 4)
+    assert(Pipeline.resumeFilter(spark, pages, outDir).count() + nFirst == pages.count())
+  }
+
   test("a resumed run appends its lineage: one done row per bucket, no duplicate url") {
     ensured()
     import spark.implicits._
@@ -108,6 +119,57 @@ class PipelineSpec extends AnyFunSuite {
     assert(ledger().sortBy(_.bucket).toSeq == rows.sortBy(_.bucket).toSeq)
   }
 
+  /** Asserts that `outDir` holds every url of `pages` exactly once and a
+    * ledger whose rows sum to the page count.
+    */
+  private def assertComplete(outDir: String, pages: DataFrame): Unit = {
+    import spark.implicits._
+    def urls(df: DataFrame) = df.select("url").as[String].collect().sorted.toSeq
+    assert(urls(spark.read.parquet(s"$outDir/decoded")) == urls(pages),
+      "decoded must hold every url exactly once")
+    assert(spark.read.parquet(s"$outDir/lineage").as[LineageRow].collect().map(_.nDocs).sum ==
+      pages.count())
+  }
+
+  private def listed(dir: String): Set[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(_.getName).toSet
+
+  test("a resume killed before its ledger append is redone exactly once") {
+    ensured()
+    val outDir = tempDir("resume-crash")
+    val pages = spark.read.parquet(Corpus.pagesPath(sfDir))
+    Pipeline.runFrom(spark, evenBuckets(pages), outDir, 4)
+    val (ledgerBefore, decodedBefore) = (listed(s"$outDir/lineage"), listed(s"$outDir/decoded"))
+    Pipeline.runFrom(spark, pages, outDir, 4, resume = true)
+    // the kill: the resumed run's decoded files are committed, its ledger
+    // rows (one Parquet file and its .crc) are not
+    val appended = listed(s"$outDir/lineage") -- ledgerBefore
+    assert(appended.size == 2)
+    appended.foreach(f => java.nio.file.Files.delete(java.nio.file.Paths.get(outDir, "lineage", f)))
+    // and a killed append's committed task output, never moved by its job
+    // commit, which the next job commit would move in
+    val part = (listed(s"$outDir/decoded") -- decodedBefore).filter(_.endsWith(".parquet")).min
+    val task = java.nio.file.Paths.get(outDir, "decoded", "_temporary", "0", "task_202610190000_0001_m_000000")
+    java.nio.file.Files.createDirectories(task)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(outDir, "decoded", part), task.resolve(part))
+    Pipeline.runFrom(spark, pages, outDir, 4, resume = true)
+    assertComplete(outDir, pages)
+  }
+
+  test("a fresh run that fails mid-write leaves no ledger, and a resume rebuilds the output") {
+    ensured()
+    val outDir = tempDir("fresh-crash")
+    val pages = spark.read.parquet(Corpus.pagesPath(sfDir))
+    Pipeline.runFrom(spark, pages, outDir, 4)
+    val victim = pages.select("url").head().getString(0)
+    val poisoned = pages.withColumn("url",
+      when(col("url") === victim, raise_error(lit("poisoned page"))).otherwise(col("url")))
+    intercept[Exception](Pipeline.runFrom(spark, poisoned, outDir, 4))
+    assert(!new java.io.File(s"$outDir/lineage").exists(), "a failed fresh run must leave no ledger")
+    assert(Pipeline.runFrom(spark, pages, outDir, 4, resume = true) == pages.count())
+    assertComplete(outDir, pages)
+  }
+
   test("runFrom writes what extract computes, and lineage equal to the SQL lineage") {
     ensured()
     import spark.implicits._
@@ -118,6 +180,17 @@ class PipelineSpec extends AnyFunSuite {
       .as[(String, String, Int, Int)].collect().sortBy(_._1).toSeq
     val written = spark.read.parquet(s"$outDir/decoded").as[DocOut]
     assert(perUrl(written) == perUrl(Pipeline.extract(pages)))
+    // layout: no bucket directories; at most one file per write task, each
+    // in (bucket, url) order
+    val files = new java.io.File(s"$outDir/decoded").listFiles()
+    assert(!files.exists(_.getName.startsWith("bucket=")), files.map(_.getName).mkString(", "))
+    val parts = files.filter(_.getName.endsWith(".parquet"))
+    assert(parts.nonEmpty && parts.length <= spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      s"${parts.length} files")
+    parts.foreach { f =>
+      val keys = spark.read.parquet(f.getPath).select("bucket", "url").as[(Int, String)].collect().toSeq
+      assert(keys == keys.sorted, s"${f.getName} is not in (bucket, url) order")
+    }
     def byBucket(l: Dataset[LineageRow]) = l.collect().sortBy(_.bucket).toSeq
     val observed = byBucket(spark.read.parquet(s"$outDir/lineage").as[LineageRow])
     // kernelUs is a timing, so a fresh extract's wallMs differs; the
@@ -145,6 +218,33 @@ class PipelineSpec extends AnyFunSuite {
       .map(_.getString("command")).filter(_.contains(outDir))
     java.nio.file.Files.delete(dump)
     assert(spawned.size == 0, s"processes on $outDir, e.g. ${spawned.take(3).mkString("; ")}")
+  }
+
+  test("readPages declares the pages schema: building it starts no Spark job") {
+    ensured()
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    val pages = try {
+      val p = Pipeline.readPages(spark, Corpus.pagesPath(sfDir))
+      // listener events arrive in order: once the marker job's is in, any
+      // job readPages started has been seen
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60000000000L
+      while (!started.contains("marker") && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(started.toArray.toSeq == Seq("marker"), s"jobs: ${started.toArray.mkString(", ")}")
+      p
+    } finally sc.removeSparkListener(listener)
+    assert(pages.schema.fieldNames.toSeq == Seq("url", "html", "lang"))
+    assert(pages.filter(col("html").isNotNull && col("lang").isNotNull).count() ==
+      Corpus.docsFor(sfDir).toLong)
   }
 
   test("hostOf: ports, scheme case, no trailing slash, userinfo, query and fragment") {
