@@ -6,6 +6,9 @@ package graft.core
   * Quirk preserved on purpose (it defines the metric, SURVEY.md §7.5): both
   * cores use list *membership* (`pred_item in gt`), so duplicate predictions
   * of one ground-truth item each count as correct.
+  *
+  * The six granularities these kernels run over are defined once, in
+  * [[graft.engine.Eval.Granularities]].
   */
 object PairMetrics {
 
@@ -44,40 +47,4 @@ object PairMetrics {
     val f1 = if (p + r > 0) 2 * p * r / (p + r) else 0.0
     (p, r, f1)
   }
-
-  /** The per-document six-granularity count row
-    * (evaluation.py:391-413): the distributed unit that is later
-    * fname-deduped and micro-summed.
-    */
-  final case class DocMetrics(
-      uid: String,
-      kv: Counts,
-      line: Counts,
-      entHead: Counts,
-      entTail: Counts,
-      groupHead: Counts,
-      groupTail: Counts
-  )
-
-  private def flatten(m: Vector[(Int, Vector[Int])]): Vector[(Int, Int)] =
-    m.flatMap { case (k, vs) => vs.map(v => (k, v)) }
-
-  /** Compare a predicted decode against a gt decode at all six granularities
-    * (evaluation.py:227-334). KV pairs compare as (key, value) text tuples
-    * and lines as plain text, matching the reference's no-bbox eval path
-    * (decode.py:482-508 passes no bbox).
-    */
-  def docMetrics(uid: String, pred: DecodedDoc, gt: DecodedDoc): DocMetrics =
-    DocMetrics(
-      uid = uid,
-      kv = membershipCounts(
-        pred.kvPairs.map(p => (p.key, p.value)),
-        gt.kvPairs.map(p => (p.key, p.value))
-      ),
-      line = membershipCounts(pred.lines.map(_.text), gt.lines.map(_.text)),
-      entHead = membershipCounts(flatten(pred.entHead), flatten(gt.entHead)),
-      entTail = membershipCounts(flatten(pred.entTail), flatten(gt.entTail)),
-      groupHead = membershipCounts(pred.groupHead, gt.groupHead),
-      groupTail = membershipCounts(pred.groupTail, gt.groupTail)
-    )
 }

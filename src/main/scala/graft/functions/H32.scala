@@ -1,5 +1,6 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -48,8 +49,13 @@ object H32Expression {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
-  def compute(s: UTF8String): Long = {
-    val d = md5Local.get().digest(s.getBytes) // digest() resets for reuse
+  def compute(s: UTF8String): Long = ofBytes(s.getBytes)
+
+  /** The same hash of a JVM string, for code outside Catalyst expressions. */
+  def compute(s: String): Long = ofBytes(s.getBytes(StandardCharsets.UTF_8))
+
+  private def ofBytes(b: Array[Byte]): Long = {
+    val d = md5Local.get().digest(b) // digest() resets for reuse
     ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
       ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
   }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   *   - [[h32]]   <->  `CAST(('0x' || substring(md5(x),1,8)) AS BIGINT)`
   *   - [[dot]]   <->  `list_reduce(list_transform(...), (x,y) -> x+y)`
   *   - [[micro]] <->  `CAST(floor(x * 1000000.0) AS BIGINT)`
-  *   - [[urlHost]] <-> [[sqlUrlHost]], the same `regexp_extract`
+  *   - [[urlHost]] <-> [[sqlUrlHost]], [[urlAuthority]] <->
+  *     [[sqlUrlAuthority]]: each pair the same `regexp_extract`
   * (the word/shingle primitives live in the typed kernels —
   * Dedup.shingleRows — since the higher-order column forms are
   * CodegenFallback; only their DuckDB mirrors remain here.)
@@ -41,14 +42,22 @@ object ColFns {
 
   /** A url's host: after a lowercase `[a-z]+://` scheme, everything up to
     * the first `/`, `:`, `?` or `#` (no port, no path; userinfo is kept).
-    * The one definition Prep and LinkGraph share. [[Prep.hostCap]]'s
-    * `^https?://([^/]+)` and [[graft.engine.Pipeline.hostOf]] answer
-    * differently on ports, uppercase schemes and userinfo; OpsSpec and
-    * PipelineSpec pin all three.
+    * The one definition Prep and LinkGraph share. [[urlAuthority]] and
+    * [[graft.engine.Pipeline.hostOf]] answer differently on ports,
+    * uppercase schemes and userinfo; OpsSpec and PipelineSpec pin all three.
     */
   def urlHost(url: Column): Column = regexp_extract(url, UrlHost, 1)
 
   private val UrlHost = "^[a-z]+://([^/:?#]+)"
+
+  /** A url's authority as the host-cap and crawl-freshness operators key
+    * it: after a lowercase `http://` or `https://`, everything up to the
+    * first `/` — port, userinfo and a path-less query included; "" for
+    * any other scheme.
+    */
+  def urlAuthority(url: Column): Column = regexp_extract(url, UrlAuthority, 1)
+
+  private val UrlAuthority = "^https?://([^/]+)"
 
   /** floor(x * 1e6) as BIGINT — the hash-stable way to emit a double:
     * floor is exact given identical IEEE inputs, unlike round (HALF_UP in
@@ -82,6 +91,9 @@ object ColFns {
 
   /** DuckDB equivalent of [[urlHost]] on SQL fragment `url`. */
   def sqlUrlHost(url: String): String = s"regexp_extract($url, '$UrlHost', 1)"
+
+  /** DuckDB equivalent of [[urlAuthority]] on SQL fragment `url`. */
+  def sqlUrlAuthority(url: String): String = s"regexp_extract($url, '$UrlAuthority', 1)"
 
   def sqlMicro(x: String): String = s"CAST(floor(($x) * 1000000.0) AS BIGINT)"
 }

@@ -1,13 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.PairMetrics
+import graft.engine.Eval
+import graft.functions.H32Expression
 import ColFns._
 
-/** The reference's evaluation semantics (SURVEY.md §2 E1/E3) exposed as a
-  * driver-checkable query: micro P/R/F1 of a prediction set against golden
-  * KV pairs and lines.
+/** The reference's evaluation semantics (SURVEY.md §2 E1–E6) exposed as
+  * oracle-checked queries: micro P/R/F1 of a prediction set against the
+  * golden items of two granularities at a time (e1 kv + line, e2 entHead +
+  * groupHead, e3 entTail + groupTail) and the kv + line TP/FP/FN detail
+  * records (e4).
   *
   * The "prediction" is the golden set deterministically perturbed
   * (md5-derived per-item verdict: ~80% kept, ~10% duplicated, ~10%
@@ -15,29 +19,53 @@ import ColFns._
   * duplicate-membership counting quirk (evaluation.py:31-33 — a duplicated
   * correct prediction counts twice) is genuinely exercised end-to-end.
   *
-  * The engine path runs the real kernel ([[PairMetrics.membershipCounts]])
-  * inside a typed map + hash aggregate; the DuckDB oracle recomputes the
-  * same counts relationally with list functions — two independent code
-  * paths over the same algebra.
+  * Each query is one [[Gran]] pair fed to one Spark function and one SQL
+  * generator. The engine path runs the real kernels
+  * ([[PairMetrics.membershipCounts]], [[PairMetrics.detail]]) inside a
+  * typed map + hash aggregate; the DuckDB oracle recomputes the same counts
+  * relationally with list functions — two independent code paths over the
+  * same algebra. Items are strings, printed as [[Eval]] prints them
+  * (`key U+0001 value`, `head:tail`), so both engines hash the same text.
   */
 object EvalMetrics {
 
-  final case class EvalCounts(url: String,
-      kvPred: Long, kvGt: Long, kvCorrect: Long,
-      lnPred: Long, lnGt: Long, lnCorrect: Long)
-
-  private val md5Local = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Plain-Scala mirror of [[ColFns.h32]]: first 8 hex chars of md5 as an
-    * unsigned 32-bit value in a Long (= first 4 digest bytes, big-endian).
+  /** One granularity as the perturbed-eval queries read it: its column
+    * prefix, the SQL aliases of its golden and perturbed item lists, the
+    * golden fields it selects, the typed item builder over those fields
+    * (starting at a row offset) and the DuckDB item expression.
     */
-  private def h32s(s: String): Long = {
-    val d = md5Local.get().digest(s.getBytes("UTF-8"))
-    ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) | ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
+  private final case class Gran(name: String, gold: String, fields: Seq[String],
+      items: (Row, Int) => Seq[String], sqlItems: String) {
+    def pred: String = "p" + name
+    def counted: Seq[String] = Eval.countColumns(name)
   }
+
+  private val Kv = Gran("kv", "gkv", Seq("kv.key", "kv.value"),
+    (r, i) => r.getSeq[String](i).iterator.zip(r.getSeq[String](i + 1).iterator)
+      .map { case (k, v) => Eval.showKv(k, v) }.toVector,
+    """list_transform(kv, x -> x."key" || chr(1) || x."value")""")
+
+  private val Line = Gran("ln", "gln", Seq("lines.text"), (r, i) => r.getSeq[String](i),
+    "list_transform(lines, l -> l.text)")
+
+  /** A head -> tails multimap flattened to one item per (head, tail). */
+  private def multimap(name: String, gold: String, field: String): Gran =
+    Gran(name, gold, Seq(s"$field.head", s"$field.tails"),
+      (r, i) => r.getSeq[Int](i).iterator.zip(r.getSeq[collection.Seq[Int]](i + 1).iterator)
+        .flatMap { case (h, ts) => ts.map(t => Eval.showPair(h, t)) }.toVector,
+      s"flatten(list_transform($field, x -> list_transform(x.tails, t -> x.head || ':' || t)))")
+
+  private def pairList(name: String, gold: String, field: String): Gran =
+    Gran(name, gold, Seq(s"$field.head", s"$field.tail"),
+      (r, i) => r.getSeq[Int](i).iterator.zip(r.getSeq[Int](i + 1).iterator)
+        .map { case (h, t) => Eval.showPair(h, t) }.toVector,
+      s"list_transform($field, p -> p.head || ':' || p.tail)")
+
+  // e3's entTail alias is `get1`; the oracle text keeps it
+  private val EntHead = multimap("eh", "geh", "entHead")
+  private val GroupHead = pairList("gh", "ggh", "groupHead")
+  private val EntTail = multimap("et", "get1", "entTail")
+  private val GroupTail = pairList("gl", "ggl", "groupTail")
 
   /** verdict bucket 0..9 for one item: < 8 keep, == 8 duplicate, else drop.
     * Runs inside the typed eval kernels (the earlier `flatten(transform(..))`
@@ -46,112 +74,50 @@ object EvalMetrics {
     */
   private def perturbItems(url: String, items: Seq[String]): Seq[String] =
     items.flatMap { x =>
-      val m = h32s(url + "|" + x) % 10
+      val m = H32Expression.compute(url + "|" + x) % 10
       if (m < 8) x :: Nil else if (m == 8) x :: x :: Nil else Nil
     }
 
-  /** "key\u0001value" item strings from parallel key/value field arrays. */
-  private def kvItems(ks: Seq[String], vs: Seq[String]): Seq[String] =
-    ks.iterator.zip(vs.iterator).map { case (k, v) => k + "\u0001" + v }.toVector
+  /** url plus the golden fields of `a` and `b`, nothing else. */
+  private def golden(spark: SparkSession, goldenPath: String, a: Gran, b: Gran): DataFrame =
+    spark.read.parquet(goldenPath).select(col("url") +: (a.fields ++ b.fields).map(col): _*)
 
-  /** "head:tail" strings from a flattened multimap (head, tails[]) pair. */
-  private def multiItems(heads: Seq[Int], tails: Seq[Seq[Int]]): Seq[String] =
-    heads.iterator.zip(tails.iterator)
-      .flatMap { case (h, ts) => ts.map(t => s"$h:$t") }.toVector
+  /** The golden items of `a` and `b` in one [[golden]] row. */
+  private def goldItems(r: Row, a: Gran, b: Gran): Seq[Seq[String]] =
+    Seq(a.items(r, 1), b.items(r, 1 + a.fields.size))
 
-  /** "head:tail" strings from parallel head/tail field arrays. */
-  private def pairItems(heads: Seq[Int], tails: Seq[Int]): Seq[String] =
-    heads.iterator.zip(tails.iterator).map { case (h, t) => s"$h:$t" }.toVector
-
-  def perturbedEval(spark: SparkSession, goldenPath: String): DataFrame = {
+  private def perturbedCounts(spark: SparkSession, goldenPath: String, a: Gran, b: Gran): DataFrame = {
     import spark.implicits._
-    // field extraction via GetArrayStructFields (a codegen'd projection, no
-    // interpreted lambda); item assembly + perturbation live in the typed
-    // kernel alongside the membership counting
-    val g = spark.read.parquet(goldenPath)
-      .select(col("url"), col("kv.key").as("gk"), col("kv.value").as("gv"),
-        col("lines.text").as("gln"))
-    val counts = g
-      .as[(String, Seq[String], Seq[String], Seq[String])]
-      .map { case (url, gk, gv, gln) =>
-        val gkv = kvItems(gk, gv)
-        val kv = PairMetrics.membershipCounts(perturbItems(url, gkv), gkv)
-        val ln = PairMetrics.membershipCounts(perturbItems(url, gln), gln)
-        EvalCounts(url, kv.pred, kv.gt, kv.correct, ln.pred, ln.gt, ln.correct)
+    val counts = golden(spark, goldenPath, a, b)
+      .map { r =>
+        val url = r.getString(0)
+        val Seq(ca, cb) = goldItems(r, a, b)
+          .map(g => PairMetrics.membershipCounts(perturbItems(url, g), g))
+        (url, ca.pred, ca.gt, ca.correct, cb.pred, cb.gt, cb.correct)
       }
-    val agged = counts.dropDuplicates("url").agg(
-      count(lit(1)).as("nDocs"),
-      sum("kvPred").as("kvPred"), sum("kvGt").as("kvGt"), sum("kvCorrect").as("kvCorrect"),
-      sum("lnPred").as("lnPred"), sum("lnGt").as("lnGt"), sum("lnCorrect").as("lnCorrect"))
-    withPrf(withPrf(agged, "kv"), "ln")
+      .toDF("url" +: (a.counted ++ b.counted): _*)
+    val agged = counts.dropDuplicates("url")
+      .agg(count(lit(1)).as("nDocs"), (a.counted ++ b.counted).map(c => sum(c).as(c)): _*)
+    Seq(a, b).foldLeft(agged) { (df, x) =>
+      val (p, r, f1) = Eval.prf(x.name)
+      df.withColumn(s"${x.name}PMicro", micro(p))
+        .withColumn(s"${x.name}RMicro", micro(r))
+        .withColumn(s"${x.name}F1Micro", micro(f1))
+    }
   }
 
-  private def withPrf(df: DataFrame, g: String): DataFrame = {
-    val p = col(s"${g}Correct").cast("double") / col(s"${g}Pred").cast("double")
-    val r = col(s"${g}Correct").cast("double") / col(s"${g}Gt").cast("double")
-    df.withColumn(s"${g}P", when(col(s"${g}Pred") > 0, p).otherwise(lit(0.0)))
-      .withColumn(s"${g}R", when(col(s"${g}Gt") > 0, r).otherwise(lit(0.0)))
-      .withColumn(s"${g}PMicro", micro(col(s"${g}P")))
-      .withColumn(s"${g}RMicro", micro(col(s"${g}R")))
-      .withColumn(s"${g}F1Micro",
-        micro(when(col(s"${g}P") + col(s"${g}R") > 0,
-          lit(2.0) * col(s"${g}P") * col(s"${g}R") / (col(s"${g}P") + col(s"${g}R")))
-          .otherwise(lit(0.0))))
-      .drop(s"${g}P", s"${g}R")
-  }
+  def perturbedEval(spark: SparkSession, goldenPath: String): DataFrame =
+    perturbedCounts(spark, goldenPath, Kv, Line)
 
-  /** Linking-granularity eval (SURVEY.md §2 E6 multimap flatten + E1): the
-    * entHead multimap flattens to "head:tail" pair strings, groupHead pairs
-    * likewise; same perturbation and membership counting as the KV eval.
+  /** Linking granularities (SURVEY.md §2 E6 multimap flatten + E1). */
+  def perturbedLinkEval(spark: SparkSession, goldenPath: String): DataFrame =
+    perturbedCounts(spark, goldenPath, EntHead, GroupHead)
+
+  /** Tail granularities: with e1 and e2 they complete the reference's six
+    * (pipeline/evaluation.py:210-665).
     */
-  def perturbedLinkEval(spark: SparkSession, goldenPath: String): DataFrame = {
-    import spark.implicits._
-    val g = spark.read.parquet(goldenPath)
-      .select(col("url"),
-        col("entHead.head").as("ehh"), col("entHead.tails").as("eht"),
-        col("groupHead.head").as("ghh"), col("groupHead.tail").as("ght"))
-    val counts = g
-      .as[(String, Seq[Int], Seq[Seq[Int]], Seq[Int], Seq[Int])]
-      .map { case (url, ehh, eht, ghh, ght) =>
-        val geh = multiItems(ehh, eht)
-        val ggh = pairItems(ghh, ght)
-        val e = PairMetrics.membershipCounts(perturbItems(url, geh), geh)
-        val r = PairMetrics.membershipCounts(perturbItems(url, ggh), ggh)
-        EvalCounts(url, e.pred, e.gt, e.correct, r.pred, r.gt, r.correct)
-      }
-    val agged = counts.dropDuplicates("url").agg(
-      count(lit(1)).as("nDocs"),
-      sum("kvPred").as("ehPred"), sum("kvGt").as("ehGt"), sum("kvCorrect").as("ehCorrect"),
-      sum("lnPred").as("ghPred"), sum("lnGt").as("ghGt"), sum("lnCorrect").as("ghCorrect"))
-    withPrf(withPrf(agged, "eh"), "gh")
-  }
-
-  /** entTail/groupTail granularities (completes the reference's six,
-    * pipeline/evaluation.py:210-665): entTail is the tail->heads multimap
-    * flattened to "tail:head" strings, groupTail the t2t pair list; same
-    * perturbation and membership counting as the other eval queries.
-    */
-  def perturbedTailEval(spark: SparkSession, goldenPath: String): DataFrame = {
-    import spark.implicits._
-    val g = spark.read.parquet(goldenPath)
-      .select(col("url"),
-        col("entTail.head").as("eth"), col("entTail.tails").as("ett"),
-        col("groupTail.head").as("glh"), col("groupTail.tail").as("glt"))
-    val counts = g
-      .as[(String, Seq[Int], Seq[Seq[Int]], Seq[Int], Seq[Int])]
-      .map { case (url, eth, ett, glh, glt) =>
-        val get = multiItems(eth, ett)
-        val ggl = pairItems(glh, glt)
-        val e = PairMetrics.membershipCounts(perturbItems(url, get), get)
-        val r = PairMetrics.membershipCounts(perturbItems(url, ggl), ggl)
-        EvalCounts(url, e.pred, e.gt, e.correct, r.pred, r.gt, r.correct)
-      }
-    val agged = counts.dropDuplicates("url").agg(
-      count(lit(1)).as("nDocs"),
-      sum("kvPred").as("etPred"), sum("kvGt").as("etGt"), sum("kvCorrect").as("etCorrect"),
-      sum("lnPred").as("glPred"), sum("lnGt").as("glGt"), sum("lnCorrect").as("glCorrect"))
-    withPrf(withPrf(agged, "et"), "gl")
-  }
+  def perturbedTailEval(spark: SparkSession, goldenPath: String): DataFrame =
+    perturbedCounts(spark, goldenPath, EntTail, GroupTail)
 
   /** Per-sample TP/FP/FN detail rows over the perturbed prediction — the
     * reference's `--save_eval_detail` record shape (evaluation.py:72-93)
@@ -160,67 +126,69 @@ object EvalMetrics {
     */
   def perturbedDetail(spark: SparkSession, goldenPath: String): DataFrame = {
     import spark.implicits._
-    val g = spark.read.parquet(goldenPath)
-      .select(col("url"), col("kv.key").as("gk"), col("kv.value").as("gv"),
-        col("lines.text").as("gln"))
-    g.as[(String, Seq[String], Seq[String], Seq[String])]
-      .flatMap { case (url, gk, gv, gln) =>
-        val gkv = kvItems(gk, gv)
-        val pkv = perturbItems(url, gkv)
-        val pln = perturbItems(url, gln)
-        PairMetrics.detail(pkv, gkv).map { case (v, i) => (url, "kv", v, i) } ++
-          PairMetrics.detail(pln, gln).map { case (v, i) => (url, "line", v, i) }
+    golden(spark, goldenPath, Kv, Line)
+      .flatMap { r =>
+        val url = r.getString(0)
+        Seq("kv", "line").zip(goldItems(r, Kv, Line)).flatMap { case (name, g) =>
+          PairMetrics.detail(perturbItems(url, g), g).map { case (v, i) => (url, name, v, i) }
+        }
       }
       .toDF("url", "granularity", "verdict", "item")
       .orderBy("url", "granularity", "verdict", "item")
   }
 
-  def perturbedTailEvalSql(goldenGlob: String): String = {
-    def perturbSql(items: String): String = {
-      val m = sqlH32("url || '|' || x") + " % 10"
-      s"flatten(list_transform($items, x -> CASE WHEN $m < 8 THEN [x] WHEN $m = 8 THEN [x,x] ELSE [] END))"
-    }
-    def prf(g: String): String = {
-      val p = s"CASE WHEN ${g}Pred > 0 THEN CAST(${g}Correct AS DOUBLE)/CAST(${g}Pred AS DOUBLE) ELSE 0.0 END"
-      val r = s"CASE WHEN ${g}Gt > 0 THEN CAST(${g}Correct AS DOUBLE)/CAST(${g}Gt AS DOUBLE) ELSE 0.0 END"
-      s"""${sqlMicro(p)} AS ${g}PMicro, ${sqlMicro(r)} AS ${g}RMicro,
-         |  ${sqlMicro(s"CASE WHEN ($p) + ($r) > 0 THEN 2.0*($p)*($r)/(($p) + ($r)) ELSE 0.0 END")} AS ${g}F1Micro""".stripMargin
-    }
+  // ----- DuckDB oracles -----
+
+  private def perturbSql(items: String): String = {
+    val m = sqlH32("url || '|' || x") + " % 10"
+    s"flatten(list_transform($items, x -> CASE WHEN $m < 8 THEN [x] WHEN $m = 8 THEN [x,x] ELSE [] END))"
+  }
+
+  private def prfSql(g: String): String = {
+    val p = s"CASE WHEN ${g}Pred > 0 THEN CAST(${g}Correct AS DOUBLE)/CAST(${g}Pred AS DOUBLE) ELSE 0.0 END"
+    val r = s"CASE WHEN ${g}Gt > 0 THEN CAST(${g}Correct AS DOUBLE)/CAST(${g}Gt AS DOUBLE) ELSE 0.0 END"
+    s"""${sqlMicro(p)} AS ${g}PMicro, ${sqlMicro(r)} AS ${g}RMicro,
+       |  ${sqlMicro(s"CASE WHEN ($p) + ($r) > 0 THEN 2.0*($p)*($r)/(($p) + ($r)) ELSE 0.0 END")} AS ${g}F1Micro""".stripMargin
+  }
+
+  /** The `g` (golden items) and `p` (golden + perturbed items) CTEs. */
+  private def itemsSql(goldenGlob: String, a: Gran, b: Gran): String =
     s"""WITH g AS (SELECT url,
-       |    flatten(list_transform(entTail, x -> list_transform(x.tails, t -> x.head || ':' || t))) AS get1,
-       |    list_transform(groupTail, p -> p.head || ':' || p.tail) AS ggl
+       |    ${a.sqlItems} AS ${a.gold},
+       |    ${b.sqlItems} AS ${b.gold}
        |  FROM read_parquet('$goldenGlob')),
-       |p AS (SELECT url, get1, ggl, ${perturbSql("get1")} AS pet, ${perturbSql("ggl")} AS pgl FROM g),
+       |p AS (SELECT url, ${a.gold}, ${b.gold}, ${perturbSql(a.gold)} AS ${a.pred}, ${perturbSql(b.gold)} AS ${b.pred} FROM g)""".stripMargin
+
+  private def evalSql(goldenGlob: String, a: Gran, b: Gran): String = {
+    def perDoc(x: Gran): String =
+      s"""CAST(len(${x.pred}) AS BIGINT) AS ${x.name}Pred, CAST(len(${x.gold}) AS BIGINT) AS ${x.name}Gt,
+         |    CAST(len(list_filter(${x.pred}, x -> list_contains(${x.gold}, x))) AS BIGINT) AS ${x.name}Correct""".stripMargin
+    def summed(x: Gran): String =
+      s"""CAST(sum(${x.name}Pred) AS BIGINT) AS ${x.name}Pred, CAST(sum(${x.name}Gt) AS BIGINT) AS ${x.name}Gt,
+         |    CAST(sum(${x.name}Correct) AS BIGINT) AS ${x.name}Correct""".stripMargin
+    s"""${itemsSql(goldenGlob, a, b)},
        |c0 AS (SELECT url,
-       |    CAST(len(pet) AS BIGINT) AS etPred, CAST(len(get1) AS BIGINT) AS etGt,
-       |    CAST(len(list_filter(pet, x -> list_contains(get1, x))) AS BIGINT) AS etCorrect,
-       |    CAST(len(pgl) AS BIGINT) AS glPred, CAST(len(ggl) AS BIGINT) AS glGt,
-       |    CAST(len(list_filter(pgl, x -> list_contains(ggl, x))) AS BIGINT) AS glCorrect
+       |    ${perDoc(a)},
+       |    ${perDoc(b)}
        |  FROM p),
        |c AS (SELECT * FROM (SELECT c0.*, row_number() OVER (PARTITION BY url ORDER BY url) AS rn
        |  FROM c0) WHERE rn = 1),
        |a AS (SELECT CAST(count(*) AS BIGINT) AS nDocs,
-       |    CAST(sum(etPred) AS BIGINT) AS etPred, CAST(sum(etGt) AS BIGINT) AS etGt,
-       |    CAST(sum(etCorrect) AS BIGINT) AS etCorrect,
-       |    CAST(sum(glPred) AS BIGINT) AS glPred, CAST(sum(glGt) AS BIGINT) AS glGt,
-       |    CAST(sum(glCorrect) AS BIGINT) AS glCorrect
+       |    ${summed(a)},
+       |    ${summed(b)}
        |  FROM c)
-       |SELECT nDocs, etPred, etGt, etCorrect, glPred, glGt, glCorrect,
-       |  ${prf("et")},
-       |  ${prf("gl")}
+       |SELECT nDocs, ${(a.counted ++ b.counted).mkString(", ")},
+       |  ${prfSql(a.name)},
+       |  ${prfSql(b.name)}
        |FROM a""".stripMargin
   }
 
-  def perturbedDetailSql(goldenGlob: String): String = {
-    def perturbSql(items: String): String = {
-      val m = sqlH32("url || '|' || x") + " % 10"
-      s"flatten(list_transform($items, x -> CASE WHEN $m < 8 THEN [x] WHEN $m = 8 THEN [x,x] ELSE [] END))"
-    }
-    s"""WITH g AS (SELECT url,
-       |    list_transform(kv, x -> x."key" || chr(1) || x."value") AS gkv,
-       |    list_transform(lines, l -> l.text) AS gln
-       |  FROM read_parquet('$goldenGlob')),
-       |p AS (SELECT url, gkv, gln, ${perturbSql("gkv")} AS pkv, ${perturbSql("gln")} AS pln FROM g),
+  def perturbedEvalSql(goldenGlob: String): String = evalSql(goldenGlob, Kv, Line)
+  def perturbedLinkEvalSql(goldenGlob: String): String = evalSql(goldenGlob, EntHead, GroupHead)
+  def perturbedTailEvalSql(goldenGlob: String): String = evalSql(goldenGlob, EntTail, GroupTail)
+
+  def perturbedDetailSql(goldenGlob: String): String =
+    s"""${itemsSql(goldenGlob, Kv, Line)},
        |tpfp AS (
        |  SELECT url, 'kv' AS granularity,
        |    CASE WHEN list_contains(gkv, x) THEN 'TP' ELSE 'FP' END AS verdict, x AS item
@@ -238,77 +206,4 @@ object EvalMetrics {
        |SELECT url, granularity, verdict, item
        |FROM (SELECT * FROM tpfp UNION ALL SELECT * FROM fn)
        |ORDER BY url, granularity, verdict, item""".stripMargin
-  }
-
-  def perturbedLinkEvalSql(goldenGlob: String): String = {
-    def perturbSql(items: String): String = {
-      val m = sqlH32("url || '|' || x") + " % 10"
-      s"flatten(list_transform($items, x -> CASE WHEN $m < 8 THEN [x] WHEN $m = 8 THEN [x,x] ELSE [] END))"
-    }
-    def prf(g: String): String = {
-      val p = s"CASE WHEN ${g}Pred > 0 THEN CAST(${g}Correct AS DOUBLE)/CAST(${g}Pred AS DOUBLE) ELSE 0.0 END"
-      val r = s"CASE WHEN ${g}Gt > 0 THEN CAST(${g}Correct AS DOUBLE)/CAST(${g}Gt AS DOUBLE) ELSE 0.0 END"
-      s"""${sqlMicro(p)} AS ${g}PMicro, ${sqlMicro(r)} AS ${g}RMicro,
-         |  ${sqlMicro(s"CASE WHEN ($p) + ($r) > 0 THEN 2.0*($p)*($r)/(($p) + ($r)) ELSE 0.0 END")} AS ${g}F1Micro""".stripMargin
-    }
-    s"""WITH g AS (SELECT url,
-       |    flatten(list_transform(entHead, x -> list_transform(x.tails, t -> x.head || ':' || t))) AS geh,
-       |    list_transform(groupHead, p -> p.head || ':' || p.tail) AS ggh
-       |  FROM read_parquet('$goldenGlob')),
-       |p AS (SELECT url, geh, ggh, ${perturbSql("geh")} AS peh, ${perturbSql("ggh")} AS pgh FROM g),
-       |c0 AS (SELECT url,
-       |    CAST(len(peh) AS BIGINT) AS ehPred, CAST(len(geh) AS BIGINT) AS ehGt,
-       |    CAST(len(list_filter(peh, x -> list_contains(geh, x))) AS BIGINT) AS ehCorrect,
-       |    CAST(len(pgh) AS BIGINT) AS ghPred, CAST(len(ggh) AS BIGINT) AS ghGt,
-       |    CAST(len(list_filter(pgh, x -> list_contains(ggh, x))) AS BIGINT) AS ghCorrect
-       |  FROM p),
-       |c AS (SELECT * FROM (SELECT c0.*, row_number() OVER (PARTITION BY url ORDER BY url) AS rn
-       |  FROM c0) WHERE rn = 1),
-       |a AS (SELECT CAST(count(*) AS BIGINT) AS nDocs,
-       |    CAST(sum(ehPred) AS BIGINT) AS ehPred, CAST(sum(ehGt) AS BIGINT) AS ehGt,
-       |    CAST(sum(ehCorrect) AS BIGINT) AS ehCorrect,
-       |    CAST(sum(ghPred) AS BIGINT) AS ghPred, CAST(sum(ghGt) AS BIGINT) AS ghGt,
-       |    CAST(sum(ghCorrect) AS BIGINT) AS ghCorrect
-       |  FROM c)
-       |SELECT nDocs, ehPred, ehGt, ehCorrect, ghPred, ghGt, ghCorrect,
-       |  ${prf("eh")},
-       |  ${prf("gh")}
-       |FROM a""".stripMargin
-  }
-
-  def perturbedEvalSql(goldenGlob: String): String = {
-    def perturbSql(items: String): String = {
-      val m = sqlH32("url || '|' || x") + " % 10"
-      s"flatten(list_transform($items, x -> CASE WHEN $m < 8 THEN [x] WHEN $m = 8 THEN [x,x] ELSE [] END))"
-    }
-    def prf(g: String): String = {
-      val p = s"CASE WHEN ${g}Pred > 0 THEN CAST(${g}Correct AS DOUBLE)/CAST(${g}Pred AS DOUBLE) ELSE 0.0 END"
-      val r = s"CASE WHEN ${g}Gt > 0 THEN CAST(${g}Correct AS DOUBLE)/CAST(${g}Gt AS DOUBLE) ELSE 0.0 END"
-      s"""${sqlMicro(p)} AS ${g}PMicro, ${sqlMicro(r)} AS ${g}RMicro,
-         |  ${sqlMicro(s"CASE WHEN ($p) + ($r) > 0 THEN 2.0*($p)*($r)/(($p) + ($r)) ELSE 0.0 END")} AS ${g}F1Micro""".stripMargin
-    }
-    s"""WITH g AS (SELECT url,
-       |    list_transform(kv, x -> x."key" || chr(1) || x."value") AS gkv,
-       |    list_transform(lines, l -> l.text) AS gln
-       |  FROM read_parquet('$goldenGlob')),
-       |p AS (SELECT url, gkv, gln, ${perturbSql("gkv")} AS pkv, ${perturbSql("gln")} AS pln FROM g),
-       |c0 AS (SELECT url,
-       |    CAST(len(pkv) AS BIGINT) AS kvPred, CAST(len(gkv) AS BIGINT) AS kvGt,
-       |    CAST(len(list_filter(pkv, x -> list_contains(gkv, x))) AS BIGINT) AS kvCorrect,
-       |    CAST(len(pln) AS BIGINT) AS lnPred, CAST(len(gln) AS BIGINT) AS lnGt,
-       |    CAST(len(list_filter(pln, x -> list_contains(gln, x))) AS BIGINT) AS lnCorrect
-       |  FROM p),
-       |c AS (SELECT * FROM (SELECT c0.*, row_number() OVER (PARTITION BY url ORDER BY url) AS rn
-       |  FROM c0) WHERE rn = 1),
-       |a AS (SELECT CAST(count(*) AS BIGINT) AS nDocs,
-       |    CAST(sum(kvPred) AS BIGINT) AS kvPred, CAST(sum(kvGt) AS BIGINT) AS kvGt,
-       |    CAST(sum(kvCorrect) AS BIGINT) AS kvCorrect,
-       |    CAST(sum(lnPred) AS BIGINT) AS lnPred, CAST(sum(lnGt) AS BIGINT) AS lnGt,
-       |    CAST(sum(lnCorrect) AS BIGINT) AS lnCorrect
-       |  FROM c)
-       |SELECT nDocs, kvPred, kvGt, kvCorrect, lnPred, lnGt, lnCorrect,
-       |  ${prf("kv")},
-       |  ${prf("ln")}
-       |FROM a""".stripMargin
-  }
 }

@@ -434,7 +434,7 @@ object Prep {
       nSub: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = pages.select(col("url"),
-      regexp_extract(col("url"), "^https?://([^/]+)", 1).as("host"),
+      urlAuthority(col("url")).as("host"),
       h32(concat(col("url"), lit(":" + salt))).as("pri"))
     // url breaks h32 ties (collisions are rare but must stay deterministic)
     val sub = Window
@@ -456,7 +456,7 @@ object Prep {
     s"""SELECT host, url, CAST(rn AS INT) AS rn FROM (
        |  SELECT host, url,
        |    ROW_NUMBER() OVER (PARTITION BY host ORDER BY pri, url) AS rn
-       |  FROM (SELECT url, regexp_extract(url, '^https?://([^/]+)', 1) AS host,
+       |  FROM (SELECT url, ${sqlUrlAuthority("url")} AS host,
        |      ${sqlH32(s"url || ':$salt'")} AS pri
        |    FROM read_parquet('$pagesGlob', hive_partitioning=1)))
        |WHERE rn <= $k ORDER BY host, rn""".stripMargin
@@ -469,7 +469,7 @@ object Prep {
     */
   def crawlFreshness(pages: DataFrame): DataFrame =
     pages
-      .select(regexp_extract(col("url"), "^https?://([^/]+)", 1).as("host"),
+      .select(urlAuthority(col("url")).as("host"),
         col("warc_ts").cast("timestamp").as("ts"))
       .groupBy(col("host"))
       .agg(count(lit(1)).as("n_pages"),
@@ -480,7 +480,7 @@ object Prep {
       .orderBy("host")
 
   def crawlFreshnessSql(pagesGlob: String): String =
-    s"""SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host,
+    s"""SELECT ${sqlUrlAuthority("url")} AS host,
        |  CAST(count(*) AS BIGINT) AS n_pages,
        |  min(warc_ts) AS oldest, max(warc_ts) AS newest,
        |  CAST((epoch_ms(max(warc_ts)) - epoch_ms(min(warc_ts))) // 86400000 AS BIGINT)

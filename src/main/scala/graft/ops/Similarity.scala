@@ -32,15 +32,9 @@ object Similarity {
   /** Deterministic LSH hyperplanes in [-1, 1): plane p, component i from
     * md5("p,i") — reproducible in SQL, no RNG, no stored model artifact.
     */
-  lazy val planes: IndexedSeq[IndexedSeq[Double]] = {
-    def h32(s: String): Long = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8"))
-      java.lang.Long.parseLong(d.take(4).map(b => f"$b%02x").mkString, 16)
-    }
+  lazy val planes: IndexedSeq[IndexedSeq[Double]] =
     (0 until NumPlanes).map(p =>
-      (1 to Dim).map(i => h32(s"$p,$i") / 2147483648.0 - 1.0))
-  }
+      (1 to Dim).map(i => graft.functions.H32Expression.compute(s"$p,$i") / 2147483648.0 - 1.0))
 
   /** Rows + precomputed L2 norm: sqrt(dot(v,v)) once per vector instead of
     * per pair (the pair join evaluates only one dot; sqrt of the same fold

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.engine.{DocOut, Pipeline}
+import graft.engine.{DocOut, PageSlim, Pipeline}
 
 /** Structured Streaming surface of the engine.
   *
@@ -40,13 +40,16 @@ object Streams {
     * with checkpointLocation for exactly-once file sinks — StreamsSpec
     * drives that path through a stop + restart and asserts no dupes/loss
     * vs the batch result). `sourceOptions` passes file-source knobs
-    * (e.g. maxFilesPerTrigger for bounded micro-batches).
+    * (e.g. maxFilesPerTrigger for bounded micro-batches). The source
+    * declares the [[PageSlim]] schema, as [[Pipeline.readPages]] does: no
+    * Spark job infers it, and the stream can start over an empty landing
+    * directory.
     */
   def extractStream(spark: SparkSession, pagesDir: String,
       buckets: Int = Pipeline.DefaultBuckets,
       sourceOptions: Map[String, String] = Map.empty): Dataset[DocOut] = {
-    val schema = spark.read.parquet(pagesDir).schema
-    val pages = spark.readStream.options(sourceOptions).schema(schema).parquet(pagesDir)
+    val pages = spark.readStream.options(sourceOptions)
+      .schema(Encoders.product[PageSlim].schema).parquet(pagesDir)
     Pipeline.extract(pages, buckets)
   }
 

@@ -310,6 +310,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(byVerdict("TP") == expected)
   }
 
+  test("metricRow and detailRows agree: a kv pair matches on (key, value), not on its printed item") {
+    import spark.implicits._
+    def doc(key: String, value: String) = DocOut("u", "h", "en", 0, 0, 0, 1, 0L, "",
+      Seq.empty, Seq(KvOut(key, value, Seq.empty, Seq.empty)),
+      Seq.empty, Seq.empty, Seq.empty, Seq.empty, Seq.empty)
+    // both pairs print as "a\u0001b\u0001c"
+    val pred = doc("a\u0001b", "c")
+    val gold = doc("a", "b\u0001c")
+    val m = Eval.metricRow("u", pred, gold)
+    assert((m.kvPred, m.kvGt, m.kvCorrect) == ((1L, 1L, 0L)))
+    val kv = Eval.detailRows(Seq(pred).toDS(), Seq(gold).toDS())
+      .filter(col("granularity") === "kv").collect()
+    assert(kv.map(_.verdict).sorted.toSeq == Seq("FN", "FP"), kv.mkString(", "))
+  }
+
   test("golden corpus urls are unique (eval fname-dedupe parity precondition)") {
     // The eval oracles mirror the engine's per-url dedupe with an arbitrary
     // row_number pick; that is only deterministic while urls are unique.

@@ -3,7 +3,7 @@ package graft.html
 import org.scalatest.funsuite.AnyFunSuite
 import graft.app.Corpus
 import graft.core._
-import graft.engine.Pipeline
+import graft.engine.{Eval, Pipeline}
 import graft.synth.CorpusGen
 
 /** The engine-side mirror of the reference's GT round-trip invariant
@@ -51,9 +51,13 @@ class RoundTripSpec extends AnyFunSuite {
       val sample = DocBuilder.build(ann)
       val pred = DocBuilder.decodeSample(sample)
       val gt = DocBuilder.decodeSample(sample, decodeGt = true)
-      val m = PairMetrics.docMetrics(ann.uid, pred, gt)
-      assert(m.kv.pred == m.kv.correct && m.kv.gt == m.kv.correct, s"doc $idx $m")
-      assert(m.line.pred == m.line.correct && m.line.gt == m.line.correct, s"doc $idx $m")
+      def out(d: DecodedDoc) = Pipeline.docOut(ann.uid, "en", Pipeline.DefaultBuckets, 0, d, 0L)
+      val m = Eval.metricRow(ann.uid, out(pred), out(gt))
+      val field = m.productElementNames.zip(m.productIterator).toMap
+      Eval.Granularities.foreach { g =>
+        val Seq(p, t, c) = Eval.countColumns(g.name).map(field)
+        assert(p == c && t == c, s"doc $idx ${g.name} $m")
+      }
     }
   }
 

@@ -929,6 +929,15 @@ class OpsSpec extends AnyFunSuite {
     assert(r1.getAs[Long]("kvPMicro") == 1000000L)
     assert(r1.getAs[Long]("kvRMicro") == 996934L)
     assert(r1.getAs[Long]("lnF1Micro") == 995542L)
+    // e2/e3: the same function over the link and tail granularities
+    val link = EvalMetrics.perturbedLinkEval(spark, Corpus.goldenPath(sfDir)).collect()(0)
+    val tail = EvalMetrics.perturbedTailEval(spark, Corpus.goldenPath(sfDir)).collect()(0)
+    Seq(link -> "eh", link -> "gh", tail -> "et", tail -> "gl").foreach { case (r, g) =>
+      val (pred, gt, correct) =
+        (r.getAs[Long](s"${g}Pred"), r.getAs[Long](s"${g}Gt"), r.getAs[Long](s"${g}Correct"))
+      assert(gt > 0 && correct == pred && pred != gt, s"$g: $pred $gt $correct")
+      assert(r.getAs[Long](s"${g}PMicro") == 1000000L, g)
+    }
   }
 
   // ---------- as-of join ----------
@@ -1089,9 +1098,12 @@ class OpsSpec extends AnyFunSuite {
       .as[(String, String)].collect().toMap
     val capHost = Prep.hostCap(pages, k = cases.size).select("url", "host")
       .as[(String, String)].collect().toMap
+    val authority = pages.select(col("url"), ColFns.urlAuthority(col("url")))
+      .as[(String, String)].collect().toMap
     cases.foreach { case (url, h, ch) =>
       assert(urlHost(url) == h, s"urlHost($url)")
       assert(capHost(url) == ch, s"hostCap host of $url")
+      assert(authority(url) == ch, s"urlAuthority($url)")
     }
   }
 

@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.app.Corpus
+import graft.engine.PageSlim
 import graft.streaming.Streams.EventRow
+import graft.synth.CorpusGen
 
 class StreamsSpec extends AnyFunSuite {
 
@@ -44,6 +46,36 @@ class StreamsSpec extends AnyFunSuite {
       .toDF().select("url", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(streamed == batch)
+  }
+
+  test("streaming extraction starts over an empty landing directory") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-empty-landing").toString
+    val inDir = s"$base/in"
+    new java.io.File(inDir).mkdirs()
+    val q = Streams.extractStream(spark, inDir)
+      .toDF().select("url", "text")
+      .writeStream.format("memory").queryName("sempty").outputMode("append").start()
+    q.processAllAvailable()
+    assert(spark.sql("SELECT * FROM sempty").count() == 0L)
+    // one wave, landed as an atomic single-file drop
+    val wave = (0L until 40L).map { i =>
+      val p = CorpusGen.pageFor(i)._2
+      PageSlim(p.url, p.html, p.lang)
+    }
+    wave.toDS().coalesce(1).write.parquet(s"$base/stage")
+    val part = new java.io.File(s"$base/stage").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$inDir/wave0.parquet"))
+    q.processAllAvailable()
+    q.stop()
+    val streamed = spark.sql("SELECT url, text FROM sempty").collect()
+      .map(r => r.getString(0) -> r.getString(1))
+    val batch = graft.engine.Pipeline.extract(spark.read.parquet(s"$inDir/wave0.parquet"))
+      .toDF().select("url", "text").collect()
+      .map(r => r.getString(0) -> r.getString(1))
+    assert(batch.length == 40)
+    assert(streamed.length == batch.length && streamed.toMap == batch.toMap)
   }
 
   test("watermarked hourly window aggregation") {
