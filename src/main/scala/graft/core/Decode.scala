@@ -28,7 +28,16 @@ final case class DecodedDoc(
   /** Byte-identity target: the extracted main-content text of the page —
     * decoded lines joined by a single '\n'. Per-url invariant vs goldens.
     */
-  def extractedText: String = lines.iterator.map(_.text).mkString("\n")
+  def extractedText: String = {
+    val sb = new java.lang.StringBuilder
+    var first = true
+    lines.foreach { l =>
+      if (!first) sb.append('\n')
+      sb.append(l.text)
+      first = false
+    }
+    sb.toString
+  }
 }
 
 /** Exact port of the decode algebra in
@@ -48,37 +57,67 @@ object Decode {
     * gates.
     */
   sealed trait TokView {
-    def append(sb: java.lang.StringBuilder, k: Int): Unit
-    def bL(k: Int): Int
-    def bT(k: Int): Int
-    def bR(k: Int): Int
-    def bB(k: Int): Int
+    /** Appends the text of tokens s..eIncl. */
+    def appendSlice(sb: java.lang.StringBuilder, s: Int, eIncl: Int): Unit
+    /** Widens `box` (min x, min y, max x, max y) over tokens s..eIncl. */
+    def coverSlice(box: Array[Int], s: Int, eIncl: Int): Unit
+  }
+
+  @inline private def cover(box: Array[Int], l: Int, t: Int, r: Int, b: Int): Unit = {
+    if (l < box(0)) box(0) = l
+    if (t < box(1)) box(1) = t
+    if (r > box(2)) box(2) = r
+    if (b > box(3)) box(3) = b
   }
 
   final class SeqTokView(text: IndexedSeq[String], bbox: IndexedSeq[Vector[Int]])
       extends TokView {
-    def append(sb: java.lang.StringBuilder, k: Int): Unit = sb.append(text(k))
-    def bL(k: Int): Int = bbox(k)(0)
-    def bT(k: Int): Int = bbox(k)(1)
-    def bR(k: Int): Int = bbox(k)(2)
-    def bB(k: Int): Int = bbox(k)(3)
+    def appendSlice(sb: java.lang.StringBuilder, s: Int, eIncl: Int): Unit = {
+      var k = s
+      while (k <= eIncl) { sb.append(text(k)); k += 1 }
+    }
+    def coverSlice(box: Array[Int], s: Int, eIncl: Int): Unit = {
+      var k = s
+      while (k <= eIncl) {
+        val b = bbox(k)
+        cover(box, b(0), b(1), b(2), b(3))
+        k += 1
+      }
+    }
   }
 
   /** @param lineTexts kept-line text buffer; @param sLineText per-sorted-line
     * index into it; @param boxO flat 4-per-sorted-line original boxes;
     * @param tokSLine/@param tokStart/@param tokEnd per-token (sorted line,
-    * char range) triple.
+    * char range) triple. A line's tokens are consecutive and partition its
+    * text, so a slice takes one region append and one box per line.
     */
   final class CompactTokView(
       lineTexts: Array[String], sLineText: Array[Int], boxO: Array[Int],
       tokSLine: Array[Int], tokStart: Array[Int], tokEnd: Array[Int]
   ) extends TokView {
-    def append(sb: java.lang.StringBuilder, k: Int): Unit =
-      sb.append(lineTexts(sLineText(tokSLine(k))), tokStart(k), tokEnd(k))
-    def bL(k: Int): Int = boxO(tokSLine(k) * 4)
-    def bT(k: Int): Int = boxO(tokSLine(k) * 4 + 1)
-    def bR(k: Int): Int = boxO(tokSLine(k) * 4 + 2)
-    def bB(k: Int): Int = boxO(tokSLine(k) * 4 + 3)
+    /** Last token of the line run starting at token k, capped at eIncl. */
+    @inline private def runEnd(k: Int, eIncl: Int): Int = {
+      var e = k
+      while (e < eIncl && tokSLine(e + 1) == tokSLine(k)) e += 1
+      e
+    }
+    def appendSlice(sb: java.lang.StringBuilder, s: Int, eIncl: Int): Unit = {
+      var k = s
+      while (k <= eIncl) {
+        val e = runEnd(k, eIncl)
+        sb.append(lineTexts(sLineText(tokSLine(k))), tokStart(k), tokEnd(e))
+        k = e + 1
+      }
+    }
+    def coverSlice(box: Array[Int], s: Int, eIncl: Int): Unit = {
+      var k = s
+      while (k <= eIncl) {
+        val o = tokSLine(k) * 4
+        cover(box, boxO(o), boxO(o + 1), boxO(o + 2), boxO(o + 3))
+        k = runEnd(k, eIncl) + 1
+      }
+    }
   }
 
   /** @param text      token-parallel fetched substrings; `"".join` slices of
@@ -207,22 +246,13 @@ object Decode {
   ): DecodedDoc = {
     @inline def sliceText(s: Int, eIncl: Int): String = {
       val sb = new java.lang.StringBuilder
-      var k = s
-      while (k <= eIncl) { view.append(sb, k); k += 1 }
+      view.appendSlice(sb, s, eIncl)
       sb.toString
     }
     @inline def sliceBox(s: Int, eIncl: Int): Vector[Int] = {
-      var minX, minY = Int.MaxValue
-      var maxX, maxY = Int.MinValue
-      var k = s
-      while (k <= eIncl) {
-        if (view.bL(k) < minX) minX = view.bL(k)
-        if (view.bT(k) < minY) minY = view.bT(k)
-        if (view.bR(k) > maxX) maxX = view.bR(k)
-        if (view.bB(k) > maxY) maxY = view.bB(k)
-        k += 1
-      }
-      Vector(minX, minY, maxX, maxY)
+      val box = Array(Int.MaxValue, Int.MaxValue, Int.MinValue, Int.MinValue)
+      view.coverSlice(box, s, eIncl)
+      Vector(box(0), box(1), box(2), box(3))
     }
 
     // --- line assembly (decode.py:205-212) ---
@@ -243,24 +273,14 @@ object Decode {
     // on this hot path.
     final class Walk(headIdx: Int, firstTailIdx: Int) {
       val sb = new java.lang.StringBuilder
-      var minX: Int = Int.MaxValue
-      var minY: Int = Int.MaxValue
-      var maxX: Int = Int.MinValue
-      var maxY: Int = Int.MinValue
+      val bounds: Array[Int] = Array(Int.MaxValue, Int.MaxValue, Int.MinValue, Int.MinValue)
       var currHead: Int = headIdx
       var currTail: Int = firstTailIdx
       def addSegment(s: Int, eIncl: Int): Unit = {
-        var k = s
-        while (k <= eIncl) {
-          view.append(sb, k)
-          if (view.bL(k) < minX) minX = view.bL(k)
-          if (view.bT(k) < minY) minY = view.bT(k)
-          if (view.bR(k) > maxX) maxX = view.bR(k)
-          if (view.bB(k) > maxY) maxY = view.bB(k)
-          k += 1
-        }
+        view.appendSlice(sb, s, eIncl)
+        view.coverSlice(bounds, s, eIncl)
       }
-      def box: Vector[Int] = Vector(minX, minY, maxX, maxY)
+      def box: Vector[Int] = Vector(bounds(0), bounds(1), bounds(2), bounds(3))
     }
     def walkChain(headIdx: Int, firstTailIdx: Int): Walk = {
       val w = new Walk(headIdx, firstTailIdx)

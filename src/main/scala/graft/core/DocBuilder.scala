@@ -33,10 +33,7 @@ final class DocSample(
     private[core] val tokSLine: Array[Int],
     private[core] val tokStart: Array[Int],
     private[core] val tokEnd: Array[Int],
-    // 4 ints per gt relation: (qStart, qEnd, aStart, aEnd) line-buffer
-    // slices — the relation strings themselves are spec/golden-only and
-    // materialize lazily below
-    private[core] val relSlices: Array[Int],
+    relationsOf: => Vector[(String, String)],
     val lineExtractionSpots: Array[Long],
     val entHeadSpots: Array[Long],
     val entTailSpots: Array[Long],
@@ -46,25 +43,10 @@ final class DocSample(
   def nTokens: Int = tokSLine.length
 
   /** Auxiliary gt relations (sibr.py:410-425) — entity-text pairs. Only
-    * specs and fixtures read these; the engine path never pays for the
-    * string assembly.
+    * specs and fixtures read these: the builder computes them on first
+    * read, so the engine path never walks them.
     */
-  lazy val relations: Vector[(String, String)] = {
-    def textOf(st: Int, en: Int): String = {
-      val sb = new java.lang.StringBuilder
-      var k = st
-      while (k < en) { sb.append(lineTextArr(k)); k += 1 }
-      sb.toString
-    }
-    val b = Vector.newBuilder[(String, String)]
-    var i = 0
-    while (i < relSlices.length) {
-      b += ((textOf(relSlices(i), relSlices(i + 1)),
-        textOf(relSlices(i + 2), relSlices(i + 3))))
-      i += 4
-    }
-    b.result()
-  }
+  lazy val relations: Vector[(String, String)] = relationsOf
 
   lazy val tokens: Vector[String] = {
     val b = Vector.newBuilder[String]
@@ -186,9 +168,9 @@ object DocBuilder {
     * channel (exactly the k canonicalize's tuple path would assign).
     */
   private final class SpotsBuilder {
-    private val b = mutable.ArrayBuilder.make[Long]
+    private val b = new mutable.ArrayBuilder.ofLong
     private var n = 0
-    def add(i: Int, j: Int, tag: Int): Unit = { b += Spots.pack(i, j, n, tag); n += 1 }
+    def add(i: Int, j: Int, tag: Int): Unit = { b.addOne(Spots.pack(i, j, n, tag)); n += 1 }
     def result(): Array[Long] = b.result()
   }
 
@@ -267,13 +249,14 @@ object DocBuilder {
     val sortedLines: Vector[LineInfo] = sortedIdx.map(allOrigLines(_))
 
     // compact sample storage: per-sorted-line (textIdx, norm box, orig box)
-    // + per-token (sorted line, char range) — no per-token objects
-    val sLineTextB = mutable.ArrayBuilder.make[Int]
-    val sLineBoxNB = mutable.ArrayBuilder.make[Int]
-    val sLineBoxOB = mutable.ArrayBuilder.make[Int]
-    val tokSLineB = mutable.ArrayBuilder.make[Int]
-    val tokStartB = mutable.ArrayBuilder.make[Int]
-    val tokEndB = mutable.ArrayBuilder.make[Int]
+    // + per-token (sorted line, char range) — no per-token objects. The
+    // builders take addOne, not +=: Growable's += is generic and boxes
+    val sLineTextB = new mutable.ArrayBuilder.ofInt
+    val sLineBoxNB = new mutable.ArrayBuilder.ofInt
+    val sLineBoxOB = new mutable.ArrayBuilder.ofInt
+    val tokSLineB = new mutable.ArrayBuilder.ofInt
+    val tokStartB = new mutable.ArrayBuilder.ofInt
+    val tokEndB = new mutable.ArrayBuilder.ofInt
     var nSLines = 0
     val lineExtractionSpots = new SpotsBuilder
     val entHeadSpots = new SpotsBuilder
@@ -301,19 +284,19 @@ object DocBuilder {
         val norm = Boxes.normalizeBboxPacked(c(0), c(1), c(2), c(3),
           doc.width, doc.height)
         val sIdx = nSLines
-        sLineTextB += ln.textIdx
-        sLineBoxNB += ((norm >>> 48) & 0xFFFF).toInt
-        sLineBoxNB += ((norm >>> 32) & 0xFFFF).toInt
-        sLineBoxNB += ((norm >>> 16) & 0xFFFF).toInt
-        sLineBoxNB += (norm & 0xFFFF).toInt
-        sLineBoxOB += ln.coords(0); sLineBoxOB += ln.coords(1)
-        sLineBoxOB += ln.coords(2); sLineBoxOB += ln.coords(3)
+        sLineTextB.addOne(ln.textIdx)
+        sLineBoxNB.addOne(((norm >>> 48) & 0xFFFF).toInt)
+        sLineBoxNB.addOne(((norm >>> 32) & 0xFFFF).toInt)
+        sLineBoxNB.addOne(((norm >>> 16) & 0xFFFF).toInt)
+        sLineBoxNB.addOne((norm & 0xFFFF).toInt)
+        sLineBoxOB.addOne(ln.coords(0)); sLineBoxOB.addOne(ln.coords(1))
+        sLineBoxOB.addOne(ln.coords(2)); sLineBoxOB.addOne(ln.coords(3))
         nSLines += 1
         var k = 0
         while (k < lineTokenLen) {
-          tokSLineB += sIdx
-          tokStartB += (if (k == 0) 0 else ln.ends(k - 1))
-          tokEndB += ln.ends(k)
+          tokSLineB.addOne(sIdx)
+          tokStartB.addOne(if (k == 0) 0 else ln.ends(k - 1))
+          tokEndB.addOne(ln.ends(k))
           k += 1
         }
         val start = currTokenIdx
@@ -386,23 +369,20 @@ object DocBuilder {
     }
 
     // --- auxiliary gt relations list (sibr.py:410-425) ---
-    // stored as line-buffer slice indices; the strings materialize lazily
-    // in DocSample.relations (spec/golden consumers only — the engine path
-    // never builds them)
-    val relSlicesB = mutable.ArrayBuilder.make[Int]
-    doc.kvEntity.foreach { rel =>
-      val qId = rel.fromId
-      val aId = rel.toId
-      val ok =
-        entityTextStart.contains(qId) && entityTextStart.contains(aId) &&
-          !emptyEntity.contains(qId) && !emptyEntity.contains(aId) &&
-          inScopeEntityId.contains(qId) && inScopeEntityId.contains(aId)
-      if (ok) {
-        relSlicesB += entityTextStart.getOrMinus1(qId)
-        relSlicesB += entityTextEnd.getOrMinus1(qId)
-        relSlicesB += entityTextStart.getOrMinus1(aId)
-        relSlicesB += entityTextEnd.getOrMinus1(aId)
+    // entity-text pairs, built only when DocSample.relations is first read
+    // (specs and fixtures; the engine path never reads them)
+    def relations: Vector[(String, String)] = {
+      val rels = Vector.newBuilder[(String, String)]
+      doc.kvEntity.foreach { rel =>
+        val qId = rel.fromId
+        val aId = rel.toId
+        val ok =
+          entityTextStart.contains(qId) && entityTextStart.contains(aId) &&
+            !emptyEntity.contains(qId) && !emptyEntity.contains(aId) &&
+            inScopeEntityId.contains(qId) && inScopeEntityId.contains(aId)
+        if (ok) rels += ((entityTextOf(qId), entityTextOf(aId)))
       }
+      rels.result()
     }
 
     val sample = new DocSample(
@@ -414,7 +394,7 @@ object DocBuilder {
       tokSLine = tokSLineB.result(),
       tokStart = tokStartB.result(),
       tokEnd = tokEndB.result(),
-      relSlices = relSlicesB.result(),
+      relationsOf = relations,
       lineExtractionSpots = lineExtractionSpots.result(),
       entHeadSpots = entHeadSpots.result(),
       entTailSpots = entTailSpots.result(),

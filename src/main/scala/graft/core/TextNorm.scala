@@ -61,13 +61,25 @@ object TextNorm {
     "¢" -> ""
   )
 
+  /** The chars that can change a string: every non-ASCII char of a
+    * replacement `from` (each `from` has one, incl. the Greek-omicron
+    * homoglyph in "Tοpic") and every char charF2H maps.
+    */
+  private val Triggers: Array[Boolean] = {
+    val t = new Array[Boolean](Char.MaxValue + 1)
+    replacements.foreach { case (from, _) =>
+      require(from.exists(_ >= 0x80), s"replacement '$from' has no trigger char")
+      from.foreach(c => if (c >= 0x80) t(c) = true)
+    }
+    (0 to Char.MaxValue).foreach(c => if (charF2H(c.toChar) != c.toChar) t(c) = true)
+    t
+  }
+
   def specialReplace(text: String): String = {
-    // ASCII fast path: every replacement `from` contains a char >= 0x80
-    // (incl. the Greek-omicron homoglyph in "Tοpic") and charF2H only maps
-    // code points >= 0x3000, so a pure-ASCII string is a fixpoint — one
-    // scan replaces 19 contains() passes + the f2h pass on the hot path
+    // fast path: a string without a trigger char is a fixpoint — one scan
+    // replaces 19 contains() passes + the f2h pass on the hot path
     var a = 0
-    while (a < text.length && text.charAt(a) < 0x80) a += 1
+    while (a < text.length && !Triggers(text.charAt(a))) a += 1
     if (a == text.length) return text
     var t = text
     var i = 0

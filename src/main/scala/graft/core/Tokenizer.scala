@@ -25,10 +25,18 @@ package graft.core
   */
 object Tokenizer {
 
-  @inline private def isCoreWordChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c)
+  private final val Other = 0
+  private final val Space = 1
+  private final val Word = 2
 
-  @inline private def isSpaceChar(c: Char): Boolean = TextNorm.pyIsSpace(c)
+  /** Every char's class, computed once: [[TextNorm.pyIsSpace]] first, then
+    * `Character.isLetterOrDigit`. One array read replaces the two
+    * `Character.getType` lookups the predicates cost per char.
+    */
+  private val CharClass: Array[Byte] = Array.tabulate(Char.MaxValue + 1) { i =>
+    val c = i.toChar
+    (if (TextNorm.pyIsSpace(c)) Space else if (Character.isLetterOrDigit(c)) Word else Other).toByte
+  }
 
   /** Offset form of [[tokenize]]: token END positions into `text`. Tokens
     * are contiguous and cover the string (token k spans
@@ -43,11 +51,12 @@ object Tokenizer {
     // first pass: count tokens (cores)
     var i = 0
     while (i < n) {
-      if (isSpaceChar(text.charAt(i))) i += 1
+      val cls = CharClass(text.charAt(i))
+      if (cls == Space) i += 1
       else {
         var end = i + 1
-        if (isCoreWordChar(text.charAt(i))) {
-          while (end < n && isCoreWordChar(text.charAt(end))) end += 1
+        if (cls == Word) {
+          while (end < n && CharClass(text.charAt(end)) == Word) end += 1
         }
         count += 1
         i = end
@@ -58,11 +67,12 @@ object Tokenizer {
     var k = 0
     i = 0
     while (i < n) {
-      if (isSpaceChar(text.charAt(i))) i += 1
+      val cls = CharClass(text.charAt(i))
+      if (cls == Space) i += 1
       else {
         var end = i + 1
-        if (isCoreWordChar(text.charAt(i))) {
-          while (end < n && isCoreWordChar(text.charAt(end))) end += 1
+        if (cls == Word) {
+          while (end < n && CharClass(text.charAt(end)) == Word) end += 1
         }
         ends(k) = end
         k += 1

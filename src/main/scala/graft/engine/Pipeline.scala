@@ -36,6 +36,15 @@ object Pipeline {
 
   final val DefaultBuckets = 256
 
+  /** The row encoders, derived once: deriving one runs Scala reflection
+    * over the case class, which `spark.implicits._` repeats on every call.
+    */
+  private lazy val PageSlimEnc: Encoder[PageSlim] = Encoders.product[PageSlim]
+  private lazy val DocOutEnc: Encoder[DocOut] = Encoders.product[DocOut]
+  private lazy val LineageEnc: Encoder[LineageRow] = Encoders.product[LineageRow]
+  private lazy val DigestPageEnc: Encoder[(String, Array[Byte], String, Long)] = Encoders.product
+  private lazy val DigestDocEnc: Encoder[(DocOut, Long)] = Encoders.product
+
   /** Cheap host extraction (no java.net.URI exceptions in the hot path). */
   def hostOf(url: String): String = {
     val schemeEnd = url.indexOf("://")
@@ -92,22 +101,19 @@ object Pipeline {
     * [[PageSlim]] schema: no footer pass over the input infers it.
     */
   def readPages(spark: SparkSession, pathOrTable: String): DataFrame =
-    if (pathOrTable.contains("/")) spark.read.schema(Encoders.product[PageSlim].schema).parquet(pathOrTable)
+    if (pathOrTable.contains("/")) spark.read.schema(PageSlimEnc.schema).parquet(pathOrTable)
     else spark.read.table(pathOrTable)
 
   /** Main extraction stage: prune to (url, html, lang) then run the typed
     * kernel over partitions. `html` never survives this stage.
     */
-  def extract(pages: DataFrame, buckets: Int = DefaultBuckets): Dataset[DocOut] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
+  def extract(pages: DataFrame, buckets: Int = DefaultBuckets): Dataset[DocOut] =
     pages
       .select(col("url"), col("html"), col("lang"))
-      .as[PageSlim]
-      .mapPartitions { it =>
+      .as(PageSlimEnc)
+      .mapPartitions { (it: Iterator[PageSlim]) =>
         it.map(p => extractDoc(p.url, p.html, p.lang, buckets))
-      }
-  }
+      }(DocOutEnc)
 
   /** [[extract]] plus an `html_x64` column — xxhash64 of the html bytes at
     * extract time, the change-detection key [[extractIncremental]] joins
@@ -116,18 +122,15 @@ object Pipeline {
     * through `mapPartitions` beside the decoded row, so the output is
     * itself a valid `prev` for the next increment.
     */
-  def extractWithDigest(pages: DataFrame, buckets: Int = DefaultBuckets): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
+  def extractWithDigest(pages: DataFrame, buckets: Int = DefaultBuckets): DataFrame =
     pages
       .select(col("url"), col("html"), col("lang"),
         xxhash64(col("html")).as("html_x64"))
-      .as[(String, Array[Byte], String, Long)]
-      .mapPartitions { it =>
+      .as(DigestPageEnc)
+      .mapPartitions { (it: Iterator[(String, Array[Byte], String, Long)]) =>
         it.map { case (u, h, l, x) => (extractDoc(u, h, l, buckets), x) }
-      }
+      }(DigestDocEnc)
       .select(col("_1.*"), col("_2").as("html_x64"))
-  }
 
   /** Digest-level incremental re-extraction — the fine-grained resume the
     * bucket-level lineage gate (SURVEY A8) cannot give: when a new crawl
@@ -167,9 +170,7 @@ object Pipeline {
     * the per-task cost side-output of SURVEY.md §4.2, and the signal a
     * scheduler needs to spot pathological buckets.
     */
-  def lineage(decoded: Dataset[DocOut]): Dataset[LineageRow] = {
-    val spark = decoded.sparkSession
-    import spark.implicits._
+  def lineage(decoded: Dataset[DocOut]): Dataset[LineageRow] =
     decoded
       .groupBy(col("bucket"))
       .agg(
@@ -179,8 +180,7 @@ object Pipeline {
         (sum(col("kernelUs")) / 1000L).cast("long").as("wallMs")
       )
       .withColumn("status", lit("done"))
-      .as[LineageRow]
-  }
+      .as(LineageEnc)
 
   /** [[lineage]]'s sums as one typed aggregate, for [[runFrom]] to observe:
     * bucket b's (docs, tokens, kv pairs, kernel micros) sit at `4b` to `4b+3`.
@@ -211,7 +211,7 @@ object Pipeline {
   /** The buckets `outDir`'s ledger marks done, or None when it has no ledger. */
   private def doneBuckets(spark: SparkSession, fs: FileSystem, outDir: String): Option[DataFrame] =
     if (!fs.exists(new Path(s"$outDir/lineage"))) None
-    else Some(spark.read.schema(Encoders.product[LineageRow].schema).parquet(s"$outDir/lineage")
+    else Some(spark.read.schema(LineageEnc.schema).parquet(s"$outDir/lineage")
       .filter(col("status") === "done")
       .select(col("bucket")))
 
@@ -270,7 +270,6 @@ object Pipeline {
       resume: Boolean = false,
       buckets: Int = DefaultBuckets
   ): Long = {
-    import spark.implicits._
     val fs = outFs(spark, outDir)
     val done = if (resume) doneBuckets(spark, fs, outDir) else None
     val pages = done match {
@@ -282,7 +281,7 @@ object Pipeline {
         spark.read.schema("bucket INT").parquet(s"$outDir/decoded")
           .select(col("bucket"), col("_metadata.file_path").as("file"))
           .join(broadcast(d), Seq("bucket"), "left_anti")
-          .select("file").distinct().as[String].collect()
+          .select("file").distinct().as(Encoders.STRING).collect()
           .foreach(f => fs.delete(new Path(new java.net.URI(f)), false))
         skipDone(pages0, d, buckets)
     }
@@ -298,7 +297,7 @@ object Pipeline {
     // one row per bucket with docs, wallMs truncated as lineage truncates it
     val rows = (0 until buckets).filter(b => t(4 * b) > 0).map(b =>
       LineageRow(b, t(4 * b), t(4 * b + 1), t(4 * b + 2), t(4 * b + 3) / 1000L, "done"))
-    rows.toDS().coalesce(1).write.options(LocalFs.WriteOptions).mode(mode)
+    spark.createDataset(rows)(LineageEnc).coalesce(1).write.options(LocalFs.WriteOptions).mode(mode)
       .parquet(s"$outDir/lineage")
     rows.map(_.nDocs).sum
   }

@@ -77,69 +77,124 @@ object HtmlParser {
     sb.toString
   }
 
-  /** Common tag names interned by (length, first char): the hot path emits
-    * the shared constant instead of substring+toLowerCase per element.
+  /** Lineizer's structural classes: page chrome, headings, and the cells
+    * of its key-value idioms (`dl`, `tr`, `label[for]`).
     */
-  private val CommonTags: Map[(Int, Char), Array[String]] = Array(
+  private[html] val NavTags: Set[String] = Set("nav", "footer", "aside", "header")
+  private[html] val HeaderTags: Set[String] = Set("h1", "h2", "h3", "h4", "h5", "h6")
+  private[html] val CellTags: Set[String] = Set("dt", "dd", "th", "td", "label", "output")
+
+  /** Class bits of a tag: one bit per class set above. */
+  private[html] final val VoidBit = 1
+  private[html] final val RawTextBit = 2
+  private[html] final val NavBit = 4
+  private[html] final val HeaderBit = 8
+  private[html] final val CellBit = 16
+
+  private def classBits(name: String): Int =
+    (if (VoidTags(name)) VoidBit else 0) | (if (RawTextTags(name)) RawTextBit else 0) |
+      (if (NavTags(name)) NavBit else 0) | (if (HeaderTags(name)) HeaderBit else 0) |
+      (if (CellTags(name)) CellBit else 0)
+
+  /** The tag table: common tag names, every classed tag among them, with
+    * their class bits. The hot path emits the shared constant instead of
+    * substring+toLowerCase per element, and reads the classes with one bit
+    * test. A tag off the table has no class.
+    */
+  private[html] val TagNames: Array[String] = (Array(
     "a", "p", "b", "i", "u", "br", "dd", "dt", "dl", "em", "h1", "h2", "h3",
     "h4", "h5", "h6", "hr", "li", "ol", "td", "th", "tr", "ul", "div", "img",
     "nav", "pre", "body", "form", "head", "html", "main", "span", "aside",
     "input", "label", "style", "table", "tbody", "thead", "title", "footer",
     "header", "output", "script", "strong", "article", "section"
-  ).groupBy(t => (t.length, t.charAt(0)))
+  ) ++ VoidTags ++ RawTextTags ++ NavTags ++ HeaderTags ++ CellTags).distinct
+  private[html] val TagBits: Array[Int] = TagNames.map(classBits)
 
-  /** Lowercased tag name for html[start, end), interning common tags. */
-  private[html] def tagNameOf(html: String, start: Int, end: Int): String = {
-    val len = end - start
-    if (len > 0) {
-      val c0 = Character.toLowerCase(html.charAt(start))
-      CommonTags.get((len, c0)) match {
-        case Some(cands) =>
-          var ci = 0
-          while (ci < cands.length) {
-            if (html.regionMatches(true, start, cands(ci), 0, len)) return cands(ci)
-            ci += 1
-          }
-        case None => ()
-      }
-    }
-    html.substring(start, end).toLowerCase
+  /** Table ids chained per slot `(length << 7) | lowercased first char`:
+    * `slotHead` holds a slot's first id, `slotNext` the next id (-1 ends).
+    */
+  private val MaxTagLen = TagNames.map(_.length).max
+  private val slotHead: Array[Int] = Array.fill((MaxTagLen + 1) << 7)(-1)
+  private val slotNext: Array[Int] = Array.fill(TagNames.length)(-1)
+  TagNames.indices.foreach { id =>
+    val s = (TagNames(id).length << 7) | TagNames(id).charAt(0)
+    slotNext(id) = slotHead(s)
+    slotHead(s) = id
   }
 
-  /** Byte-level twin of [[tagNameOf]] for the streaming scanner: ASCII
-    * names intern through the same table; non-ASCII names decode and
-    * lowercase exactly like the String form.
+  /** Table id of the tag named html[start, end), or -1: each char matches
+    * after `Character.toLowerCase`.
     */
-  private[html] def tagNameOfBytes(b: Array[Byte], start: Int, end: Int): String = {
+  private def tagIdOf(html: String, start: Int, end: Int): Int = {
     val len = end - start
-    if (len > 0) {
-      var ascii = true
-      var k = start
-      while (ascii && k < end) { if ((b(k) & 0xFF) >= 0x80) ascii = false; k += 1 }
-      if (!ascii)
-        return new String(b, start, len, java.nio.charset.StandardCharsets.UTF_8).toLowerCase
-      val c0 = Character.toLowerCase((b(start) & 0xFF).toChar)
-      CommonTags.get((len, c0)) match {
-        case Some(cands) =>
-          var ci = 0
-          while (ci < cands.length) {
-            val cand = cands(ci)
-            var m = 0
-            var ok = true
-            while (ok && m < len) {
-              if (Character.toLowerCase((b(start + m) & 0xFF).toChar) != cand.charAt(m)) ok = false
-              m += 1
-            }
-            if (ok) return cand
-            ci += 1
-          }
-        case None => ()
-      }
+    if (len <= 0 || len > MaxTagLen) return -1
+    val c0 = Character.toLowerCase(html.charAt(start))
+    if (c0 >= 0x80) return -1
+    var id = slotHead((len << 7) | c0)
+    while (id >= 0) {
+      val cand = TagNames(id)
+      var m = 1
+      while (m < len && Character.toLowerCase(html.charAt(start + m)) == cand.charAt(m)) m += 1
+      if (m == len) return id
+      id = slotNext(id)
+    }
+    -1
+  }
+
+  /** Lowercased tag name for html[start, end), interning table tags. */
+  private[html] def tagNameOf(html: String, start: Int, end: Int): String = {
+    val id = tagIdOf(html, start, end)
+    if (id >= 0) TagNames(id) else html.substring(start, end).toLowerCase
+  }
+
+  /** Byte form of [[tagIdOf]] for the streaming scanner: only ASCII names
+    * are on the table, so a non-ASCII byte is a miss.
+    */
+  private[html] def tagIdOfBytes(b: Array[Byte], start: Int, end: Int): Int = {
+    val len = end - start
+    if (len <= 0 || len > MaxTagLen) return -1
+    @inline def lower(x: Int): Int = { val c = b(x) & 0xFF; if (c >= 'A' && c <= 'Z') c + 32 else c }
+    val c0 = lower(start)
+    if (c0 >= 0x80) return -1
+    var id = slotHead((len << 7) | c0)
+    while (id >= 0) {
+      val cand = TagNames(id)
+      var m = 1
+      while (m < len && lower(start + m) == cand.charAt(m)) m += 1
+      if (m == len) return id
+      id = slotNext(id)
+    }
+    -1
+  }
+
+  /** Lowercased name of a tag off the table: non-ASCII names decode and
+    * lowercase like the String form, ASCII names lowercase per byte.
+    */
+  private[html] def offTableTagName(b: Array[Byte], start: Int, end: Int): String = {
+    val len = end - start
+    var k = start
+    while (k < end && (b(k) & 0xFF) < 0x80) k += 1
+    if (k < end) new String(b, start, len, java.nio.charset.StandardCharsets.UTF_8).toLowerCase
+    else {
       val sb = new java.lang.StringBuilder(len)
-      var m = 0
-      while (m < len) { sb.append(Character.toLowerCase((b(start + m) & 0xFF).toChar)); m += 1 }
+      k = start
+      while (k < end) { sb.append(Character.toLowerCase((b(k) & 0xFF).toChar)); k += 1 }
       sb.toString
-    } else ""
+    }
+  }
+
+  /** Lowercased tag name for b[start, end), interning table tags. */
+  private[html] def tagNameOfBytes(b: Array[Byte], start: Int, end: Int): String = {
+    val id = tagIdOfBytes(b, start, end)
+    if (id >= 0) TagNames(id) else offTableTagName(b, start, end)
+  }
+
+  /** Class bits of a lowercased tag name (a non-ASCII name can lowercase
+    * onto the table: the Kelvin sign lowercases to `k`).
+    */
+  private[html] def tagBits(name: String): Int = {
+    val id = tagIdOf(name, 0, name.length)
+    if (id >= 0) TagBits(id) else 0
   }
 
   private[html] def indexOfIgnoreCase(s: String, target: String, from: Int): Int = {

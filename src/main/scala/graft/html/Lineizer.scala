@@ -42,53 +42,52 @@ object Lineizer {
       linkDensity: Double
   )
 
-  private val styleKeys = Array("left", "top", "width", "height")
+  private val StyleKeys = Array("left", "top", "width", "height")
 
   /** ASCII whitespace only — Java regex `\s` = [ \t\n\x0B\f\r]. Using
     * Character.isWhitespace here would accept Unicode whitespace (U+2028
     * etc.) that the original regex rejected.
     */
-  @inline private def isAsciiSpace(c: Char): Boolean =
+  @inline private def isAsciiSpace(c: Int): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
   /** Hand-rolled equivalent of `(left|top|width|height)\s*:\s*(-?\d+)px`
-    * findAllMatchIn (left-to-right, resume after each match, last match per
-    * key wins). The regex was the kernel's top allocation site — Match
-    * objects per block at 10^12-doc scale; this scan allocates nothing.
+    * findAllMatchIn over b[from, until) (left-to-right, resume after each
+    * match, last match per key wins), run on the raw UTF-8 bytes: keys,
+    * digits and "px" are ASCII, and no byte of a multi-byte character is an
+    * ASCII byte. The regex was the kernel's top allocation site; this scan
+    * allocates only the box. Delimiter characters at `until` can never
+    * start a key or "px", so bounded scans are safe.
+    *
+    * @return the (left, top, right, bottom) box, or null when a key is
+    *         missing
     */
-  private def parseStyleBox(style: String): Option[Vector[Int]] =
-    parseStyleBox(style, 0, style.length)
-
-  /** Region form: parses html[from, until) in place — the streaming scanner
-    * never materializes the style attribute value. Delimiter characters at
-    * `until` can never start a key or "px", so bounded scans are safe.
-    */
-  private def parseStyleBox(style: String, from: Int, until: Int): Option[Vector[Int]] = {
+  private[html] def parseStyleBoxB(b: Array[Byte], from: Int, until: Int): Vector[Int] = {
     var l, t, w, h = Integer.MIN_VALUE
-    val n = until
     var i = from
-    while (i < n) {
-      var matched = false
-      var ki = 0
-      while (!matched && ki < 4) {
-        val k = styleKeys(ki)
-        if (style.startsWith(k, i)) {
-          var j = i + k.length
-          while (j < n && isAsciiSpace(style.charAt(j))) j += 1
-          if (j < n && style.charAt(j) == ':') {
+    while (i < until) {
+      // keys start with distinct bytes: dispatch to the one that can match
+      val c = b(i)
+      val ki = if (c == 'l') 0 else if (c == 't') 1 else if (c == 'w') 2 else if (c == 'h') 3 else -1
+      var next = i + 1
+      if (ki >= 0) {
+        val key = StyleKeys(ki)
+        var j = i + 1
+        while (j < until && j - i < key.length && b(j) == key.charAt(j - i)) j += 1
+        if (j - i == key.length) {
+          while (j < until && isAsciiSpace(b(j))) j += 1
+          if (j < until && b(j) == ':') {
             j += 1
-            while (j < n && isAsciiSpace(style.charAt(j))) j += 1
-            var neg = false
-            if (j < n && style.charAt(j) == '-') { neg = true; j += 1 }
+            while (j < until && isAsciiSpace(b(j))) j += 1
+            val neg = j < until && b(j) == '-'
+            if (neg) j += 1
             val ds = j
-            while (j < n && style.charAt(j) >= '0' && style.charAt(j) <= '9') j += 1
+            var v = 0
+            while (j < until && b(j) >= '0' && b(j) <= '9') { v = v * 10 + (b(j) - '0'); j += 1 }
             // digit runs that cannot fit an Int are not a match (the regex
             // form threw on toInt; silently wrapping would parse garbage
             // boxes from pathological styles)
-            if (j > ds && j - ds <= 9 && style.startsWith("px", j)) {
-              var v = 0
-              var p = ds
-              while (p < j) { v = v * 10 + (style.charAt(p) - '0'); p += 1 }
+            if (j > ds && j - ds <= 9 && j + 1 < until && b(j) == 'p' && b(j + 1) == 'x') {
               if (neg) v = -v
               ki match {
                 case 0 => l = v
@@ -96,80 +95,24 @@ object Lineizer {
                 case 2 => w = v
                 case _ => h = v
               }
-              i = j + 2
-              matched = true
+              next = j + 2
             }
           }
         }
-        ki += 1
       }
-      if (!matched) i += 1
+      i = next
     }
     if (l != Integer.MIN_VALUE && t != Integer.MIN_VALUE &&
       w != Integer.MIN_VALUE && h != Integer.MIN_VALUE)
-      Some(Vector(l, t, l + w, t + h))
-    else None
+      Vector(l, t, l + w, t + h)
+    else null
   }
 
-  /** Byte twin of the region [[parseStyleBox]]: keys, digits, and "px" are
-    * ASCII, and UTF-8 continuation bytes can never alias them, so the scan
-    * runs on the raw bytes.
-    */
-  private def parseStyleBoxB(b: Array[Byte], from: Int, until: Int): Option[Vector[Int]] = {
-    @inline def u(x: Int): Int = b(x) & 0xFF
-    def startsWith(lit: String, at: Int): Boolean = {
-      if (at + lit.length > until) return false
-      var k = 0
-      while (k < lit.length) { if (u(at + k) != lit.charAt(k)) return false; k += 1 }
-      true
-    }
-    var l, t, w, h = Integer.MIN_VALUE
-    val n = until
-    var i = from
-    while (i < n) {
-      var matched = false
-      var ki = 0
-      while (!matched && ki < 4) {
-        val k = styleKeys(ki)
-        if (startsWith(k, i)) {
-          var j = i + k.length
-          while (j < n && isAsciiSpace(u(j).toChar)) j += 1
-          if (j < n && u(j) == ':') {
-            j += 1
-            while (j < n && isAsciiSpace(u(j).toChar)) j += 1
-            var neg = false
-            if (j < n && u(j) == '-') { neg = true; j += 1 }
-            val ds = j
-            while (j < n && u(j) >= '0' && u(j) <= '9') j += 1
-            if (j > ds && j - ds <= 9 && startsWith("px", j)) {
-              var v = 0
-              var p = ds
-              while (p < j) { v = v * 10 + (u(p) - '0'); p += 1 }
-              if (neg) v = -v
-              ki match {
-                case 0 => l = v
-                case 1 => t = v
-                case 2 => w = v
-                case _ => h = v
-              }
-              i = j + 2
-              matched = true
-            }
-          }
-        }
-        ki += 1
-      }
-      if (!matched) i += 1
-    }
-    if (l != Integer.MIN_VALUE && t != Integer.MIN_VALUE &&
-      w != Integer.MIN_VALUE && h != Integer.MIN_VALUE)
-      Some(Vector(l, t, l + w, t + h))
-    else None
+  /** [[parseStyleBoxB]] over a decoded style string's UTF-8 bytes. */
+  private def styleBoxOf(style: String): Vector[Int] = {
+    val b = style.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    parseStyleBoxB(b, 0, b.length)
   }
-
-  private val navTags = Set("nav", "footer", "aside", "header")
-  private val cellTags = Set("dt", "dd", "th", "td", "label", "output")
-  private val headerTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
 
   def lineize(root: HtmlParser.Elem, uid: String): AnnDoc = {
     val blocks = mutable.ArrayBuffer.empty[Block]
@@ -186,13 +129,13 @@ object Lineizer {
     ): Unit = {
       elemCounter += 1
       val myRef = elemCounter
-      val nav2 = navLike || navTags.contains(e.tag)
-      val hdr2 = headerLike || headerTags.contains(e.tag)
-      val cell2 = if (cellTags.contains(e.tag)) e.tag else cellTag
+      val nav2 = navLike || HtmlParser.NavTags(e.tag)
+      val hdr2 = headerLike || HtmlParser.HeaderTags(e.tag)
+      val cell2 = if (HtmlParser.CellTags(e.tag)) e.tag else cellTag
       val dl2 = if (e.tag == "dl") myRef else dlRef
       val tr2 = if (e.tag == "tr") myRef else trRef
 
-      val isBlock = e.attr("style").flatMap(parseStyleBox) match {
+      val isBlock = e.attr("style").flatMap(s => Option(styleBoxOf(s))) match {
         case Some(box) =>
           val (text, linkLen) = HtmlParser.textAndLinkLength(e)
           val ld =
@@ -314,44 +257,70 @@ object Lineizer {
 
     // --- KV links from DOM idioms, entity-level, first-seen order ---
     val kv = Vector.newBuilder[AnnRelation]
-    val seen = mutable.HashSet.empty[(Int, Int)]
+    val seen = new IntMultiOrdered
     def link(qEnt: Int, aEnt: Int): Unit =
-      if (qEnt != aEnt && seen.add((qEnt, aEnt))) kv += AnnRelation(qEnt, aEnt)
+      if (qEnt != aEnt && !seen.containsValue(qEnt, aEnt)) {
+        seen.append(qEnt, aEnt)
+        kv += AnnRelation(qEnt, aEnt)
+      }
 
     // dl and tr idioms: inside one container, pair each question-run with
-    // the answer-run that follows it
-    def pairRuns(groupRef: Block => Int, qTag: String, aTag: String): Unit = {
-      val byContainer = mutable.LinkedHashMap.empty[Int, mutable.ArrayBuffer[Int]]
-      blocks.indices.foreach { i =>
-        val ref = groupRef(blocks(i))
-        if (ref != 0 && (blocks(i).cellTag == qTag || blocks(i).cellTag == aTag))
-          byContainer.getOrElseUpdate(ref, mutable.ArrayBuffer.empty) += i
-      }
-      byContainer.valuesIterator.foreach { idxs =>
-        var pendingQ: Option[Int] = None
-        var lastCell = ""
-        idxs.foreach { i =>
-          val b = blocks(i)
-          if (b.cellTag == qTag) {
-            if (lastCell != qTag) pendingQ = Some(entityOf(i))
-            lastCell = qTag
-          } else {
-            if (lastCell != aTag) pendingQ.foreach(q => link(q, entityOf(i)))
-            lastCell = aTag
-          }
+    // the answer-run that follows it. Containers go in the order of their
+    // first cell, each one's cells in document order: the cells sort as
+    // (container ref, index) longs, then as (container's first index, index)
+    def pairRuns(trIdiom: Boolean, qTag: String, aTag: String): Unit = {
+      val cells = new Array[Long](nB)
+      var m = 0
+      var i = 0
+      while (i < nB) {
+        val b = blocks(i)
+        val ref = if (trIdiom) b.trRef else b.dlRef
+        if (ref != 0 && (b.cellTag == qTag || b.cellTag == aTag)) {
+          cells(m) = (ref.toLong << 32) | i
+          m += 1
         }
+        i += 1
+      }
+      java.util.Arrays.sort(cells, 0, m)
+      var ref, first = -1L
+      var k = 0
+      while (k < m) {
+        val c = cells(k) & 0xFFFFFFFFL
+        if ((cells(k) >>> 32) != ref) { ref = cells(k) >>> 32; first = c }
+        cells(k) = (first << 32) | c
+        k += 1
+      }
+      java.util.Arrays.sort(cells, 0, m)
+      var pendingQ = -1 // entity of the open question-run, -1 = none
+      var lastCell = 0 // 0 = none yet, 1 = question, 2 = answer
+      k = 0
+      while (k < m) {
+        if (k == 0 || (cells(k) >>> 32) != (cells(k - 1) >>> 32)) {
+          pendingQ = -1; lastCell = 0
+        }
+        val c = (cells(k) & 0xFFFFFFFFL).toInt
+        if (blocks(c).cellTag == qTag) {
+          if (lastCell != 1) pendingQ = entityOf(c)
+          lastCell = 1
+        } else {
+          if (lastCell != 2 && pendingQ >= 0) link(pendingQ, entityOf(c))
+          lastCell = 2
+        }
+        k += 1
       }
     }
-    pairRuns(_.dlRef, "dt", "dd")
-    pairRuns(_.trRef, "th", "td")
+    pairRuns(trIdiom = false, "dt", "dd")
+    pairRuns(trIdiom = true, "th", "td")
 
-    // label[for] -> id idiom
-    val idToBlock: Map[String, Int] =
-      blocks.iterator.filter(_.idAttr != null).map(b => b.idAttr -> b.docOrder).toMap
-    blocks.indices.foreach { i =>
-      val b = blocks(i)
-      if (b.cellTag == "label" && b.forAttr != null) idToBlock.get(b.forAttr).foreach { tgt =>
-        link(entityOf(i), entityOf(tgt))
+    // label[for] -> id idiom (no for attribute, no link)
+    if (referencedIds.nonEmpty) {
+      val idToBlock: Map[String, Int] =
+        blocks.iterator.filter(_.idAttr != null).map(b => b.idAttr -> b.docOrder).toMap
+      blocks.indices.foreach { i =>
+        val b = blocks(i)
+        if (b.cellTag == "label" && b.forAttr != null) idToBlock.get(b.forAttr).foreach { tgt =>
+          link(entityOf(i), entityOf(tgt))
+        }
       }
     }
 
@@ -375,6 +344,13 @@ object Lineizer {
     */
   def lineizeStream(html: String, uid: String): AnnDoc =
     lineizeStreamBytes(html.getBytes(java.nio.charset.StandardCharsets.UTF_8), uid)
+
+  /** `Character.isLetterOrDigit` and `Character.isWhitespace` of each
+    * ASCII char, read per byte by the scanner's tag-name, key and value
+    * loops instead of a `Character` type lookup.
+    */
+  private val AsciiLetterOrDigit: Array[Boolean] = Array.tabulate(128)(c => Character.isLetterOrDigit(c.toChar))
+  private val AsciiWhitespace: Array[Boolean] = Array.tabulate(128)(c => Character.isWhitespace(c.toChar))
 
   /** UTF-8 codepoint classification at a byte offset, for the two places
     * the scanner needs a CHARACTER class on non-ASCII input (tag-name
@@ -459,13 +435,11 @@ object Lineizer {
     }
     def decodeRange(from: Int, until: Int): String =
       new String(b, from, until - from, java.nio.charset.StandardCharsets.UTF_8)
-    @inline def tagNameOfB(start: Int, end: Int): String =
-      tagNameOfBytes(b, start, end)
     // whitespace byte-length at j (0 = not whitespace); multibyte BMP
     // whitespace (U+3000 etc.) classifies like the old char-based scan
     def wsLen(j: Int): Int = {
       val c = u(j)
-      if (c < 0x80) { if (Character.isWhitespace(c.toChar)) 1 else 0 }
+      if (c < 0x80) { if (AsciiWhitespace(c)) 1 else 0 }
       else {
         val pl = cpAndLen(b, j, n)
         val cp = pl & 0x1FFFFF
@@ -628,12 +602,12 @@ object Lineizer {
           i = if (end < 0) n else end + 1
         } else if (u(lt + 1) == '/') {
           val end = bIndexOf('>', lt + 1)
-          // trimmed [ns, ne) name bounds; tagNameOfB interns common tags
+          // trimmed [ns, ne) name bounds; tagNameOfBytes interns table tags
           var ns = lt + 2
           var ne = if (end < 0) n else end
           while (ns < ne && u(ns) <= ' ') ns += 1
           while (ne > ns && u(ne - 1) <= ' ') ne -= 1
-          val name = tagNameOfB(ns, ne)
+          val name = tagNameOfBytes(b, ns, ne)
           var idx = fLen - 1
           while (idx >= 0 && fTag(idx) != name) idx -= 1
           if (idx > 0) while (fLen > idx) closeFrame()
@@ -644,7 +618,7 @@ object Lineizer {
           while (!nameDone && j < n) {
             val c = u(j)
             if (c < 0x80) {
-              if (Character.isLetterOrDigit(c.toChar)) j += 1 else nameDone = true
+              if (AsciiLetterOrDigit(c)) j += 1 else nameDone = true
             } else {
               val pl = cpAndLen(b, j, n)
               val cp = pl & 0x1FFFFF
@@ -652,7 +626,8 @@ object Lineizer {
               else nameDone = true
             }
           }
-          val name = tagNameOfB(lt + 1, j)
+          val tagId = tagIdOfBytes(b, lt + 1, j)
+          val name = if (tagId >= 0) TagNames(tagId) else offTableTagName(b, lt + 1, j)
           if (name.isEmpty) { flushText(lt, lt + 1); i = lt + 1 }
           else {
             // reset doc-scoped attr bounds for this element
@@ -673,7 +648,7 @@ object Lineizer {
                   val c = u(j)
                   if (c == '=' || c == '>' || c == '/') keyDone = true
                   else if (c < 0x80) {
-                    if (Character.isWhitespace(c.toChar)) keyDone = true else j += 1
+                    if (AsciiWhitespace(c)) keyDone = true else j += 1
                   } else if (wsLen(j) > 0) keyDone = true
                   else j += 1
                 }
@@ -695,7 +670,7 @@ object Lineizer {
                       val c = u(j)
                       if (c == '>') vDone = true
                       else if (c < 0x80) {
-                        if (Character.isWhitespace(c.toChar)) vDone = true else j += 1
+                        if (AsciiWhitespace(c)) vDone = true else j += 1
                       } else if (wsLen(j) > 0) vDone = true
                       else j += 1
                     }
@@ -705,8 +680,9 @@ object Lineizer {
               }
             }
             i = j
-            val isRaw = RawTextTags.contains(name)
-            val isVoidLike = VoidTags.contains(name) || selfClose || isRaw
+            val bits = if (tagId >= 0) TagBits(tagId) else tagBits(name)
+            val isRaw = (bits & RawTextBit) != 0
+            val isVoidLike = (bits & VoidBit) != 0 || selfClose || isRaw
             if (isRaw) {
               val close = "</" + name
               val end = bIndexOfCI(close, i)
@@ -733,39 +709,36 @@ object Lineizer {
               elemCounter += 1
               val myRef = elemCounter
               val t = fLen - 1
-              val nav2 = (fBits(t) & 4) != 0 || navTags.contains(name)
-              val hdr2 = (fBits(t) & 8) != 0 || headerTags.contains(name)
-              val cell2 = if (cellTags.contains(name)) name else fCell(t)
+              val nav2 = (fBits(t) & 4) != 0 || (bits & NavBit) != 0
+              val hdr2 = (fBits(t) & 8) != 0 || (bits & HeaderBit) != 0
+              val cell2 = if ((bits & CellBit) != 0) name else fCell(t)
               val dl2 = if (name == "dl") myRef else fDl(t)
               val tr2 = if (name == "tr") myRef else fTr(t)
               // style parsed in place over the raw byte region; entity-
               // bearing styles (never in practice) fall back to the decoded
               // string
               val box =
-                if (styleVs < 0) None
+                if (styleVs < 0) null
                 else if (hasAmp(styleVs, styleVe))
-                  parseStyleBox(decodeEntities(decodeRange(styleVs, styleVe)))
+                  styleBoxOf(decodeEntities(decodeRange(styleVs, styleVe)))
                 else parseStyleBoxB(b, styleVs, styleVe)
-              box match {
-                case Some(bx) =>
-                  bTag = name; bParentRef = fRef(t)
-                  bDlRef = dl2; bTrRef = tr2
-                  bId = { val v = matVal(idVs, idVe); if (v != null && v.nonEmpty) v else null }
-                  bFor = { val v = matVal(forVs, forVe); if (v != null && v.nonEmpty) v else null }
-                  bNav = nav2; bHdr = hdr2; bCell = cell2; bBox = bx
-                  bSb.setLength(0); bFirst = null; bLink = 0
-                  if (isVoidLike) { blockOpen = true; emitBlock() } // childless
-                  else {
-                    blockOpen = true
-                    aDepth = if (name == "a") 1 else 0
-                    pushFrame(name, myRef, isA = name == "a", isBlockRoot = true,
-                      nav = nav2, hdr = hdr2, cell = cell2, dl = dl2, tr = tr2)
-                  }
-                case None =>
-                  if (!isVoidLike)
-                    pushFrame(name, myRef, isA = name == "a", isBlockRoot = false,
-                      nav = nav2, hdr = hdr2, cell = cell2, dl = dl2, tr = tr2)
-              }
+              if (box != null) {
+                bTag = name; bParentRef = fRef(t)
+                bDlRef = dl2; bTrRef = tr2
+                bId = { val v = matVal(idVs, idVe); if (v != null && v.nonEmpty) v else null }
+                bFor = { val v = matVal(forVs, forVe); if (v != null && v.nonEmpty) v else null }
+                bNav = nav2; bHdr = hdr2; bCell = cell2; bBox = box
+                bSb.setLength(0); bFirst = null; bLink = 0
+                if (isVoidLike) { blockOpen = true; emitBlock() } // childless
+                else {
+                  blockOpen = true
+                  aDepth = if (name == "a") 1 else 0
+                  pushFrame(name, myRef, isA = name == "a", isBlockRoot = true,
+                    nav = nav2, hdr = hdr2, cell = cell2, dl = dl2, tr = tr2)
+                }
+              } else if (!isVoidLike)
+                pushFrame(name, myRef, isA = name == "a", isBlockRoot = false,
+                  nav = nav2, hdr = hdr2, cell = cell2, dl = dl2, tr = tr2)
             }
           }
         }

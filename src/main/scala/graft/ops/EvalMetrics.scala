@@ -40,9 +40,11 @@ object EvalMetrics {
     def counted: Seq[String] = Eval.countColumns(name)
   }
 
+  private def kvItems(keys: Seq[String], values: Seq[String]): Seq[String] =
+    keys.iterator.zip(values.iterator).map { case (k, v) => Eval.showKv(k, v) }.toVector
+
   private val Kv = Gran("kv", "gkv", Seq("kv.key", "kv.value"),
-    (r, i) => r.getSeq[String](i).iterator.zip(r.getSeq[String](i + 1).iterator)
-      .map { case (k, v) => Eval.showKv(k, v) }.toVector,
+    (r, i) => kvItems(r.getSeq[String](i), r.getSeq[String](i + 1)),
     """list_transform(kv, x -> x."key" || chr(1) || x."value")""")
 
   private val Line = Gran("ln", "gln", Seq("lines.text"), (r, i) => r.getSeq[String](i),
@@ -126,10 +128,11 @@ object EvalMetrics {
     */
   def perturbedDetail(spark: SparkSession, goldenPath: String): DataFrame = {
     import spark.implicits._
+    // decoded through a typed tuple (url, kv keys, kv values, line texts)
     golden(spark, goldenPath, Kv, Line)
-      .flatMap { r =>
-        val url = r.getString(0)
-        Seq("kv", "line").zip(goldItems(r, Kv, Line)).flatMap { case (name, g) =>
+      .as[(String, Seq[String], Seq[String], Seq[String])]
+      .flatMap { case (url, keys, values, texts) =>
+        Seq("kv" -> kvItems(keys, values), "line" -> texts).flatMap { case (name, g) =>
           PairMetrics.detail(perturbItems(url, g), g).map { case (v, i) => (url, name, v, i) }
         }
       }
