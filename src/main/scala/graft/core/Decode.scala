@@ -41,27 +41,12 @@ final case class DecodedDoc(
 }
 
 /** Exact port of the decode algebra in
-  * /root/reference/pipeline/decode.py:72-378 (`sample_decode_peneo`): spots
-  * -> head/tail memory maps -> chain-following -> validated KV pairs. Pure
-  * and Spark-free; shared verbatim between the distributed engine kernel and
-  * the golden oracle.
+  * /root/reference/pipeline/decode.py:72-378 (`sample_decode_peneo`): spot
+  * channels -> head/tail memory maps -> chain-following -> validated KV
+  * pairs. Pure and Spark-free; one route shared by the engine kernel, the
+  * golden oracle and the executed-reference vectors.
   */
 object Decode {
-
-  /** Token content + per-token box view the decode kernel reads — backed
-    * either by materialized per-token Vectors (golden/spec path) or by the
-    * compact offset arrays [[DocSample]] stores (engine path: token text
-    * appends as (CharSequence, start, end) regions of the kept line
-    * strings, so no per-token String ever materializes). Both backends are
-    * exercised end-to-end by the decodeSampleFast == decodeSample parity
-    * gates.
-    */
-  sealed trait TokView {
-    /** Appends the text of tokens s..eIncl. */
-    def appendSlice(sb: java.lang.StringBuilder, s: Int, eIncl: Int): Unit
-    /** Widens `box` (min x, min y, max x, max y) over tokens s..eIncl. */
-    def coverSlice(box: Array[Int], s: Int, eIncl: Int): Unit
-  }
 
   @inline private def cover(box: Array[Int], l: Int, t: Int, r: Int, b: Int): Unit = {
     if (l < box(0)) box(0) = l
@@ -70,23 +55,12 @@ object Decode {
     if (b > box(3)) box(3) = b
   }
 
-  final class SeqTokView(text: IndexedSeq[String], bbox: IndexedSeq[Vector[Int]])
-      extends TokView {
-    def appendSlice(sb: java.lang.StringBuilder, s: Int, eIncl: Int): Unit = {
-      var k = s
-      while (k <= eIncl) { sb.append(text(k)); k += 1 }
-    }
-    def coverSlice(box: Array[Int], s: Int, eIncl: Int): Unit = {
-      var k = s
-      while (k <= eIncl) {
-        val b = bbox(k)
-        cover(box, b(0), b(1), b(2), b(3))
-        k += 1
-      }
-    }
-  }
-
-  /** @param lineTexts kept-line text buffer; @param sLineText per-sorted-line
+  /** Token content + per-token box view the decode reads, over the compact
+    * offset arrays [[DocSample]] stores: token text appends as
+    * (CharSequence, start, end) regions of the kept line strings, so no
+    * per-token String ever materializes.
+    *
+    * @param lineTexts kept-line text buffer; @param sLineText per-sorted-line
     * index into it; @param boxO flat 4-per-sorted-line original boxes;
     * @param tokSLine/@param tokStart/@param tokEnd per-token (sorted line,
     * char range) triple. A line's tokens are consecutive and partition its
@@ -95,13 +69,14 @@ object Decode {
   final class CompactTokView(
       lineTexts: Array[String], sLineText: Array[Int], boxO: Array[Int],
       tokSLine: Array[Int], tokStart: Array[Int], tokEnd: Array[Int]
-  ) extends TokView {
+  ) {
     /** Last token of the line run starting at token k, capped at eIncl. */
     @inline private def runEnd(k: Int, eIncl: Int): Int = {
       var e = k
       while (e < eIncl && tokSLine(e + 1) == tokSLine(k)) e += 1
       e
     }
+    /** Appends the text of tokens s..eIncl. */
     def appendSlice(sb: java.lang.StringBuilder, s: Int, eIncl: Int): Unit = {
       var k = s
       while (k <= eIncl) {
@@ -110,6 +85,7 @@ object Decode {
         k = e + 1
       }
     }
+    /** Widens `box` (min x, min y, max x, max y) over tokens s..eIncl. */
     def coverSlice(box: Array[Int], s: Int, eIncl: Int): Unit = {
       var k = s
       while (k <= eIncl) {
@@ -120,130 +96,44 @@ object Decode {
     }
   }
 
-  /** @param text      token-parallel fetched substrings; `"".join` slices of
-    *                  it reconstruct source text byte-identically
-    * @param bbox      token-parallel boxes (orig_bbox in the reference)
+  object CompactTokView {
+    /** The view of per-token text and 4-value boxes, one line per token
+      * (specs and the executed-reference vectors).
+      */
+    def ofTokens(text: IndexedSeq[String], bbox: IndexedSeq[Seq[Int]]): CompactTokView = {
+      require(text.length == bbox.length && bbox.forall(_.length == 4), "one 4-value box per token")
+      val ids = Array.range(0, text.length)
+      new CompactTokView(text.toArray, ids, bbox.iterator.flatten.toArray, ids,
+        new Array[Int](text.length), text.iterator.map(_.length).toArray)
+    }
+  }
+
+  /** @param view      token text and original boxes (orig_bbox in the
+    *                  reference); `"".join` slices of the text reconstruct
+    *                  source text byte-identically
     * @param decodeGt  ground-truth mode: multimap-collapse instead of
     *                  mutual-best top-score assignment
     */
   def decode(
-      text: IndexedSeq[String],
-      lineExtractionSpots: Seq[Spot],
-      entHeadSpots: Seq[Spot],
-      entTailSpots: Seq[Spot],
-      groupHeadSpots: Seq[Spot],
-      groupTailSpots: Seq[Spot],
-      bbox: IndexedSeq[Vector[Int]],
+      view: CompactTokView,
+      lineExtractionSpots: SpotChannel,
+      entHeadSpots: SpotChannel,
+      entTailSpots: SpotChannel,
+      groupHeadSpots: SpotChannel,
+      groupTailSpots: SpotChannel,
       decodeGt: Boolean = false,
       scoreThresh: Double = 0.0
   ): DecodedDoc = {
 
     // --- parse the three per-line channels (decode.py:170-200) ---
-    val lineExtraction: IntIntOrdered =
-      if (decodeGt) Spots.collapseFirst(Spots.parseMulti(lineExtractionSpots, triuMode = false, scoreThresh))
-      else Spots.parseTop(lineExtractionSpots, triuMode = false, scoreThresh)
-    val groupTail: IntIntOrdered =
-      if (decodeGt) Spots.collapseFirst(Spots.parseMulti(groupTailSpots, triuMode = true, scoreThresh))
-      else Spots.parseTop(groupTailSpots, triuMode = true, scoreThresh)
-    val groupHead: IntIntOrdered =
-      if (decodeGt) Spots.collapseFirst(Spots.parseMulti(groupHeadSpots, triuMode = true, scoreThresh))
-      else Spots.parseTop(groupHeadSpots, triuMode = true, scoreThresh)
+    def pairs(ch: SpotChannel, triu: Boolean): IntIntOrdered =
+      if (decodeGt) Spots.collapseFirst(Spots.parseMulti(ch, triu, scoreThresh))
+      else Spots.parseTop(ch, triu, scoreThresh)
+    val lineExtraction = pairs(lineExtractionSpots, triu = false)
+    val groupTail = pairs(groupTailSpots, triu = true)
+    val groupHead = pairs(groupHeadSpots, triu = true)
     val entTail = Spots.parseMulti(entTailSpots, triuMode = true, scoreThresh)
 
-    decodeCore(new SeqTokView(text, bbox), lineExtraction, groupTail, groupHead, entTail,
-      emit => entHeadSpots.foreach { sp =>
-        if (sp.tag != 0 && sp.score >= scoreThresh) {
-          if (sp.tag == 2) emit(sp.j, sp.i) else emit(sp.i, sp.j)
-        }
-      })
-  }
-
-  /** Fast path over CANONICAL packed channels ([[Spots.canonicalizePackedRaw]]
-    * output: sorted unique cells, implicit score 1.0) — byte-identical to
-    * `decode` over `Spots.canonicalize`'s Vector[Spot] but with no Spot
-    * materialization. The engine runs THIS; the golden oracle path keeps
-    * the Vector form, so the x1/x2 golden compares double as a standing
-    * two-path parity gate (plus the CoreSpec equivalence property).
-    */
-  def decodeCanonical(
-      view: TokView,
-      lineExtractionC: Array[Long],
-      entHeadC: Array[Long],
-      entTailC: Array[Long],
-      groupHeadC: Array[Long],
-      groupTailC: Array[Long],
-      decodeGt: Boolean = false
-  ): DecodedDoc = {
-    @inline def iAt(l: Long): Int = (l >>> 40).toInt
-    @inline def jAt(l: Long): Int = ((l >>> 20) & 0xFFFFFL).toInt
-    // replicas of parseTop/parseMulti over the packed cells (same iteration
-    // order as the Vector[Spot] form; canonical scores are all 1.0, so
-    // putIfBetter degenerates to first-write-wins == putIfAbsent — no
-    // Double score arrays on this path — and the decodeSample scoreThresh
-    // is 0, so every cell passes). Maps are capacity-hinted to the channel
-    // length: the default-capacity growth chain re-allocated each map's
-    // arrays ~2x over on every decode (measured ~1/3 of decode allocation).
-    def top(c: Array[Long], triu: Boolean): IntIntOrdered = {
-      val perHead = new IntIntOrdered(c.length)
-      var k = 0
-      while (k < c.length) {
-        val l = c(k)
-        val swap = triu && (l & 3L) == 2L
-        perHead.putIfAbsent(if (swap) jAt(l) else iAt(l),
-          if (swap) iAt(l) else jAt(l))
-        k += 1
-      }
-      val perTail = new IntIntOrdered(perHead.size)
-      perHead.foreachPair((h, t) => perTail.putIfAbsent(t, h))
-      val out = new IntIntOrdered(perTail.size)
-      perTail.foreachPair((t, h) => out.put(h, t))
-      out
-    }
-    def multi(c: Array[Long], triu: Boolean): IntMultiOrdered = {
-      val m = new IntMultiOrdered(c.length)
-      var k = 0
-      while (k < c.length) {
-        val l = c(k)
-        val swap = triu && (l & 3L) == 2L
-        m.append(if (swap) jAt(l) else iAt(l), if (swap) iAt(l) else jAt(l))
-        k += 1
-      }
-      m
-    }
-    val lineExtraction =
-      if (decodeGt) Spots.collapseFirst(multi(lineExtractionC, triu = false))
-      else top(lineExtractionC, triu = false)
-    val groupTail =
-      if (decodeGt) Spots.collapseFirst(multi(groupTailC, triu = true))
-      else top(groupTailC, triu = true)
-    val groupHead =
-      if (decodeGt) Spots.collapseFirst(multi(groupHeadC, triu = true))
-      else top(groupHeadC, triu = true)
-    val entTail = multi(entTailC, triu = true)
-
-    decodeCore(view, lineExtraction, groupTail, groupHead, entTail,
-      emit => {
-        var k = 0
-        while (k < entHeadC.length) {
-          val l = entHeadC(k)
-          if ((l & 3L) == 2L) emit(jAt(l), iAt(l)) else emit(iAt(l), jAt(l))
-          k += 1
-        }
-      })
-  }
-
-  /** Shared decode body: channel maps in, DecodedDoc out. `entHeadIter`
-    * abstracts the ent-head channel iteration as (keyHead, valueHead)
-    * emissions so both the Spot and the packed forms drive one kernel.
-    */
-  private def decodeCore(
-      view: TokView,
-      lineExtraction: IntIntOrdered,
-      groupTail: IntIntOrdered,
-      groupHead: IntIntOrdered,
-      entTail: IntMultiOrdered,
-      entHeadIter: ((Int, Int) => Unit) => Unit
-  ): DecodedDoc = {
     @inline def sliceText(s: Int, eIncl: Int): String = {
       val sb = new java.lang.StringBuilder
       view.appendSlice(sb, s, eIncl)
@@ -311,7 +201,7 @@ object Decode {
     // --- entity-linking heads drive KV emission (decode.py:223-368) ---
     val entHead = new IntMultiOrdered
     val kvPairs = Vector.newBuilder[KvPair]
-    entHeadIter { (keyHead, valueHead) =>
+    def emit(keyHead: Int, valueHead: Int): Unit = {
       entHead.append(keyHead, valueHead)
 
       val keyFirstTail = lineExtraction.getOrMinus1(keyHead)
@@ -330,6 +220,13 @@ object Decode {
           )
         }
       } // else: head not in line-extraction map: skip (decode.py:236-243)
+    }
+    val eh = entHeadSpots.cells
+    var k = 0
+    while (k < eh.length) {
+      if (entHeadSpots.kept(k, scoreThresh))
+        emit(Spots.headOf(eh(k), triuMode = true), Spots.tailOf(eh(k), triuMode = true))
+      k += 1
     }
 
     DecodedDoc(

@@ -12,11 +12,9 @@ import scala.collection.mutable
   * boxes are flat 4-int-per-sorted-line arrays shared by all of a line's
   * tokens — per-token Strings and box Vectors (~10 KB/doc at the corpus
   * token mix) never materialize on the engine path, which reads these
-  * arrays through [[Decode.CompactTokView]]. The lazy `tokens` / `bbox` /
-  * `origBbox` vals materialize the reference's per-token view for specs,
-  * fixtures, and the golden oracle path — whose decodeSample ==
-  * decodeSampleFast parity gates pin both representations to the same
-  * output.
+  * arrays through [[Decode.CompactTokView]] — decode always does. The lazy
+  * `tokens` / `bbox` / `origBbox` vals materialize the reference's
+  * per-token view for specs and fixtures only.
   *
   * Token-parallel invariant: tokSLine.length == tokStart.length ==
   * tokEnd.length. Spot channels carry [[Spots.pack]]ed (i, j, seq, tag)
@@ -160,12 +158,8 @@ object DocBuilder {
     (sample, trace.get)
   }
 
-  /** wantTrace=false keeps the hot extraction path allocation-free: the
-    * trace copies every internal set/map, which only the executed-reference
-    * spec needs.
-    */
   /** Growable packed-long spot channel; seq = emission index within the
-    * channel (exactly the k canonicalize's tuple path would assign).
+    * channel.
     */
   private final class SpotsBuilder {
     private val b = new mutable.ArrayBuilder.ofLong
@@ -174,6 +168,10 @@ object DocBuilder {
     def result(): Array[Long] = b.result()
   }
 
+  /** wantTrace=false keeps the hot extraction path allocation-free: the
+    * trace copies every internal set/map, which only the executed-reference
+    * spec needs.
+    */
   private def buildImpl(doc: AnnDoc, maxTokenLen: Int,
       wantTrace: Boolean): (DocSample, Option[BuildTrace]) = {
     // capacity hints: the default-capacity growth chain re-allocated every
@@ -419,36 +417,28 @@ object DocBuilder {
     (sample, trace)
   }
 
-  /** Canonicalize + decode one sample: the shared kernel body used by the
-    * oracle and the engine (pred path: mutual-best; gt path: first-wins).
+  /** Canonicalize + decode one sample, the one decode route: the engine
+    * (`Pipeline.extractDoc`), the golden oracle (`Corpus.goldenFor`) and the
+    * specs all run it (pred: mutual-best; gt: first-wins collapse).
+    * Canonical channels carry no scores (all 1.0).
     */
-  /** Engine hot path: canonicalize + decode without Spot materialization
-    * ([[Decode.decodeCanonical]]). The golden oracle path keeps
-    * [[decodeSample]]'s Vector[Spot] route, so the x1/x2 golden compares
-    * double as an end-to-end two-path parity gate (CoreSpec also pins
-    * equivalence directly over the corpus).
-    */
-  def decodeSampleFast(sample: DocSample, decodeGt: Boolean = false): DecodedDoc =
-    Decode.decodeCanonical(
+  def decodeSample(sample: DocSample, decodeGt: Boolean = false): DecodedDoc = {
+    def canonical(spots: Array[Long]) = new SpotChannel(Spots.canonicalizePackedRaw(spots))
+    Decode.decode(
       view = new Decode.CompactTokView(sample.lineTextArr, sample.sLineText,
         sample.sLineBoxO, sample.tokSLine, sample.tokStart, sample.tokEnd),
-      lineExtractionC = Spots.canonicalizePackedRaw(sample.lineExtractionSpots),
-      entHeadC = Spots.canonicalizePackedRaw(sample.entHeadSpots),
-      entTailC = Spots.canonicalizePackedRaw(sample.entTailSpots),
-      groupHeadC = Spots.canonicalizePackedRaw(sample.groupHeadSpots),
-      groupTailC = Spots.canonicalizePackedRaw(sample.groupTailSpots),
+      lineExtractionSpots = canonical(sample.lineExtractionSpots),
+      entHeadSpots = canonical(sample.entHeadSpots),
+      entTailSpots = canonical(sample.entTailSpots),
+      groupHeadSpots = canonical(sample.groupHeadSpots),
+      groupTailSpots = canonical(sample.groupTailSpots),
       decodeGt = decodeGt
     )
+  }
 
-  def decodeSample(sample: DocSample, decodeGt: Boolean = false): DecodedDoc =
-    Decode.decode(
-      text = sample.tokens,
-      lineExtractionSpots = Spots.canonicalizePacked(sample.lineExtractionSpots),
-      entHeadSpots = Spots.canonicalizePacked(sample.entHeadSpots),
-      entTailSpots = Spots.canonicalizePacked(sample.entTailSpots),
-      groupHeadSpots = Spots.canonicalizePacked(sample.groupHeadSpots),
-      groupTailSpots = Spots.canonicalizePacked(sample.groupTailSpots),
-      bbox = sample.origBbox,
-      decodeGt = decodeGt
-    )
+  /** Alias of [[decodeSample]], kept only because the benchmark's kernel
+    * tracer (perfbench's KernelTracer) calls it by this name.
+    */
+  def decodeSampleFast(sample: DocSample, decodeGt: Boolean = false): DecodedDoc =
+    decodeSample(sample, decodeGt)
 }

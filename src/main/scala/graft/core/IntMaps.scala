@@ -1,10 +1,13 @@
 package graft.core
 
-/** Insertion-ordered, open-addressing int-keyed maps for the decode hot
-  * path. Python dicts (whose insertion-order semantics the decode algebra
-  * inherits, see [[Spots]]) were ported in round 1 as LinkedHashMap — key
-  * boxing plus an entry object per put measured ~40% of the decode stage's
-  * allocation. These replace them with parallel primitive arrays:
+/** Insertion-ordered, open-addressing int-keyed maps for the per-document
+  * kernel: decode's spot parses and chain maps, and [[DocBuilder]]'s id
+  * bookkeeping. Python dicts (whose insertion-order semantics the decode
+  * algebra inherits, see [[Spots]]) were ported in round 1 as
+  * LinkedHashMap — key boxing plus an entry object per put measured ~40%
+  * of the decode stage's allocation. These replace them with parallel
+  * primitive arrays (score-ordered parses keep a winning cell's index as
+  * the value, see [[Spots.parseTop]]):
   *
   *  - re-putting an existing key updates the value IN PLACE and keeps the
   *    original insertion position (LinkedHashMap / python dict semantics);
@@ -62,20 +65,6 @@ final class IntIntOrdered(initCap: Int = 8) {
     } else slotVal(s) = v
   }
 
-  /** Insert only if absent (first write wins) — the canonical-score
-    * degenerate of [[IntBestOrdered.putIfBetter]] (all scores equal, ties
-    * keep the first), with no Double array on the decode hot path.
-    */
-  def putIfAbsent(k: Int, v: Int): Unit = {
-    val s = slotOf(k)
-    if (slotKey(s) == -1) {
-      slotKey(s) = k; slotVal(s) = v
-      if (n == order.length) order = java.util.Arrays.copyOf(order, n * 2)
-      order(n) = k; n += 1
-      if (n * 4 > cap * 3) grow()
-    }
-  }
-
   /** Value for k, or -1 when absent. */
   def getOrMinus1(k: Int): Int = {
     val s = slotOf(k)
@@ -94,57 +83,6 @@ final class IntIntOrdered(initCap: Int = 8) {
     val b = Vector.newBuilder[(Int, Int)]
     foreachPair((k, v) => b += ((k, v)))
     b.result()
-  }
-}
-
-/** int -> (int, double), insertion-ordered, with the parse_matrix_spots
-  * strict-greater update rule built in.
-  */
-final class IntBestOrdered(initCap: Int = 8) {
-  private var cap = Integer.highestOneBit(math.max(8, initCap * 2 - 1)) * 2
-  private var slotKey = new Array[Int](cap)
-  private var slotVal = new Array[Int](cap)
-  private var slotScore = new Array[Double](cap)
-  private var order = new Array[Int](math.max(8, initCap))
-  private var n = 0
-  java.util.Arrays.fill(slotKey, -1)
-
-  @inline private def slotOf(k: Int): Int = {
-    var s = IntMaps.mix(k) & (cap - 1)
-    while (slotKey(s) != -1 && slotKey(s) != k) s = (s + 1) & (cap - 1)
-    s
-  }
-
-  private def grow(): Unit = {
-    val ok = slotKey; val ov = slotVal; val os = slotScore
-    cap *= 2
-    slotKey = new Array[Int](cap); slotVal = new Array[Int](cap); slotScore = new Array[Double](cap)
-    java.util.Arrays.fill(slotKey, -1)
-    var i = 0
-    while (i < ok.length) {
-      val k = ok(i)
-      if (k != -1) { val s = slotOf(k); slotKey(s) = k; slotVal(s) = ov(i); slotScore(s) = os(i) }
-      i += 1
-    }
-  }
-
-  /** First write wins position; later writes only replace on score > old. */
-  def putIfBetter(k: Int, v: Int, score: Double): Unit = {
-    val s = slotOf(k)
-    if (slotKey(s) == -1) {
-      slotKey(s) = k; slotVal(s) = v; slotScore(s) = score
-      if (n == order.length) order = java.util.Arrays.copyOf(order, n * 2)
-      order(n) = k; n += 1
-      if (n * 4 > cap * 3) grow()
-    } else if (score > slotScore(s)) { slotVal(s) = v; slotScore(s) = score }
-  }
-
-  def foreachEntry(f: (Int, Int, Double) => Unit): Unit = {
-    var i = 0
-    while (i < n) {
-      val k = order(i); val s = slotOf(k)
-      f(k, slotVal(s), slotScore(s)); i += 1
-    }
   }
 }
 

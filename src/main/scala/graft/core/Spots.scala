@@ -1,51 +1,35 @@
 package graft.core
 
-import scala.collection.mutable
-
-/** A sparse pairwise relation over token indices: `(i, j, tag)` with
-  * `i <= j`, tag in {0=none, 1=upper-tri, 2=flipped-lower-tri}, plus a score
-  * once decoded. Mirrors the reference "matrix spot"
+/** One spot channel: the sparse pairwise relations of one sub-task over
+  * token indices, the reference "matrix spot" `(i, j, tag, score)`
   * (/root/reference/data/datasets/sibr.py:261-264,315-347,392-408 and
-  * /root/reference/model/peneo_decoder.py:107-115).
+  * /root/reference/model/peneo_decoder.py:107-115). Each cell is one
+  * [[Spots.cell]] long `(i<<40 | j<<20 | tag)` with `i <= j` and tag in
+  * {0=none, 1=upper-tri, 2=flipped-lower-tri}, in iteration order.
+  * `scores` is parallel to `cells`; null means the canonical score 1.0
+  * that every ground-truth cell carries (torch.ones_like), so the engine
+  * path allocates no score array.
   */
-final case class Spot(i: Int, j: Int, tag: Int, score: Double)
+final class SpotChannel(val cells: Array[Long], val scores: Array[Double] = null) {
+  require(scores == null || scores.length == cells.length, "scores not parallel to cells")
+
+  @inline def score(k: Int): Double = if (scores == null) 1.0 else scores(k)
+
+  /** The reference's read-back filter: tag != 0 and score >= thresh. */
+  @inline def kept(k: Int, scoreThresh: Double): Boolean =
+    (cells(k) & 3L) != 0L && score(k) >= scoreThresh
+
+  override def toString: String = cells.indices
+    .map(k => (Spots.iOf(cells(k)), Spots.jOf(cells(k)), cells(k) & 3L, score(k)))
+    .mkString("SpotChannel(", ", ", ")")
+}
 
 object Spots {
 
-  /** Canonicalize a channel's spot list the way the reference's dense
-    * shaking-tag round trip does (spots -> dense vector -> sparse spots):
-    *  - conflicting writes to the same (i, j) cell resolve last-wins
-    *    (/root/reference/model/peneo_decoder.py:68-73);
-    *  - the sparse read-back iterates cells in row-major upper-triangle
-    *    order, i.e. sorted by (i, j)
-    *    (/root/reference/model/peneo_decoder.py:100-115);
-    *  - ground-truth scores are all 1.0 (torch.ones_like).
-    * Never materializes the dense L(L+1)/2 vector (SURVEY.md §2 C8).
-    */
-  def canonicalize(spots: Seq[(Int, Int, Int)]): Vector[Spot] = {
-    if (spots.isEmpty) return Vector.empty
-    val m = spots.length
-    // hot path: pack (i:20 | j:20 | seq:18 | tag:2) into one long per spot —
-    // a primitive sort replaces the boxed HashMap; within an (i, j) cell the
-    // max seq is the LAST write (last-wins), and the sort order is (i, j)
-    // ascending, exactly the map+sort semantics. Falls back to the boxed
-    // form for out-of-range inputs (token indices are < 512 in practice).
-    if (m < (1 << 18) && spots.forall { case (i, j, tag) =>
-        i >= 0 && j < (1 << 20) && tag >= 0 && tag <= 3 }) {
-      val arr = new Array[Long](m)
-      var k = 0
-      spots.foreach { case (i, j, tag) =>
-        require(i <= j, s"spot ($i,$j) not upper-triangular")
-        arr(k) = (i.toLong << 40) | (j.toLong << 20) | (k.toLong << 2) | tag.toLong
-        k += 1
-      }
-      scanPacked(arr)
-    } else canonicalizeBoxed(spots)
-  }
-
-  /** Pack one (i, j, tag) spot with its emission index in the channel —
-    * the exact (i:20 | j:20 | seq:18 | tag:2) layout the canonicalize sort
-    * uses, so build-side channels skip the tuple form entirely.
+  /** Pack one (i, j, tag) spot with its emission index in the channel:
+    * (i:20 | j:20 | seq:18 | tag:2). Sorting these orders cells by (i, j)
+    * and, within a cell, by emission — what [[canonicalizePackedRaw]]
+    * needs for last-wins.
     */
   @inline def pack(i: Int, j: Int, seq: Int, tag: Int): Long = {
     require(i >= 0 && i <= j && j < (1 << 20) && seq >= 0 && seq < (1 << 18) &&
@@ -53,24 +37,34 @@ object Spots {
     (i.toLong << 40) | (j.toLong << 20) | (seq.toLong << 2) | tag.toLong
   }
 
+  /** A channel cell: the packed layout with no emission index. */
+  def cell(i: Int, j: Int, tag: Int): Long = pack(i, j, 0, tag)
+
+  @inline private[core] def iOf(c: Long): Int = (c >>> 40).toInt
+  @inline private[core] def jOf(c: Long): Int = ((c >>> 20) & 0xFFFFFL).toInt
+
+  /** Head and tail of a cell: triu mode reads tag 2 as the flipped pair. */
+  @inline private[core] def headOf(c: Long, triuMode: Boolean): Int =
+    if (triuMode && (c & 3L) == 2L) jOf(c) else iOf(c)
+  @inline private[core] def tailOf(c: Long, triuMode: Boolean): Int =
+    if (triuMode && (c & 3L) == 2L) iOf(c) else jOf(c)
+
   /** Emission-order (i, j, tag) tuples of a packed channel (spec/fixture
     * use; the hot path never unpacks).
     */
   def unpack(packed: Array[Long]): Vector[(Int, Int, Int)] =
-    packed.iterator.map(l =>
-      ((l >>> 40).toInt, ((l >>> 20) & 0xFFFFFL).toInt, (l & 3L).toInt)).toVector
+    packed.iterator.map(l => (iOf(l), jOf(l), (l & 3L).toInt)).toVector
 
-  /** Canonicalize a packed channel: sort a copy (the input stays in
-    * emission order), then the same last-wins cell scan.
-    */
-  def canonicalizePacked(spots: Array[Long]): Vector[Spot] = {
-    if (spots.isEmpty) return Vector.empty
-    scanPacked(java.util.Arrays.copyOf(spots, spots.length))
-  }
-
-  /** Canonical cells as packed `(i<<40 | j<<20 | tag)` longs — the same
-    * cells in the same order as [[canonicalizePacked]], without the Spot
-    * materialization (the decode fast path iterates these directly).
+  /** Canonicalize a channel the way the reference's dense shaking-tag round
+    * trip does (spots -> dense vector -> sparse spots):
+    *  - conflicting writes to the same (i, j) cell resolve last-wins
+    *    (/root/reference/model/peneo_decoder.py:68-73);
+    *  - the sparse read-back iterates cells in row-major upper-triangle
+    *    order, i.e. sorted by (i, j), and drops tag-0 cells
+    *    (/root/reference/model/peneo_decoder.py:100-115);
+    *  - ground-truth scores are all 1.0, so the result carries none.
+    * Sorts a copy (the input stays in emission order) and never
+    * materializes the dense L(L+1)/2 vector (SURVEY.md §2 C8).
     */
   def canonicalizePackedRaw(spots: Array[Long]): Array[Long] = {
     if (spots.isEmpty) return Array.emptyLongArray
@@ -90,58 +84,19 @@ object Spots {
     if (m == out.length) out else java.util.Arrays.copyOf(out, m)
   }
 
-  /** Sorts `arr` in place and reads back (i, j) cells last-wins. */
-  private def scanPacked(arr: Array[Long]): Vector[Spot] = {
-    java.util.Arrays.sort(arr)
-    val m = arr.length
-    val out = Vector.newBuilder[Spot]
-    var idx = 0
-    while (idx < m) {
-      val cellKey = arr(idx) >>> 20
-      var last = arr(idx)
-      idx += 1
-      while (idx < m && (arr(idx) >>> 20) == cellKey) { last = arr(idx); idx += 1 }
-      val tag = (last & 3L).toInt
-      if (tag != 0)
-        out += Spot((last >>> 40).toInt, ((last >>> 20) & 0xFFFFFL).toInt, tag, 1.0)
-    }
-    out.result()
-  }
-
-  private[core] def canonicalizeBoxed(spots: Seq[(Int, Int, Int)]): Vector[Spot] = {
-    val cell = mutable.HashMap.empty[Long, Int]
-    spots.foreach { case (i, j, tag) =>
-      require(i <= j, s"spot ($i,$j) not upper-triangular")
-      cell.put(i.toLong << 32 | (j.toLong & 0xFFFFFFFFL), tag)
-    }
-    val keys = cell.keysIterator.toArray
-    java.util.Arrays.sort(keys)
-    val out = Vector.newBuilder[Spot]
-    keys.foreach { k =>
-      val tag = cell(k)
-      if (tag != 0) out += Spot((k >>> 32).toInt, (k & 0xFFFFFFFFL).toInt, tag, 1.0)
-    }
-    out.result()
-  }
-
   /** `parse_matrix_spots(top_score_only=False)`:
     * insertion-ordered multimap head -> [tails]
     * (/root/reference/pipeline/decode.py:37-49). Python dict preserves
     * insertion order, which is semantically load-bearing downstream —
     * [[IntMultiOrdered]] keeps it without per-entry boxing.
     */
-  def parseMulti(
-      spots: Seq[Spot],
-      triuMode: Boolean,
-      scoreThresh: Double = 0.0
-  ): IntMultiOrdered = {
-    val m = new IntMultiOrdered
-    spots.foreach { sp =>
-      if (sp.tag != 0 && sp.score >= scoreThresh) {
-        val (h, t) =
-          if (triuMode && sp.tag == 2) (sp.j, sp.i) else (sp.i, sp.j)
-        m.append(h, t)
-      }
+  def parseMulti(ch: SpotChannel, triuMode: Boolean, scoreThresh: Double = 0.0): IntMultiOrdered = {
+    val c = ch.cells
+    val m = new IntMultiOrdered(c.length)
+    var k = 0
+    while (k < c.length) {
+      if (ch.kept(k, scoreThresh)) m.append(headOf(c(k), triuMode), tailOf(c(k), triuMode))
+      k += 1
     }
     m
   }
@@ -149,28 +104,32 @@ object Spots {
   /** `parse_matrix_spots(top_score_only=True)`: per-head argmax by score,
     * then per-tail argmax over those — a mutual-best bipartite assignment
     * ("each element has only one input and only one output"). Ties resolve
-    * first-encountered (strict `>` comparisons) in spot order; final map
+    * first-encountered (strict `>` comparisons) in cell order; final map
     * iterates in reverse-map insertion order, and a later duplicate head
     * updates the value in its ORIGINAL position (python dict semantics)
-    * (/root/reference/pipeline/decode.py:50-67).
+    * (/root/reference/pipeline/decode.py:50-67). Both argmax maps hold the
+    * winning cell's index, which carries its head, tail and score.
     */
-  def parseTop(
-      spots: Seq[Spot],
-      triuMode: Boolean,
-      scoreThresh: Double = 0.0
-  ): IntIntOrdered = {
-    val perHead = new IntBestOrdered
-    spots.foreach { sp =>
-      if (sp.tag != 0 && sp.score >= scoreThresh) {
-        val (h, t) =
-          if (triuMode && sp.tag == 2) (sp.j, sp.i) else (sp.i, sp.j)
-        perHead.putIfBetter(h, t, sp.score)
+  def parseTop(ch: SpotChannel, triuMode: Boolean, scoreThresh: Double = 0.0): IntIntOrdered = {
+    val c = ch.cells
+    val perHead = new IntIntOrdered(c.length)
+    var k = 0
+    while (k < c.length) {
+      if (ch.kept(k, scoreThresh)) {
+        val h = headOf(c(k), triuMode)
+        val best = perHead.getOrMinus1(h)
+        if (best < 0 || ch.score(k) > ch.score(best)) perHead.put(h, k)
       }
+      k += 1
     }
-    val perTail = new IntBestOrdered
-    perHead.foreachEntry((h, t, s) => perTail.putIfBetter(t, h, s))
-    val out = new IntIntOrdered
-    perTail.foreachEntry((t, h, _) => out.put(h, t))
+    val perTail = new IntIntOrdered(perHead.size)
+    perHead.foreachPair { (_, k) =>
+      val t = tailOf(c(k), triuMode)
+      val best = perTail.getOrMinus1(t)
+      if (best < 0 || ch.score(k) > ch.score(best)) perTail.put(t, k)
+    }
+    val out = new IntIntOrdered(perTail.size)
+    perTail.foreachPair((t, k) => out.put(headOf(c(k), triuMode), t))
     out
   }
 

@@ -67,7 +67,7 @@ object Pipeline {
     // allocation per doc) never happens on the hot path
     val ann = Lineizer.lineizeStreamBytes(html, url)
     val sample = DocBuilder.build(ann)
-    val d = DocBuilder.decodeSampleFast(sample)
+    val d = DocBuilder.decodeSample(sample)
     docOut(url, lang, buckets, sample.nTokens, d, (System.nanoTime() - t0) / 1000L)
   }
 

@@ -122,19 +122,27 @@ object HtmlParser {
     slotHead(s) = id
   }
 
+  /** The one lowercasing rule for tag names, in both parsers: HTML folds
+    * only ASCII A-Z, so `DİV` and a Kelvin-sign `linK` stay off the table.
+    */
+  @inline private[html] def asciiLower(c: Int): Int = if (c >= 'A' && c <= 'Z') c + 32 else c
+
+  private[html] def asciiLower(s: String): String =
+    if (!s.exists(c => c >= 'A' && c <= 'Z')) s else s.map(c => asciiLower(c.toInt).toChar)
+
   /** Table id of the tag named html[start, end), or -1: each char matches
-    * after `Character.toLowerCase`.
+    * after [[asciiLower]].
     */
   private def tagIdOf(html: String, start: Int, end: Int): Int = {
     val len = end - start
     if (len <= 0 || len > MaxTagLen) return -1
-    val c0 = Character.toLowerCase(html.charAt(start))
+    val c0 = asciiLower(html.charAt(start).toInt)
     if (c0 >= 0x80) return -1
     var id = slotHead((len << 7) | c0)
     while (id >= 0) {
       val cand = TagNames(id)
       var m = 1
-      while (m < len && Character.toLowerCase(html.charAt(start + m)) == cand.charAt(m)) m += 1
+      while (m < len && asciiLower(html.charAt(start + m).toInt) == cand.charAt(m)) m += 1
       if (m == len) return id
       id = slotNext(id)
     }
@@ -144,7 +152,7 @@ object HtmlParser {
   /** Lowercased tag name for html[start, end), interning table tags. */
   private[html] def tagNameOf(html: String, start: Int, end: Int): String = {
     val id = tagIdOf(html, start, end)
-    if (id >= 0) TagNames(id) else html.substring(start, end).toLowerCase
+    if (id >= 0) TagNames(id) else asciiLower(html.substring(start, end))
   }
 
   /** Byte form of [[tagIdOf]] for the streaming scanner: only ASCII names
@@ -153,7 +161,7 @@ object HtmlParser {
   private[html] def tagIdOfBytes(b: Array[Byte], start: Int, end: Int): Int = {
     val len = end - start
     if (len <= 0 || len > MaxTagLen) return -1
-    @inline def lower(x: Int): Int = { val c = b(x) & 0xFF; if (c >= 'A' && c <= 'Z') c + 32 else c }
+    @inline def lower(x: Int): Int = asciiLower(b(x) & 0xFF)
     val c0 = lower(start)
     if (c0 >= 0x80) return -1
     var id = slotHead((len << 7) | c0)
@@ -167,21 +175,9 @@ object HtmlParser {
     -1
   }
 
-  /** Lowercased name of a tag off the table: non-ASCII names decode and
-    * lowercase like the String form, ASCII names lowercase per byte.
-    */
-  private[html] def offTableTagName(b: Array[Byte], start: Int, end: Int): String = {
-    val len = end - start
-    var k = start
-    while (k < end && (b(k) & 0xFF) < 0x80) k += 1
-    if (k < end) new String(b, start, len, java.nio.charset.StandardCharsets.UTF_8).toLowerCase
-    else {
-      val sb = new java.lang.StringBuilder(len)
-      k = start
-      while (k < end) { sb.append(Character.toLowerCase((b(k) & 0xFF).toChar)); k += 1 }
-      sb.toString
-    }
-  }
+  /** Lowercased name of a tag off the table, by the String form's rule. */
+  private[html] def offTableTagName(b: Array[Byte], start: Int, end: Int): String =
+    asciiLower(new String(b, start, end - start, java.nio.charset.StandardCharsets.UTF_8))
 
   /** Lowercased tag name for b[start, end), interning table tags. */
   private[html] def tagNameOfBytes(b: Array[Byte], start: Int, end: Int): String = {
@@ -189,19 +185,22 @@ object HtmlParser {
     if (id >= 0) TagNames(id) else offTableTagName(b, start, end)
   }
 
-  /** Class bits of a lowercased tag name (a non-ASCII name can lowercase
-    * onto the table: the Kelvin sign lowercases to `k`).
-    */
+  /** Class bits of a lowercased tag name. */
   private[html] def tagBits(name: String): Int = {
     val id = tagIdOf(name, 0, name.length)
     if (id >= 0) TagBits(id) else 0
   }
 
+  /** First index of a lowercase ASCII `target` in s at or after `from`,
+    * s read through [[asciiLower]] (so `</ſcript` does not close a script).
+    */
   private[html] def indexOfIgnoreCase(s: String, target: String, from: Int): Int = {
     var i = math.max(0, from)
     val max = s.length - target.length
     while (i <= max) {
-      if (s.regionMatches(true, i, target, 0, target.length)) return i
+      var m = 0
+      while (m < target.length && asciiLower(s.charAt(i + m).toInt) == target.charAt(m)) m += 1
+      if (m == target.length) return i
       i += 1
     }
     -1
@@ -239,7 +238,7 @@ object HtmlParser {
           i = if (end < 0) n else end + 1
         } else if (html.charAt(lt + 1) == '/') {
           val end = html.indexOf('>', lt + 1)
-          val name = html.substring(lt + 2, if (end < 0) n else end).trim.toLowerCase
+          val name = asciiLower(html.substring(lt + 2, if (end < 0) n else end).trim)
           // close the nearest matching open frame (tolerate mis-nesting)
           val idx = stack.lastIndexWhere(_.tag == name)
           if (idx > 0) while (stack.length > idx) closeFrame()
@@ -267,7 +266,7 @@ object HtmlParser {
                 val ks = j
                 while (j < n && html.charAt(j) != '=' && html.charAt(j) != '>' &&
                   html.charAt(j) != '/' && !html.charAt(j).isWhitespace) j += 1
-                val key = html.substring(ks, j).toLowerCase
+                val key = asciiLower(html.substring(ks, j))
                 while (j < n && html.charAt(j).isWhitespace) j += 1
                 if (j < n && html.charAt(j) == '=') {
                   j += 1

@@ -185,7 +185,7 @@ object Lineizer {
 
   /** Blocks -> AnnDoc: classification, union-find grouping, entity/relation
     * assembly. Shared verbatim by the tree path ([[lineize]]) and the
-    * streaming path ([[lineizeStream]]), so the two parsers can only differ
+    * streaming path ([[lineizeStreamBytes]]), so the two parsers can only differ
     * in block extraction — which the parity spec pins.
     */
   private def assemble(
@@ -334,17 +334,6 @@ object Lineizer {
     )
   }
 
-
-  /** Streaming equivalent of `lineize(HtmlParser.parse(html), uid)`: a
-    * single scan over the markup producing blocks directly — no DOM, no
-    * per-element attr/children collections, text substrings only inside
-    * positioned blocks. The tree path stays as the reference implementation
-    * and the parity spec asserts equality over the corpus and adversarial
-    * snippets.
-    */
-  def lineizeStream(html: String, uid: String): AnnDoc =
-    lineizeStreamBytes(html.getBytes(java.nio.charset.StandardCharsets.UTF_8), uid)
-
   /** `Character.isLetterOrDigit` and `Character.isWhitespace` of each
     * ASCII char, read per byte by the scanner's tag-name, key and value
     * loops instead of a `Character` type lookup.
@@ -378,13 +367,19 @@ object Lineizer {
     } else bad // 4-byte (supplementary) and invalid leads classify as FFFD
   }
 
-  /** Byte-level scanner body. All STRUCTURE characters of html are ASCII
-    * and UTF-8 continuation bytes never collide with them, so the scan
-    * works on the raw bytes and only text runs / attr values are decoded —
-    * the whole-page `new String(bytes)` cost (~a third of the lineize
-    * stage's allocation) disappears. Parity with the tree parser is pinned
-    * by RoundTripSpec over the corpus (incl. multibyte zh/ja docs),
-    * adversarial snippets, and the seeded fuzz.
+  /** Streaming equivalent of `lineize(HtmlParser.parse(html), uid)` over
+    * the page's UTF-8 bytes: a single scan producing blocks directly — no
+    * DOM, no per-element attr/children collections, text substrings only
+    * inside positioned blocks. The tree path stays as the reference
+    * implementation.
+    *
+    * All STRUCTURE characters of html are ASCII and UTF-8 continuation
+    * bytes never collide with them, so the scan works on the raw bytes and
+    * only text runs / attr values are decoded — the whole-page
+    * `new String(bytes)` cost (~a third of the lineize stage's allocation)
+    * disappears. Parity with the tree parser is pinned by RoundTripSpec
+    * over the corpus (incl. multibyte zh/ja docs), adversarial snippets,
+    * and the seeded fuzz.
     */
   def lineizeStreamBytes(b: Array[Byte], uid: String): AnnDoc = {
     import HtmlParser._
@@ -416,7 +411,7 @@ object Lineizer {
         var m = 0
         var ok = true
         while (ok && m < lit.length) {
-          if (Character.toLowerCase(u(k + m).toChar) != Character.toLowerCase(lit.charAt(m))) ok = false
+          if (asciiLower(u(k + m)) != lit.charAt(m)) ok = false
           m += 1
         }
         if (ok) return k
@@ -428,7 +423,7 @@ object Lineizer {
       if (at + lit.length > n) return false
       var k = 0
       while (k < lit.length) {
-        if (Character.toLowerCase(u(at + k).toChar) != lit.charAt(k)) return false
+        if (asciiLower(u(at + k)) != lit.charAt(k)) return false
         k += 1
       }
       true

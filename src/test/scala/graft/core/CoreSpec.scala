@@ -74,18 +74,21 @@ class DecodeSpec extends AnyFunSuite {
   private val text = Vector("Key", ":1", " v", "al", " x", "tra")
   private val box = Vector.tabulate(6)(i => Vector(i * 10, 0, i * 10 + 9, 10))
 
-  private def spots(ts: (Int, Int, Int)*): Vector[Spot] =
-    Spots.canonicalize(ts.toVector)
+  private val view = Decode.CompactTokView.ofTokens(text, box)
+  private val none = new SpotChannel(Array.emptyLongArray)
+
+  private def spots(ts: (Int, Int, Int)*): SpotChannel =
+    new SpotChannel(Spots.canonicalizePackedRaw(
+      ts.zipWithIndex.map { case ((i, j, t), k) => Spots.pack(i, j, k, t) }.toArray))
 
   test("single-line KV pair decodes with strip and merged boxes") {
     val d = Decode.decode(
-      text = text,
+      view = view,
       lineExtractionSpots = spots((0, 1, 1), (2, 3, 1)),
       entHeadSpots = spots((0, 2, 1)),
       entTailSpots = spots((1, 3, 1)),
-      groupHeadSpots = Vector.empty,
-      groupTailSpots = Vector.empty,
-      bbox = box
+      groupHeadSpots = none,
+      groupTailSpots = none
     )
     assert(d.lines.map(_.text) == Vector("Key:1", " val"))
     assert(d.kvPairs == Vector(KvPair("Key:1", "val", Vector(0, 0, 19, 10), Vector(20, 0, 39, 10))))
@@ -93,26 +96,24 @@ class DecodeSpec extends AnyFunSuite {
 
   test("multi-line value follows grouping chain validated against line extraction") {
     val d = Decode.decode(
-      text = text,
+      view = view,
       lineExtractionSpots = spots((0, 1, 1), (2, 3, 1), (4, 5, 1)),
       entHeadSpots = spots((0, 2, 1)),
       entTailSpots = spots((1, 5, 1)), // key tail 1 -> value chain-tail 5
       groupHeadSpots = spots((2, 4, 1)), // value line B head -> line C head
-      groupTailSpots = spots((3, 5, 1)), // value line B tail -> line C tail
-      bbox = box
+      groupTailSpots = spots((3, 5, 1)) // value line B tail -> line C tail
     )
     assert(d.kvPairs.map(p => (p.key, p.value)) == Vector(("Key:1", "val xtra")))
   }
 
   test("chain breaks when grouping tail disagrees with line extraction") {
     val d = Decode.decode(
-      text = text,
+      view = view,
       lineExtractionSpots = spots((0, 1, 1), (2, 3, 1), (4, 5, 1)),
       entHeadSpots = spots((0, 2, 1)),
       entTailSpots = spots((1, 3, 1)), // valid only if chain stops at B
       groupHeadSpots = spots((2, 4, 1)),
-      groupTailSpots = spots((3, 4, 1)), // grouping says tail 4, extraction says 5 -> break
-      bbox = box
+      groupTailSpots = spots((3, 4, 1)) // grouping says tail 4, extraction says 5 -> break
     )
     // chain broke after line B, so value tail = 3 which IS registered
     assert(d.kvPairs.map(p => (p.key, p.value)) == Vector(("Key:1", "val")))
@@ -120,27 +121,32 @@ class DecodeSpec extends AnyFunSuite {
 
   test("validation failure emits nothing") {
     val d = Decode.decode(
-      text = text,
+      view = view,
       lineExtractionSpots = spots((0, 1, 1), (2, 3, 1)),
       entHeadSpots = spots((0, 2, 1)),
-      entTailSpots = Vector.empty,
-      groupHeadSpots = Vector.empty,
-      groupTailSpots = Vector.empty,
-      bbox = box
+      entTailSpots = none,
+      groupHeadSpots = none,
+      groupTailSpots = none
     )
     assert(d.kvPairs.isEmpty)
     assert(d.lines.nonEmpty)
+    // a page with no entities: zero tokens, and pred and gt decode nothing
+    val empty = DocBuilder.build(AnnDoc("u", 1000, 1414, Vector.empty, Vector.empty, Vector.empty))
+    assert(empty.nTokens == 0)
+    Seq(false, true).foreach { gt =>
+      val e = DocBuilder.decodeSample(empty, decodeGt = gt)
+      assert(e.lines.isEmpty && e.kvPairs.isEmpty && e.extractedText.isEmpty, s"empty gt=$gt")
+    }
   }
 
   test("triu flip (tag=2) swaps key and value heads") {
     val d = Decode.decode(
-      text = text,
+      view = view,
       lineExtractionSpots = spots((0, 1, 1), (2, 3, 1)),
       entHeadSpots = spots((0, 2, 2)), // key head is 2, value head is 0
       entTailSpots = spots((1, 3, 2)), // key tail 3 -> value tail 1
-      groupHeadSpots = Vector.empty,
-      groupTailSpots = Vector.empty,
-      bbox = box
+      groupHeadSpots = none,
+      groupTailSpots = none
     )
     assert(d.kvPairs.map(p => (p.key, p.value)) == Vector(("val", "Key:1")))
   }
@@ -148,29 +154,28 @@ class DecodeSpec extends AnyFunSuite {
   test("self-loop in grouping head map terminates") {
     // grouping head 2 -> 2 would loop; reference breaks on equality
     val d = Decode.decode(
-      text = text,
+      view = view,
       lineExtractionSpots = spots((0, 1, 1), (2, 3, 1)),
       entHeadSpots = spots((0, 2, 1)),
       entTailSpots = spots((1, 3, 1)),
       groupHeadSpots = spots((2, 2, 1)),
-      groupTailSpots = Vector.empty,
-      bbox = box
+      groupTailSpots = none
     )
     assert(d.kvPairs.map(p => (p.key, p.value)) == Vector(("Key:1", "val")))
   }
 
   test("gt decode collapses multimaps to first tail per head") {
     val le = spots((0, 1, 1), (2, 3, 1))
-    val gh = Vector(Spot(0, 2, 1, 1.0), Spot(0, 4, 1, 1.0)) // head 0 -> tails 2 then 4
-    val pred = Decode.decode(text, le, Vector.empty, Vector.empty, gh, Vector.empty, box, decodeGt = false)
-    val gt = Decode.decode(text, le, Vector.empty, Vector.empty, gh, Vector.empty, box, decodeGt = true)
+    val gh = new SpotChannel(Array(Spots.cell(0, 2, 1), Spots.cell(0, 4, 1))) // head 0 -> tails 2 then 4
+    val pred = Decode.decode(view, le, none, none, gh, none, decodeGt = false)
+    val gt = Decode.decode(view, le, none, none, gh, none, decodeGt = true)
     assert(gt.groupHead == Vector((0, 2))) // first wins
     assert(pred.groupHead == Vector((0, 2))) // top-score: first at equal score wins
   }
 }
 
 class CanonicalizeSpec extends AnyFunSuite {
-  test("packed-long fast path == boxed fallback on random spot streams") {
+  test("canonicalizePackedRaw == the map+sort model on random spot streams") {
     val rng = new java.util.Random(17)
     (0 until 200).foreach { trial =>
       val l = 1 + rng.nextInt(40)
@@ -179,11 +184,15 @@ class CanonicalizeSpec extends AnyFunSuite {
         val j = i + rng.nextInt(l - i)
         (i, j, rng.nextInt(4)) // incl. tag 0 (dropped) and duplicate cells
       }
-      assert(Spots.canonicalize(spots) == Spots.canonicalizeBoxed(spots), s"trial $trial")
+      // the dense round trip: a cell keeps its last write, cells read back
+      // in (i, j) order, and tag-0 cells read back as nothing
+      val model = spots.foldLeft(Map.empty[(Int, Int), Int]) { case (m, (i, j, t)) => m.updated((i, j), t) }
+        .toVector.sortBy(_._1).collect { case ((i, j), t) if t != 0 => (i, j, t) }
+      val packed = spots.zipWithIndex.map { case ((i, j, t), k) => Spots.pack(i, j, k, t) }.toArray
+      val input = packed.clone()
+      assert(Spots.unpack(Spots.canonicalizePackedRaw(packed)) == model, s"trial $trial")
+      assert(packed.sameElements(input), s"trial $trial: input reordered")
     }
-    // out-of-range indices route to the boxed fallback and still work
-    val big = Seq((0, 1 << 21, 1), (5, 7, 2))
-    assert(Spots.canonicalize(big) == Spots.canonicalizeBoxed(big))
   }
 }
 
@@ -206,28 +215,6 @@ class IntMapsSpec extends AnyFunSuite {
       assert(m.size == model.size)
       model.foreach { case (k, v) => assert(m.getOrMinus1(k) == v) }
       assert(m.getOrMinus1(keyRange + 5) == -1)
-    }
-  }
-
-  test("IntBestOrdered keeps first position, strict-greater update") {
-    val rng = new java.util.Random(12)
-    (0 until 50).foreach { trial =>
-      val m = new IntBestOrdered
-      val model = scala.collection.mutable.LinkedHashMap.empty[Int, (Int, Double)]
-      (0 until 1 + rng.nextInt(200)).foreach { _ =>
-        val k = rng.nextInt(60)
-        val v = rng.nextInt(1000)
-        val s = rng.nextInt(5) * 0.25
-        m.putIfBetter(k, v, s)
-        model.get(k) match {
-          case None                     => model.put(k, (v, s))
-          case Some((_, s0)) if s > s0  => model.put(k, (v, s))
-          case _                        => ()
-        }
-      }
-      val got = Vector.newBuilder[(Int, Int, Double)]
-      m.foreachEntry((k, v, s) => got += ((k, v, s)))
-      assert(got.result() == model.toVector.map { case (k, (v, s)) => (k, v, s) }, s"trial $trial")
     }
   }
 
@@ -274,24 +261,6 @@ class QuadCorpusSpec extends AnyFunSuite {
         a.groupTailSpots.sameElements(b.groupTailSpots), s"doc $i spots")
     }
     assert(quads > 20, s"corpus must exercise the 8-coord path (got $quads quad lines)")
-  }
-
-  test("decodeSampleFast == decodeSample over the corpus, pred and gt paths") {
-    (0L until 120L).foreach { i =>
-      val sample = DocBuilder.build(graft.synth.CorpusGen.annFor(i).ann)
-      assert(DocBuilder.decodeSampleFast(sample) == DocBuilder.decodeSample(sample),
-        s"doc $i pred")
-      assert(DocBuilder.decodeSampleFast(sample, decodeGt = true) ==
-        DocBuilder.decodeSample(sample, decodeGt = true), s"doc $i gt")
-    }
-    // a page with no entities: zero tokens, and both paths decode nothing
-    val empty = DocBuilder.build(AnnDoc("u", 1000, 1414, Vector.empty, Vector.empty, Vector.empty))
-    assert(empty.nTokens == 0)
-    Seq(false, true).foreach { gt =>
-      val d = DocBuilder.decodeSampleFast(empty, decodeGt = gt)
-      assert(d == DocBuilder.decodeSample(empty, decodeGt = gt), s"empty gt=$gt")
-      assert(d.lines.isEmpty && d.kvPairs.isEmpty && d.extractedText.isEmpty, s"empty gt=$gt")
-    }
   }
 }
 

@@ -20,6 +20,15 @@ class RefVectorSpec extends AnyFunSuite {
 
   private def intSeq(n: JsonNode): Vector[Int] = n.elements.asScala.map(_.asInt).toVector
 
+  /** A `[[i, j, tag, score], ...]` spot list as the packed channel the
+    * engine decodes, scores kept.
+    */
+  private def channel(n: JsonNode): SpotChannel = {
+    val rows = n.elements.asScala.map(_.elements.asScala.toVector).toVector
+    new SpotChannel(rows.map(v => Spots.cell(v(0).asInt, v(1).asInt, v(2).asInt)).toArray,
+      rows.map(_(3).asDouble).toArray)
+  }
+
   test("sort_boxes matches reference permutation") {
     root.get("sort_boxes").elements.asScala.foreach { c =>
       val boxes = c.get("boxes").elements.asScala.map(intSeq).toVector
@@ -63,11 +72,6 @@ class RefVectorSpec extends AnyFunSuite {
   }
 
   test("sample_decode_peneo full chain matches executed reference") {
-    def spots(n: JsonNode): Vector[Spot] =
-      n.elements.asScala.map { s =>
-        val v = s.elements.asScala.toVector
-        Spot(v(0).asInt, v(1).asInt, v(2).asInt, v(3).asDouble)
-      }.toVector
     def pairs(n: JsonNode): Vector[(Int, Int)] =
       n.elements.asScala.map(e => (e.get(0).asInt, e.get(1).asInt)).toVector
     def multi(n: JsonNode): Vector[(Int, Vector[Int])] =
@@ -78,13 +82,12 @@ class RefVectorSpec extends AnyFunSuite {
       val text = c.get("text").elements.asScala.map(_.asText).toVector
       val bbox = c.get("bbox").elements.asScala.map(intSeq).toVector
       val got = Decode.decode(
-        text = text,
-        lineExtractionSpots = spots(c.get("le")),
-        entHeadSpots = spots(c.get("eh")),
-        entTailSpots = spots(c.get("et")),
-        groupHeadSpots = spots(c.get("gh")),
-        groupTailSpots = spots(c.get("gtl")),
-        bbox = bbox,
+        view = Decode.CompactTokView.ofTokens(text, bbox),
+        lineExtractionSpots = channel(c.get("le")),
+        entHeadSpots = channel(c.get("eh")),
+        entTailSpots = channel(c.get("et")),
+        groupHeadSpots = channel(c.get("gh")),
+        groupTailSpots = channel(c.get("gtl")),
         decodeGt = c.get("gt").asBoolean,
         scoreThresh = c.get("thresh").asDouble
       )
@@ -179,10 +182,7 @@ class RefVectorSpec extends AnyFunSuite {
 
   test("parse_matrix_spots matches reference dict-order and tie semantics") {
     root.get("parse_matrix_spots").elements.asScala.foreach { c =>
-      val spots = c.get("spots").elements.asScala.map { s =>
-        val v = s.elements.asScala.toVector
-        Spot(v(0).asInt, v(1).asInt, v(2).asInt, v(3).asDouble)
-      }.toVector
+      val spots = channel(c.get("spots"))
       val top = c.get("top").asBoolean
       val triu = c.get("triu").asBoolean
       val thresh = c.get("thresh").asDouble

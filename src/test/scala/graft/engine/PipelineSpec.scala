@@ -354,7 +354,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("windowed parse-spots backend matches the kernel (two-backend parity)") {
     ensured()
-    import graft.core.{Spot, Spots}
+    import graft.core.{SpotChannel, Spots}
     val spots = spark.read.parquet(Corpus.spotsPath(sfDir))
     val windowed = WindowedSpots.parseTop(spots, triuMode = true)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
@@ -362,8 +362,9 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getDouble(5)))
       .groupBy(_._1)
       .flatMap { case (doc, rows) =>
-        val ordered = rows.sortBy(_._2).map(r => Spot(r._3, r._4, r._5, r._6)).toSeq
-        Spots.parseTop(ordered, triuMode = true).toVector.map { case (h, t) => (doc, h, t) }
+        val ordered = rows.sortBy(_._2)
+        val channel = new SpotChannel(ordered.map(r => Spots.cell(r._3, r._4, r._5)), ordered.map(_._6))
+        Spots.parseTop(channel, triuMode = true).toVector.map { case (h, t) => (doc, h, t) }
       }.toSet
     assert(windowed == kernel)
   }
