@@ -365,8 +365,9 @@ object SparkEntry {
         d.filter(col("doc_id") % 10 === 7))
     }),
     // --- embedding similarity / ANN ---
-    // cellCap=50 exercises BOTH paths at sf0.01: labels with >50 members are
-    // LSH-sub-bucketed (hot-cell guard), the rest keep exact within-cell pairs
+    // cellCap=50 exercises BOTH block keys at sf0.01: labels with >50 members
+    // are LSH-sub-bucketed, the rest keep whole-cell blocks; no block there
+    // exceeds the cap, so the purge evicts nothing
     "s1_cos_neardup" -> ((s, dir) => Similarity.cosineNearDupPairs(emb(s, dir), cellCap = 50)),
     "s2_ann_brute" -> ((s, dir) => Similarity.bruteForceTopK(emb(s, dir))),
     "s3_ann_ivf" -> ((s, dir) => Similarity.ivfTopK(emb(s, dir))),
@@ -377,7 +378,7 @@ object SparkEntry {
     "s7_kmeans" -> ((s, dir) => Similarity.kmeans(emb(s, dir))),
     "s8_ann_ivf_trained" -> ((s, dir) => Similarity.trainedIvfTopK(emb(s, dir))),
     // cellCap=50 as in s1/s6: the trained cells at sf0.01 (500 vecs / 4
-    // centroids) are all hot, so the sub-bucket guard path is what runs
+    // centroids) are all hot, so every block is a sign-bit sub-bucket
     "s9_semdedup" -> ((s, dir) => Similarity.semDedup(emb(s, dir), cellCap = 50)),
     "s10_pq_adc" -> ((s, dir) => Similarity.pqTopK(emb(s, dir))),
     "s11_prefix_recall" -> ((s, dir) => Similarity.prefixRecall(emb(s, dir))),

@@ -11,8 +11,8 @@ import ColFns._
   *                the 16-byte hash; at 100 TB this is the cheapest possible
   *                exact dedup — no text comparison ever shuffles).
   *  - MinHash+LSH: word-shingle minhash signatures, banded into bucket keys,
-  *                candidate pairs via an equi-join on the band key (the
-  *                classic shingle->minhash->band->bucket-join; all-pairs is
+  *                candidate pairs within each capped band bucket (the
+  *                classic shingle->minhash->band->bucket chain; all-pairs is
   *                never materialized, so cost is ~linear in near-dup mass).
   *  - SimHash:    32-bit sign-of-weighted-bit-sums over word hashes; explode
   *                + hash-aggregate form so the bit sums get map-side partial
@@ -97,10 +97,12 @@ object Dedup {
     ex.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Deterministic per-band-bucket cap — the guard that keeps every LSH
-    * band join linear at corpus scale: a cluster of m identical documents
-    * shares every band, so an uncapped bucket join goes m²/2 on that one
-    * key. Buckets keep only the `cap` members with the smallest
+  /** Block purging, the middle link of the blocking chain ([[blockPairs]]):
+    * the deterministic per-block cap that keeps every pair join linear at
+    * corpus scale. A cluster of m identical items shares every block, so
+    * an uncapped block goes m²/2 on that one key — minhash bands, banded-64
+    * fingerprints and a hot cosine cell whose vectors share one sign
+    * signature alike. Blocks keep only the `cap` members with the smallest
     * h32(doc_id ':' bucketKey ':bcap') priority — hash-priority, so the
     * kept set is reproducible and independent of partition layout (the
     * [[Prep.stratifiedSample]] rule), and SALTED BY THE BUCKET KEY: an
@@ -117,9 +119,7 @@ object Dedup {
     * that overflows a bucket is dominated by EXACT-duplicate clusters —
     * which belong to the cheaper exact-dedup pass run FIRST (the p8
     * composition order) — and by boilerplate collisions, where linear
-    * cost is the priority. An orthogonal sub-bucket split (the s1 cellCap
-    * device) cannot guard this join: identical signatures sub-bucket
-    * identically.
+    * cost is the priority.
     *
     * Determinism contract: ranking ties are broken by (pri, doc_id, then
     * every payload column in frame order), so even a malformed input with
@@ -150,38 +150,69 @@ object Dedup {
       .drop("pri", "rn1", "rn")
   }
 
-  /** The bucket-key-salted cap priority, as SQL (shared by
-    * [[sqlCapBuckets]] and [[Prep.endToEndSql]]'s per-source cap — one
-    * definition so the engines can't drift).
-    */
-  private[ops] def sqlCapPri(keyCol: String): String =
-    sqlH32(s"CAST(doc_id AS VARCHAR) || ':' || CAST($keyCol AS VARCHAR) || ':bcap'")
-
   /** DuckDB mirror of [[capBuckets]]: the semantically-equal single-window
-    * cap over a `bands(doc_id, ..., bkey)` CTE named `bandsCte`. `cols`
-    * must list doc_id plus the payload columns IN THE SPARK FRAME'S
-    * COLUMN ORDER — they double as the determinism tie-break keys.
+    * cap over a `bands(doc_id, ..., <key>)` CTE named `bandsCte`, with the
+    * same bucket-key-salted priority. `cols` must list doc_id plus the
+    * payload columns IN THE SPARK FRAME'S COLUMN ORDER — they double as
+    * the determinism tie-break keys.
     */
-  private[ops] def sqlCapBuckets(bandsCte: String, cols: String, cap: Int): String = {
+  private[ops] def sqlCapBuckets(bandsCte: String, cols: String, cap: Int,
+                                 key: String = "bkey"): String = {
+    val pri = sqlH32(s"CAST(doc_id AS VARCHAR) || ':' || CAST($key AS VARCHAR) || ':bcap'")
     // NULLS FIRST on every tie-break key: Spark's ASC default ranks NULL
     // first while DuckDB's default ranks it last — a NULL payload at the
     // cap boundary would otherwise make the engines keep different rows,
     // exactly the malformed-duplicate-doc_id case this ordering defends
-    val order = (Seq(sqlCapPri("bkey")) ++ cols.split(",").map(_.trim))
+    val order = (Seq(pri) ++ cols.split(",").map(_.trim))
       .map(_ + " NULLS FIRST").mkString(", ")
-    s"""(SELECT $cols, bkey FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY bkey
+    s"""(SELECT $cols, $key FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY $key
        |      ORDER BY $order) AS rn
        |    FROM $bandsCte) WHERE rn <= $cap)""".stripMargin
   }
 
+  /** The one blocking chain of every near-dup pair operator (SparkER's
+    * block building → purging → comparisons): the family builds a
+    * `(doc_id, payload..., bkey)` block frame (minhash bands
+    * [[minhashBandRows]], banded-64 bands [[banded64]], or the cosine
+    * [[Similarity]] cell key), [[capBuckets]] purges it, and this emitter
+    * turns each capped block into its pairs `(id_a, id_b)`, `id_a < id_b`,
+    * with each payload column `p` of both sides as `p_a` / `p_b`. The
+    * family then scores each pair with a native column and keeps its own
+    * DISTINCT. No self-join: a block's members collect into one bounded
+    * sorted list and each pairs with those after it (`posexplode` +
+    * `slice`, native generators, no lambda), riding the partitioning the
+    * cap window produced. A doc_id listed twice in a block emits no
+    * self-pair, as in [[sqlBlockPairs]]'s `a.doc_id < b.doc_id`.
+    */
+  private[ops] def blockPairs(capped: DataFrame, payload: Seq[String]): DataFrame = {
+    val ms = col("ms")
+    capped.groupBy(col("bkey"))
+      .agg(sort_array(collect_list(struct((col("doc_id") +: payload.map(col)): _*))).as("ms"))
+      .filter(size(ms) >= 2)
+      .select(ms, posexplode(ms).as(Seq("i", "a")))
+      .select(col("a"), explode(slice(ms, col("i") + 2, size(ms) - col("i") - 1)).as("b"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .select((Seq(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b")) ++
+        payload.flatMap(p => Seq(col(s"a.$p").as(s"${p}_a"), col(s"b.$p").as(s"${p}_b")))): _*)
+  }
+
+  /** DuckDB mirror of [[blockPairs]] over a capped CTE `capped(doc_id,
+    * payload..., bkey)`: the one within-block self-join of the oracles.
+    */
+  private[ops] def sqlBlockPairs(capped: String, payload: Seq[String]): String = {
+    val cols = ("a.doc_id AS id_a" +: "b.doc_id AS id_b" +:
+      payload.flatMap(p => Seq(s"a.$p AS ${p}_a", s"b.$p AS ${p}_b"))).mkString(", ")
+    s"SELECT $cols FROM $capped a JOIN $capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id"
+  }
+
   /** LSH candidate pairs: band the signature (rows=2), cap each band
     * bucket ([[capBuckets]] — a mass of exact duplicates otherwise goes
-    * quadratic in one bucket), bucket-join on the band key, emit distinct
-    * (id_a < id_b) pairs. Ends in an orderBy for oracle determinism —
-    * compositions that consume the pairs mid-chain ([[dedupComponents]])
-    * use [[lshCandidatePairsUnordered]] so no operator-embedded global
-    * sort survives into a larger plan (the p8 single-sort gate).
+    * quadratic in one bucket), pair within each bucket ([[blockPairs]]),
+    * emit distinct (id_a < id_b) pairs. Ends in an orderBy for oracle
+    * determinism — compositions consuming the pairs mid-chain
+    * ([[dedupComponents]]) use [[lshCandidatePairsUnordered]] so no
+    * operator-embedded global sort survives into a larger plan (p8's gate).
     */
   def lshCandidatePairs(docs: DataFrame, k: Int = 8, n: Int = 4,
                         bucketCap: Int = 10): DataFrame =
@@ -205,36 +236,8 @@ object Dedup {
 
   /** [[lshCandidatePairs]] without the final global sort, for composition. */
   def lshCandidatePairsUnordered(docs: DataFrame, k: Int = 8, n: Int = 4,
-                                 bucketCap: Int = 10): DataFrame = {
-    val banded = capBuckets(minhashBandRows(docs, k, n), bucketCap)
-    // pairs WITHOUT a self-join: collect each capped bucket's members (<=
-    // bucketCap by construction, so the list is bounded) and emit pairs in
-    // a typed kernel. A self-join would recompute the whole signature
-    // pipeline on BOTH legs (no exchange reuse under a broadcast plan) and
-    // shuffle the banded frame twice; this computes signatures once and the
-    // bucket agg rides the partitioning the cap window already produced.
-    // Singleton buckets (the overwhelming majority at corpus scale) are
-    // dropped by a codegen size filter BEFORE the object boundary.
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded.groupBy(col("bkey")).agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(col("ids")).as[Seq[Long]]
-      .flatMap { ids =>
-        val arr = ids.toArray
-        java.util.Arrays.sort(arr)
-        for {
-          i <- arr.indices.iterator
-          j <- (i + 1 until arr.length).iterator
-          // a doc_id appearing twice in one bucket (duplicate input rows)
-          // must not emit a self-pair — the removed self-join's
-          // a.doc_id < b.doc_id excluded it structurally
-          if arr(i) != arr(j)
-        } yield (arr(i), arr(j))
-      }
-      .toDF("id_a", "id_b")
-      .distinct()
-  }
+                                 bucketCap: Int = 10): DataFrame =
+    blockPairs(capBuckets(minhashBandRows(docs, k, n), bucketCap), Nil).distinct()
 
   /** The blocking + block-purging half of the banded-64 near-dup chain
     * shared by every 64-bit fingerprint family (text [[simhashPairs]],
@@ -256,7 +259,7 @@ object Dedup {
       explode(array(bandKeys: _*)).as("bkey")), cap)
   }
 
-  /** DuckDB mirror of [[banded64]] + [[bandedHammingPairsUnordered]]: the
+  /** DuckDB mirror of [[banded64Pairs]]: the
     * `bands`, `capped` and `pairs(id_a, id_b, hamming)` CTEs over the
     * fingerprint CTE `fp`, whose 64-bit halves are the columns `hi`/`lo`.
     * The cap's tie-break keys are (doc_id, hi, lo), the Spark frame's
@@ -270,48 +273,24 @@ object Dedup {
        |    unnest([${bands.mkString(", ")}]) AS bkey FROM $fp),
        |capped AS ${sqlCapBuckets("bands", s"doc_id, $hi, $lo", cap)},
        |pairs AS (SELECT DISTINCT id_a, id_b, hamming FROM (
-       |    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |      CAST(bit_count(xor(a.$hi, b.$hi)) + bit_count(xor(a.$lo, b.$lo)) AS INT) AS hamming
-       |    FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id)
+       |    SELECT id_a, id_b, CAST(bit_count(xor(${hi}_a, ${hi}_b))
+       |      + bit_count(xor(${lo}_a, ${lo}_b)) AS INT) AS hamming
+       |    FROM (${sqlBlockPairs("capped", Seq(hi, lo))}))
        |  WHERE hamming <= $maxHamming)""".stripMargin
   }
 
-  /** Shared no-self-join band-pair kernel for the [[banded64]] families:
-    * capped buckets collect into bounded (doc_id, hi, lo) lists, pairs +
-    * hamming (Long.bitCount summed over both halves, as in SQL) emit in a
-    * typed kernel. Guards duplicate doc_ids within a bucket (no
-    * self-pairs, matching the relational a.doc_id < b.doc_id of
-    * [[sqlBanded64Pairs]]).
+  /** Pairs of a `(doc_id, hi, lo)` fingerprint frame within `maxHamming`
+    * — the Spark side of [[sqlBanded64Pairs]]: [[banded64]] blocks through
+    * [[blockPairs]], scored by the bit count of both halves' xor. Unordered:
+    * only the query entry points sort.
     */
-  private[ops] def bandedHammingPairs(banded: DataFrame, maxHamming: Int): DataFrame =
-    bandedHammingPairsUnordered(banded, maxHamming).orderBy("id_a", "id_b")
-
-  /** [[bandedHammingPairs]] without the final global sort, for composition
-    * ([[Media.imageComponents]]) — the [[lshCandidatePairsUnordered]] rule:
-    * no operator-embedded orderBy survives into a larger plan.
-    */
-  private[ops] def bandedHammingPairsUnordered(banded: DataFrame,
-                                               maxHamming: Int): DataFrame = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded.groupBy(col("bkey"))
-      .agg(collect_list(struct(col("doc_id"), col("hi"), col("lo"))).as("ms"))
-      .filter(size(col("ms")) >= 2)
-      .select(col("ms")).as[Seq[(Long, Long, Long)]]
-      .flatMap { ms =>
-        val arr = ms.toArray.sortBy(_._1)
-        for {
-          i <- arr.indices.iterator
-          j <- (i + 1 until arr.length).iterator
-          if arr(i)._1 != arr(j)._1
-        } yield (arr(i)._1, arr(j)._1,
-          java.lang.Long.bitCount(arr(i)._2 ^ arr(j)._2) +
-            java.lang.Long.bitCount(arr(i)._3 ^ arr(j)._3))
-      }
-      .toDF("id_a", "id_b", "hamming")
+  private[ops] def banded64Pairs(fp: DataFrame, cap: Int, maxHamming: Int): DataFrame =
+    blockPairs(banded64(fp, cap), Seq("hi", "lo"))
+      .select(col("id_a"), col("id_b"),
+        (bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) +
+          bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-  }
 
   /** The shingle -> signature -> band chain as a CTE block exposing
     * `bands(doc_id, bkey)` — the SQL mirror of [[minhashBandRows]], shared
@@ -341,8 +320,7 @@ object Dedup {
                                   bucketCap: Int): String = {
     s"""${sqlBandCtes(table, k, n)},
        |capped AS ${sqlCapBuckets("bands", "doc_id", bucketCap)},
-       |lshp AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM capped a JOIN capped b ON a.bkey = b.bkey AND a.doc_id < b.doc_id)""".stripMargin
+       |lshp AS (SELECT DISTINCT id_a, id_b FROM (${sqlBlockPairs("capped", Nil)}))""".stripMargin
   }
 
   def lshCandidatePairsSql(table: String, k: Int = 8, n: Int = 4,
@@ -491,16 +469,16 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs, Manku-style: the [[simhash64]] signature
-    * through the shared [[banded64]] chain (four 16-bit bands, capped band
-    * buckets, bucket-join, verify with the summed bit_count over both
-    * halves). Recall is exact for the default maxHamming up to bucket-cap
-    * eviction — see the [[capBuckets]] recall note; the per-bucket salt
-    * makes all-bucket eviction the unlikely case rather than the
-    * guaranteed one.
+    * through the shared [[banded64Pairs]] chain (four 16-bit bands, capped
+    * band buckets, within-bucket pairs, verified by the summed bit_count
+    * over both halves). Recall is exact for the default maxHamming up to
+    * bucket-cap eviction — see the [[capBuckets]] recall note; the
+    * per-bucket salt makes all-bucket eviction the unlikely case rather
+    * than the guaranteed one.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 2,
                    bucketCap: Int = 20): DataFrame =
-    bandedHammingPairs(banded64(simhash64(docs), bucketCap), maxHamming)
+    banded64Pairs(simhash64(docs), bucketCap, maxHamming).orderBy("id_a", "id_b")
 
   def simhashPairsSql(table: String, maxHamming: Int = 2,
                       bucketCap: Int = 20): String = {
@@ -1099,7 +1077,7 @@ object Dedup {
   /** The shared dupSpans detector CTE chain (docs -> positional shingles
     * -> duplicated-shingle flags -> islands -> spans), ONE definition used
     * by both [[dupSpansSql]] and [[exciseSpansSql]] so the d9 detector and
-    * the d10 surgery can never drift (the [[sqlCapPri]] lesson: a
+    * the d10 surgery can never drift (the [[sqlCapBuckets]] lesson: a
     * hand-inlined copy of a shared rule is where cross-engine bugs breed).
     * Exposes `docs(doc_id, ws)` and `spans(doc_id, span_start, span_end,
     * n_pos)` to the caller's query tail.

@@ -764,14 +764,14 @@ object Media {
     * every modality (text d6, embeddings s6, images m7, audio m11, video
     * m13) on the one [[Dedup.componentsFrom]] propagation core. Nodes are
     * all rows of the kind (a narrow kind-pruned doc_id scan), so items
-    * with no near-dup stay singletons; the pair leg is the UNORDERED
-    * kernel, so no operator-embedded sort enters the fixpoint loop.
+    * with no near-dup stay singletons; the pair leg is the unordered
+    * [[Dedup.banded64Pairs]], so no operator-embedded sort enters the
+    * fixpoint loop.
     */
   private def components(media: Dataset[MediaRow], kind: String, maxHamming: Int,
                          bucketCap: Int, maxIters: Int): DataFrame = {
     val nodes = media.toDF().filter(col("kind") === kind).select(col("doc_id"))
-    val pairs = Dedup.bandedHammingPairsUnordered(
-      Dedup.banded64(fingerprint64(media, kind), bucketCap), maxHamming)
+    val pairs = Dedup.banded64Pairs(fingerprint64(media, kind), bucketCap, maxHamming)
       .select(col("id_a"), col("id_b"))
     Dedup.componentsFrom(nodes, pairs, maxIters)
   }
@@ -808,8 +808,8 @@ object Media {
     */
   def aHashPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
                  bucketCap: Int = 40): DataFrame =
-    Dedup.bandedHammingPairs(Dedup.banded64(fingerprint64(media, "image"), bucketCap),
-      maxHamming)
+    Dedup.banded64Pairs(fingerprint64(media, "image"), bucketCap, maxHamming)
+      .orderBy("id_a", "id_b")
 
   /** DuckDB mirror of [[aHashPairs]] over [[aHashCte]]. */
   def aHashPairsSql(parquetGlob: String, maxHamming: Int = 3,
@@ -834,8 +834,8 @@ object Media {
     */
   def audioPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
                  bucketCap: Int = 40): DataFrame =
-    Dedup.bandedHammingPairs(Dedup.banded64(fingerprint64(media, "audio"), bucketCap),
-      maxHamming)
+    Dedup.banded64Pairs(fingerprint64(media, "audio"), bucketCap, maxHamming)
+      .orderBy("id_a", "id_b")
 
   /** The audio fingerprint recomputed from write-side sample truth (window
     * energies via list slices over the payload string), as CTEs ending in
@@ -882,8 +882,8 @@ object Media {
     */
   def videoPairs(media: Dataset[MediaRow], maxHamming: Int = 3,
                  bucketCap: Int = 40): DataFrame =
-    Dedup.bandedHammingPairs(Dedup.banded64(fingerprint64(media, "video"), bucketCap),
-      maxHamming)
+    Dedup.banded64Pairs(fingerprint64(media, "video"), bucketCap, maxHamming)
+      .orderBy("id_a", "id_b")
 
   /** The video fingerprint recomputed from the write-side frame truth
     * (per-pixel temporal sums, the engine's block geometry, the same

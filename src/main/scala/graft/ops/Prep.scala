@@ -804,7 +804,7 @@ object Prep {
 
   /** [[shardsFor]] as a DuckDB scalar subquery over `fromRel` — ONE
     * definition shared by [[packChunksAutoSql]] and [[endToEndSql]] so the
-    * mirrors can't drift from each other (the [[Dedup.sqlCapPri]] lesson:
+    * mirrors can't drift from each other (the [[Dedup.sqlCapBuckets]] lesson:
     * a hand-inlined copy of a shared rule is where cross-engine bugs
     * breed). `ceil(n / t.0)` == the Scala `(n + t - 1) / t` for n >= 0.
     */
@@ -974,7 +974,6 @@ object Prep {
       defaultRate: Double = 0.35, capPerSource: Int = 30,
       budget: Long = 256L, targetPerShard: Long = 1000000L,
       k: Int = 8, n: Int = 4, bucketCap: Int = 10): String = {
-    val spri = Dedup.sqlCapPri("source")
     val nShards = shardsForSql("samp", targetPerShard)
     val rateCase = rates.map { case (l, r) => s"WHEN lang = '$l' THEN ${(r * 1e6).toLong}" }
       .mkString("CASE ", " ", s" ELSE ${(defaultRate * 1e6).toLong} END")
@@ -990,11 +989,7 @@ object Prep {
        |  FROM reach GROUP BY node),
        |canon AS (SELECT e.* FROM exsurv e
        |  JOIN comp c ON e.doc_id = c.doc_id WHERE c.component = e.doc_id),
-       |scap AS (SELECT doc_id, lang, text FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY source
-       |      ORDER BY $spri NULLS FIRST, doc_id NULLS FIRST,
-       |        lang NULLS FIRST, text NULLS FIRST) AS rn
-       |    FROM canon) WHERE rn <= $capPerSource),
+       |scap AS ${Dedup.sqlCapBuckets("canon", "doc_id, lang, text", capPerSource, key = "source")},
        |samp AS (SELECT doc_id, lang, text FROM scap
        |  WHERE ${sqlH32("CAST(doc_id AS VARCHAR) || ':mix1'")} % 1000000
        |    < ($rateCase)),

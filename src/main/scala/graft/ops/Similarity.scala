@@ -19,8 +19,10 @@ import ColFns._
   *    sign-bit bucket ids computed as a narrow projection — bucket-join
   *    gives the candidate set at scale.
   *
-  * Near-duplicate detection (embedding-cosine) = within-cell pairs over a
-  * cosine threshold. All dot products are sequential double folds
+  * Near-duplicate detection (embedding-cosine) = pairs over a cosine
+  * threshold inside capped cell blocks ([[cellKey]]), through the same
+  * block → purge → pair chain as every dedup family ([[Dedup.blockPairs]]).
+  * All dot products are sequential double folds
   * ([[ColFns.dot]]) so the DuckDB oracles are bit-exact; doubles are
   * emitted floor-scaled to micro units.
   */
@@ -44,7 +46,7 @@ object Similarity {
     emb.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
 
   /** Sign-bit LSH bucket id of an embedding column (shared by lshBuckets and
-    * the hot-cell sub-bucketing of cosineNearDupPairs).
+    * the hot-cell block key, [[cellKey]]).
     */
   private def bucketCol(embedding: Column): Column =
     (0 until NumPlanes).map { p =>
@@ -52,99 +54,98 @@ object Similarity {
       when(d >= 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** Embedding near-dup: within-cell pairs with cosine >= thresh.
-    *
-    * Skew guard: a hot cell (label with > cellCap members) would make the
-    * within-cell pair join quadratic ON THE SKEW KEY. Cells above the cap
-    * are therefore sub-bucketed by the 8-plane LSH signature — candidates
-    * become (label, bucket) pairs, an expected ~256x reduction per hot cell
-    * — at the documented cost of missing near-dup pairs that straddle a
-    * hyperplane inside a hot cell. Cell sizes come from a map-side partial
-    * aggregate broadcast back, so the guard adds no extra full shuffle.
+  /** DuckDB mirror of [[bucketCol]] over an embedding SQL fragment, as BIGINT. */
+  private def sqlBucket(embedding: String): String = {
+    val bits = (0 until NumPlanes).map { p =>
+      val d = s"list_reduce(list_transform(generate_series(1,$Dim), " +
+        s"i -> CAST($embedding[i] AS DOUBLE) * (${planes(p).mkString("[", ",", "]")})[i]), (x,y) -> x+y)"
+      s"(CASE WHEN ($d) >= 0 THEN ${1L << p} ELSE 0 END)"
+    }.mkString(" + ")
+    s"CAST($bits AS BIGINT)"
+  }
+
+  /** The cosine family's block key: `L:<cell>` for a cell of at most
+    * `cellCap` members, else `H:<cell>:<sign bits>` (an expected ~256x cut
+    * of a hot cell's pairs, missing pairs that straddle a hyperplane).
+    */
+  private def cellKey(cell: Column, cellN: Column, embedding: Column, cellCap: Int): Column =
+    when(cellN > cellCap, concat_ws(":", lit("H"), cell, bucketCol(embedding)))
+      .otherwise(concat_ws(":", lit("L"), cell))
+
+  /** DuckDB mirror of [[cellKey]]; the embedding column is `embedding`. */
+  private def sqlCellKey(cell: String, cellN: String, cellCap: Int): String =
+    s"CASE WHEN $cellN > $cellCap THEN 'H:' || $cell || ':' || ${sqlBucket("embedding")} " +
+      s"ELSE 'L:' || $cell END"
+
+  /** Cosine pairs of `emb(vec_id, embedding, <cell>)` through the
+    * [[Dedup.blockPairs]] chain at `cap = cellCap`, scored by `graft_dot`
+    * over precomputed norms; cell sizes are a broadcast partial aggregate.
+    */
+  private def cosinePairsUnordered(emb: DataFrame, cell: String, thresh: Double,
+                                   cellCap: Int): DataFrame = {
+    val sizes = broadcast(emb.groupBy(col(cell)).agg(count(lit(1)).as("cell_n")))
+    val blocks = withNorm(emb).join(sizes, cell)
+      .select(col("vec_id").as("doc_id"), col("embedding"), col("nrm"),
+        cellKey(col(cell), col("cell_n"), col("embedding"), cellCap).as("bkey"))
+    Dedup.blockPairs(Dedup.capBuckets(blocks, cellCap), Seq("embedding", "nrm"))
+      .select(col("id_a"), col("id_b"),
+        (dot(col("embedding_a"), col("embedding_b")) / (col("nrm_a") * col("nrm_b"))).as("cos"))
+      .filter(col("cos") >= thresh)
+  }
+
+  /** DuckDB mirror of [[cosinePairsUnordered]], ending in `pairs(id_a,
+    * id_b, cos)`. Spark's extra tie-break key `nrm` follows from `embedding`.
+    */
+  private def sqlCosinePairCtes(src: String, cell: String, thresh: Double,
+                                cellCap: Int): String =
+    s"""sz AS (SELECT $cell, count(*) AS cell_n FROM $src GROUP BY $cell),
+       |blocks AS (SELECT e.vec_id AS doc_id, e.embedding,
+       |    ${sqlCellKey(s"e.$cell", "sz.cell_n", cellCap)} AS bkey
+       |  FROM $src e JOIN sz ON e.$cell = sz.$cell),
+       |capped AS ${Dedup.sqlCapBuckets("blocks", "doc_id, embedding", cellCap)},
+       |pairs AS (SELECT * FROM (
+       |    SELECT id_a, id_b, ${sqlCosine("embedding_a", "embedding_b", Dim)} AS cos
+       |    FROM (${Dedup.sqlBlockPairs("capped", Seq("embedding"))}))
+       |  WHERE cos >= $thresh)""".stripMargin
+
+  /** Embedding near-dup: pairs with cosine >= thresh inside each capped
+    * [[cellKey]] block of the `label` cell ([[cosinePairsUnordered]]).
     */
   def cosineNearDupPairs(
       emb: DataFrame,
       thresh: Double = 0.3,
       cellCap: Int = 10000
-  ): DataFrame = {
-    val sizes = broadcast(emb.groupBy(col("label")).agg(count(lit(1)).as("cell_n")))
-    val keyed = withNorm(emb)
-      .join(sizes, "label")
-      .withColumn("jk",
-        when(col("cell_n") > cellCap,
-          concat_ws(":", lit("H"), col("label"), bucketCol(col("embedding"))))
-          .otherwise(concat_ws(":", lit("L"), col("label"))))
-    val a = keyed.as("a")
-    val b = keyed.as("b")
-    val cos = dot(col("a.embedding"), col("b.embedding")) / (col("a.nrm") * col("b.nrm"))
-    a.join(b, col("a.jk") === col("b.jk") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"), cos.as("cos"))
-      .filter(col("cos") >= thresh)
+  ): DataFrame =
+    cosinePairsUnordered(emb, "label", thresh, cellCap)
       .select(col("id_a"), col("id_b"), micro(col("cos")).as("cos_micro"))
       .orderBy("id_a", "id_b")
-  }
 
-  def cosineNearDupPairsSql(table: String, thresh: Double = 0.3, cellCap: Int = 10000): String = {
-    def lits(p: Int): String = planes(p).mkString("[", ",", "]")
-    val bits = (0 until NumPlanes).map { p =>
-      val d = s"list_reduce(list_transform(generate_series(1,$Dim), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * (${lits(p)})[i]), (x,y) -> x+y)"
-      s"(CASE WHEN ($d) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH sz AS (SELECT label, count(*) AS cell_n FROM $table GROUP BY label),
-       |k AS (SELECT e.vec_id, e.embedding, e.label,
-       |    CASE WHEN sz.cell_n > $cellCap
-       |      THEN 'H:' || e.label || ':' || CAST($bits AS BIGINT)
-       |      ELSE 'L:' || e.label END AS jk
-       |  FROM $table e JOIN sz ON e.label = sz.label),
-       |p AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    ${sqlCosine("a.embedding", "b.embedding", Dim)} AS cos
-       |  FROM k a JOIN k b
-       |    ON a.jk = b.jk AND a.vec_id < b.vec_id)
-       |SELECT id_a, id_b, ${sqlMicro("cos")} AS cos_micro FROM p
-       |WHERE cos >= $thresh ORDER BY id_a, id_b""".stripMargin
-  }
+  def cosineNearDupPairsSql(table: String, thresh: Double = 0.3, cellCap: Int = 10000): String =
+    s"""WITH ${sqlCosinePairCtes(table, "label", thresh, cellCap)}
+       |SELECT id_a, id_b, ${sqlMicro("cos")} AS cos_micro FROM pairs
+       |ORDER BY id_a, id_b""".stripMargin
 
   /** Embedding near-dup CLUSTERS: connected components over the
-    * within-cell cosine pair graph (the similarity-family analogue of
+    * [[cosineNearDupPairs]] graph (the similarity-family analogue of
     * [[Dedup.dedupComponents]] — one canonical vector per duplicate
-    * cluster). Same min-label propagation core; same hot-cell guard.
+    * cluster). Same min-label propagation core; same capped blocks.
     */
   def embedComponents(
       emb: DataFrame,
       thresh: Double = 0.3,
       cellCap: Int = 10000
   ): DataFrame = {
-    val pairs = cosineNearDupPairs(emb, thresh, cellCap)
+    val pairs = cosinePairsUnordered(emb, "label", thresh, cellCap)
       .select(col("id_a"), col("id_b"))
     Dedup.componentsFrom(emb.select(col("vec_id").as("doc_id")), pairs, maxIters = 20)
       .select(col("doc_id").as("vec_id"), col("component"))
   }
 
-  def embedComponentsSql(table: String, thresh: Double = 0.3, cellCap: Int = 10000): String = {
-    def lits(p: Int): String = planes(p).mkString("[", ",", "]")
-    val bits = (0 until NumPlanes).map { p =>
-      val d = s"list_reduce(list_transform(generate_series(1,$Dim), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * (${lits(p)})[i]), (x,y) -> x+y)"
-      s"(CASE WHEN ($d) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH RECURSIVE sz AS (SELECT label, count(*) AS cell_n FROM $table GROUP BY label),
-       |k AS (SELECT e.vec_id, e.embedding, e.label,
-       |    CASE WHEN sz.cell_n > $cellCap
-       |      THEN 'H:' || e.label || ':' || CAST($bits AS BIGINT)
-       |      ELSE 'L:' || e.label END AS jk
-       |  FROM $table e JOIN sz ON e.label = sz.label),
-       |p AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    ${sqlCosine("a.embedding", "b.embedding", Dim)} AS cos
-       |  FROM k a JOIN k b
-       |    ON a.jk = b.jk AND a.vec_id < b.vec_id),
-       |pair AS (SELECT id_a, id_b FROM p WHERE cos >= $thresh),
-       |${Dedup.sqlReachCtes("pair", "vec_id", table)}
+  def embedComponentsSql(table: String, thresh: Double = 0.3, cellCap: Int = 10000): String =
+    s"""WITH RECURSIVE ${sqlCosinePairCtes(table, "label", thresh, cellCap)},
+       |${Dedup.sqlReachCtes("pairs", "vec_id", table)}
        |SELECT node AS vec_id, min(lbl) AS component
        |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin
-  }
 
   /** Skew-safe per-query top-k: the two-stage idiom ([[Prep.hostCap]]).
     * A single `row_number() OVER (PARTITION BY q_id)` would shuffle the
@@ -917,9 +918,10 @@ object Similarity {
     *  - cells come from [[kmeansAssign]] — whose exact integer `dist_mic2`
     *    is precisely the keep-rule key, so the policy costs NO extra pass
     *    and is bit-identical across engines (no float sums anywhere);
-    *  - within-cell pairs >= `thresh` use the s1 hot-cell guard: a cell
-    *    larger than `cellCap` is LSH-sub-bucketed so the pair join never
-    *    goes quadratic on a skewed cell (SemDeDup's own clusters are
+    *  - pairs >= `thresh` come from the s1 chain with the k-means cell as
+    *    the cell ([[cosinePairsUnordered]]): a cell larger than `cellCap`
+    *    is LSH-sub-bucketed and every block is capped, so the pair stage
+    *    never goes quadratic on a skewed cell (SemDeDup's own clusters are
     *    size-skewed on web data — boilerplate collapses into few cells);
     *  - duplicate groups = [[Dedup.componentsFrom]] (bounded-lineage
     *    min-label propagation; pairs never cross cells, so components
@@ -948,25 +950,12 @@ object Similarity {
         .select(col("vec_id"), col("cid"), col("component"),
           col("dist_mic2"), lit(1).cast("int").as("kept"))
     val asg = kmeansAssignWith(cents, emb)
-    val e = withNorm(emb)
+    val cells = emb
       .withColumn("q", expr("graft_micro_vec(embedding)"))
       .withColumn("sq", dot(col("q"), col("q")))
-      .withColumn("cid",
-        argminStruct(cents, col("q"), col("sq")).getField("cid"))
-      .drop("q", "sq")
-    val sizes = broadcast(e.groupBy(col("cid")).agg(count(lit(1)).as("cell_n")))
-    val keyed = e.join(sizes, "cid")
-      .withColumn("jk",
-        when(col("cell_n") > cellCap,
-          concat_ws(":", lit("H"), col("cid"), bucketCol(col("embedding"))))
-          .otherwise(concat_ws(":", lit("L"), col("cid"))))
-    val a = keyed.as("a")
-    val b = keyed.as("b")
-    val cos = dot(col("a.embedding"), col("b.embedding")) / (col("a.nrm") * col("b.nrm"))
-    val pairs = a
-      .join(b, col("a.jk") === col("b.jk") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"), cos.as("cos"))
-      .filter(col("cos") >= thresh)
+      .select(col("vec_id"), col("embedding"),
+        argminStruct(cents, col("q"), col("sq")).getField("cid").as("cid"))
+    val pairs = cosinePairsUnordered(cells, "cid", thresh, cellCap)
       .select(col("id_a"), col("id_b"))
     val comp = Dedup
       .componentsFrom(emb.select(col("vec_id").as("doc_id")), pairs, maxIters = 20)
@@ -997,28 +986,12 @@ object Similarity {
     * chains; the keep rule is the same two-stage max-then-min-tie form.
     */
   def semDedupSql(table: String, kCentroids: Int = 4, rounds: Int = 2,
-                  thresh: Double = 0.3, cellCap: Int = 10000): String = {
-    def lits(p: Int): String = planes(p).mkString("[", ",", "]")
-    val bits = (0 until NumPlanes).map { p =>
-      val d = s"list_reduce(list_transform(generate_series(1,$Dim), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * (${lits(p)})[i]), (x,y) -> x+y)"
-      s"(CASE WHEN ($d) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
+                  thresh: Double = 0.3, cellCap: Int = 10000): String =
     s"""WITH RECURSIVE ${kmeansWithBody(table, kCentroids, rounds)},
-       |sz AS (SELECT cid, count(*) AS cell_n FROM asg GROUP BY cid),
-       |kk AS (SELECT t.vec_id, t.embedding, a.cid,
-       |    CASE WHEN sz.cell_n > $cellCap
-       |      THEN 'H:' || a.cid || ':' || CAST($bits AS BIGINT)
-       |      ELSE 'L:' || a.cid END AS jk
-       |  FROM $table t JOIN asg a ON t.vec_id = a.vec_id
-       |  JOIN sz ON a.cid = sz.cid),
-       |p AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    ${sqlCosine("a.embedding", "b.embedding", Dim)} AS cos
-       |  FROM kk a JOIN kk b
-       |    ON a.jk = b.jk AND a.vec_id < b.vec_id),
-       |pair AS (SELECT id_a, id_b FROM p WHERE cos >= $thresh),
-       |${Dedup.sqlReachCtes("pair", "vec_id", table)},
+       |ec AS (SELECT t.vec_id, t.embedding, a.cid
+       |  FROM $table t JOIN asg a ON t.vec_id = a.vec_id),
+       |${sqlCosinePairCtes("ec", "cid", thresh, cellCap)},
+       |${Dedup.sqlReachCtes("pairs", "vec_id", table)},
        |comp AS (SELECT node AS vec_id, min(lbl) AS component
        |  FROM reach GROUP BY node),
        |tg AS (SELECT c.vec_id, a.cid, c.component,
@@ -1032,7 +1005,6 @@ object Similarity {
        |  CAST(CASE WHEN tg.vec_id = kp.keep_id THEN 1 ELSE 0 END AS INTEGER) AS kept
        |FROM tg JOIN kp ON tg.component = kp.component
        |ORDER BY tg.vec_id""".stripMargin
-  }
 
   /** Random-hyperplane LSH bucket assignment: 8 sign bits -> bucket id.
     * Pure narrow projection (the scale path: bucket-join for candidates).
@@ -1040,13 +1012,6 @@ object Similarity {
   def lshBuckets(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), bucketCol(col("embedding")).as("bucket")).orderBy("vec_id")
 
-  def lshBucketsSql(table: String): String = {
-    def lits(p: Int): String = planes(p).mkString("[", ",", "]")
-    val bits = (0 until NumPlanes).map { p =>
-      val d = s"list_reduce(list_transform(generate_series(1,$Dim), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * (${lits(p)})[i]), (x,y) -> x+y)"
-      s"(CASE WHEN ($d) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    s"SELECT vec_id, CAST($bits AS BIGINT) AS bucket FROM $table ORDER BY vec_id"
-  }
+  def lshBucketsSql(table: String): String =
+    s"SELECT vec_id, ${sqlBucket("embedding")} AS bucket FROM $table ORDER BY vec_id"
 }

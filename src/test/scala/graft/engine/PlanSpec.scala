@@ -166,6 +166,26 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("s6/s9: no range exchange over the composed cosine pair frame (pairs stay unsorted)") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    Corpus.ensure(spark, sfDir)
+    Seq("s6_embed_components", "s9_semdedup").foreach { q =>
+      // componentsFrom checkpoints the pair frame while the result is
+      // built, so the listener catches the pair pipeline's plan
+      val (df, ran) = executedBy(SparkEntry.queries(q)(spark, sfDir))
+      val all = (ran :+ df.queryExecution).map(_.executedPlan).flatMap(nodes)
+      def pairFrame(p: SparkPlan) = p.output.exists(_.name == "id_a")
+      assert(all.exists(pairFrame), s"$q: no pair frame in the executed plans")
+      val ranged = all.collect {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] && pairFrame(e) => e
+      }
+      assert(ranged.isEmpty,
+        s"$q: the pair frame is range-sorted:\n${ranged.map(_.treeString).mkString("\n")}")
+    }
+  }
+
   test("t-block text analysis ops are shuffle-free narrow projections") {
     Seq("t1_langid", "t2_quality", "t3_token_counts", "t4_fingerprint",
         "t6_repetition", "t7_redact", "t9_quality_gate").foreach { q =>

@@ -523,6 +523,30 @@ class OpsSpec extends AnyFunSuite {
     assert(capped.size < uncapped.size, "skewed cell must actually shrink")
   }
 
+  test("cosine near-dup: a hot cell whose vectors share one signature is capped") {
+    val rng = new java.util.Random(11)
+    def vec() = Seq.tabulate(64)(_ => rng.nextFloat() * 2f - 1f)
+    // label 0: 60 identical vectors, so the hot cell's sign-bit sub-blocks
+    // collapse into one 60-member block; label 1: a small cell
+    val v = vec()
+    val df = embDf(((0L until 60L).map(i => (i, v, 0)) ++
+      (60L until 65L).map(i => (i, vec(), 1))): _*)
+    def pairs(d: DataFrame, cellCap: Int): Set[(Long, Long)] =
+      Similarity.cosineNearDupPairs(d, cellCap = cellCap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val capped = pairs(df, 20)
+    val cluster = capped.filter(_._2 < 60L)
+    assert(cluster.flatMap(p => Seq(p._1, p._2)).size <= 20, "block not purged to the cap")
+    assert(cluster.size == 20 * 19 / 2, s"expected one full capped block, got ${cluster.size}")
+    val uncapped = pairs(df, 10000)
+    assert(uncapped.count(_._2 < 60L) == 60 * 59 / 2)
+    assert(capped.subsetOf(uncapped), "the cap must only remove candidates")
+    assert(pairs(df.repartition(7), 20) == capped, "the kept set must not depend on partitioning")
+    val comps = Similarity.embedComponents(df, cellCap = 20).collect()
+      .filter(_.getLong(0) < 60L).groupBy(_.getLong(1)).values.map(_.length)
+    assert(comps.max == 20, s"component sizes inside the cluster: ${comps.toSeq.sorted}")
+  }
+
   test("kmeans family: empty input yields empty results with the declared schemas") {
     // r6: centroids are a driver-side model — an empty corpus must degrade
     // to empty frames (as the former empty joins did), never an analysis
