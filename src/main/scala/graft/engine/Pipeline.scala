@@ -45,14 +45,22 @@ object Pipeline {
   private lazy val DigestPageEnc: Encoder[(String, Array[Byte], String, Long)] = Encoders.product
   private lazy val DigestDocEnc: Encoder[(DocOut, Long)] = Encoders.product
 
-  /** Cheap host extraction (no java.net.URI exceptions in the hot path). */
+  /** The one definition of a url's host: group 1 of this pattern, after a
+    * lowercase `[a-z]+://` scheme everything up to the first `/`, `:`, `?`
+    * or `#` (no port, no path; userinfo is kept), and "" when it does not
+    * match. [[hostOf]] and `graft.ops.ColFns.urlHost` (Spark and DuckDB
+    * `regexp_extract`) all read it.
+    */
+  final val UrlHostRegex = "^[a-z]+://([^/:?#]+)"
+
+  private val UrlHostPattern = java.util.regex.Pattern.compile(UrlHostRegex)
+
+  /** A url's host by [[UrlHostRegex]]: a `Matcher` and the substring, no
+    * java.net.URI exceptions in the hot path.
+    */
   def hostOf(url: String): String = {
-    val schemeEnd = url.indexOf("://")
-    val start = if (schemeEnd >= 0) schemeEnd + 3 else 0
-    var end = start
-    while (end < url.length && url.charAt(end) != '/' && url.charAt(end) != ':' &&
-      url.charAt(end) != '?' && url.charAt(end) != '#') end += 1
-    url.substring(start, end)
+    val m = UrlHostPattern.matcher(url)
+    if (m.find()) m.group(1) else ""
   }
 
   /** Deterministic bucket for resume/write idempotency. */

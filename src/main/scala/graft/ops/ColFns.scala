@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.engine.Pipeline
+
 /** Cross-engine column building blocks shared by the training-data pipeline
   * operators (dedup / similarity / text analysis).
   *
@@ -11,8 +13,8 @@ import org.apache.spark.sql.functions._
   *   - [[h32]]   <->  `CAST(('0x' || substring(md5(x),1,8)) AS BIGINT)`
   *   - [[dot]]   <->  `list_reduce(list_transform(...), (x,y) -> x+y)`
   *   - [[micro]] <->  `CAST(floor(x * 1000000.0) AS BIGINT)`
-  *   - [[urlHost]] <-> [[sqlUrlHost]], [[urlAuthority]] <->
-  *     [[sqlUrlAuthority]]: each pair the same `regexp_extract`
+  *   - [[urlHost]] <-> [[sqlUrlHost]]: the same `regexp_extract` of
+  *     [[graft.engine.Pipeline.UrlHostRegex]]
   * (the word/shingle primitives live in the typed kernels —
   * Dedup.shingleRows — since the higher-order column forms are
   * CodegenFallback; only their DuckDB mirrors remain here.)
@@ -40,24 +42,10 @@ object ColFns {
     */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** A url's host: after a lowercase `[a-z]+://` scheme, everything up to
-    * the first `/`, `:`, `?` or `#` (no port, no path; userinfo is kept).
-    * The one definition Prep and LinkGraph share. [[urlAuthority]] and
-    * [[graft.engine.Pipeline.hostOf]] answer differently on ports,
-    * uppercase schemes and userinfo; OpsSpec and PipelineSpec pin all three.
+  /** A url's host, [[graft.engine.Pipeline.UrlHostRegex]]: the column
+    * form of [[graft.engine.Pipeline.hostOf]]; OpsSpec pins the two equal.
     */
-  def urlHost(url: Column): Column = regexp_extract(url, UrlHost, 1)
-
-  private val UrlHost = "^[a-z]+://([^/:?#]+)"
-
-  /** A url's authority as the host-cap and crawl-freshness operators key
-    * it: after a lowercase `http://` or `https://`, everything up to the
-    * first `/` — port, userinfo and a path-less query included; "" for
-    * any other scheme.
-    */
-  def urlAuthority(url: Column): Column = regexp_extract(url, UrlAuthority, 1)
-
-  private val UrlAuthority = "^https?://([^/]+)"
+  def urlHost(url: Column): Column = regexp_extract(url, Pipeline.UrlHostRegex, 1)
 
   /** floor(x * 1e6) as BIGINT — the hash-stable way to emit a double:
     * floor is exact given identical IEEE inputs, unlike round (HALF_UP in
@@ -90,10 +78,8 @@ object ColFns {
     s"(${sqlDot(a, b, dim)} / (sqrt(${sqlDot(a, a, dim)}) * sqrt(${sqlDot(b, b, dim)})))"
 
   /** DuckDB equivalent of [[urlHost]] on SQL fragment `url`. */
-  def sqlUrlHost(url: String): String = s"regexp_extract($url, '$UrlHost', 1)"
-
-  /** DuckDB equivalent of [[urlAuthority]] on SQL fragment `url`. */
-  def sqlUrlAuthority(url: String): String = s"regexp_extract($url, '$UrlAuthority', 1)"
+  def sqlUrlHost(url: String): String =
+    s"regexp_extract($url, '${Pipeline.UrlHostRegex}', 1)"
 
   def sqlMicro(x: String): String = s"CAST(floor(($x) * 1000000.0) AS BIGINT)"
 }

@@ -127,27 +127,19 @@ object Dedup {
     * both engines (the bare (pri, doc_id) order left the survivor to
     * partition luck when doc_id repeats).
     *
-    * Skew shape: the two-stage top-k idiom ([[Prep.hostCap]]) — stage 1
-    * caps per (bkey, doc_id-sub-bucket) so the hot bucket never sorts in
-    * one task (Spark 4 plans WindowGroupLimit = map-side partial top-k),
-    * stage 2 re-ranks the <= nSub*cap survivors. Provably equal to the
+    * Skew shape: the staged top-k ([[Ranks.topKPerGroup]]) over doc_id
+    * sub-buckets, so the hot bucket never sorts in one task; exactly the
     * single-window cap the DuckDB mirrors use.
     */
   private[ops] def capBuckets(banded: DataFrame, cap: Int, nSub: Int = 16,
                               key: String = "bkey"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val rest = banded.columns.filterNot(c => c == key || c == "doc_id").map(col).toSeq
-    val order = Seq(col("pri"), col("doc_id")) ++ rest
-    val sub = Window
-      .partitionBy(col(key), pmod(col("doc_id"), lit(nSub.toLong)))
-      .orderBy(order: _*)
-    val w = Window.partitionBy(col(key)).orderBy(order: _*)
-    banded
+    val withPri = banded
       .withColumn("pri", h32(concat(col("doc_id").cast("string"), lit(":"),
         col(key).cast("string"), lit(":bcap"))))
-      .withColumn("rn1", row_number().over(sub)).filter(col("rn1") <= cap)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= cap)
-      .drop("pri", "rn1", "rn")
+    Ranks.topKPerGroup(withPri, col(key), col("doc_id"),
+        Seq(col("pri"), col("doc_id")) ++ rest, cap, "rn", nSub)
+      .drop("pri", "rn")
   }
 
   /** DuckDB mirror of [[capBuckets]]: the semantically-equal single-window

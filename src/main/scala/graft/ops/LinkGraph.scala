@@ -295,7 +295,7 @@ object LinkGraph {
     s"""CASE WHEN $href LIKE 'http://%' OR $href LIKE 'https://%'
        |         THEN NULLIF(${sqlUrlHost(href)}, '')
        |         WHEN $href LIKE '//%'
-       |         THEN NULLIF(regexp_extract($href, '^//([^/:?#]+)', 1), '')
+       |         THEN NULLIF(${sqlUrlHost(s"'https:' || $href")}, '')
        |         WHEN $href LIKE '/%' THEN $srcHost
        |         ELSE NULL END""".stripMargin
 

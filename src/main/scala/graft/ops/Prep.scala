@@ -420,31 +420,19 @@ object Prep {
     * h32(url ':' salt) — hash-priority, so the kept set is reproducible
     * and independent of partition layout, like [[stratifiedSample]].
     *
-    * Skew-safe two-stage top-k: the corpus deliberately parks 30% of pages
-    * on one host, and a single row_number window over `host` would sort
-    * all of that host's 10^12-scale rows in ONE task. Stage 1 takes the
-    * per-(host, sub-bucket) top-k over `nSub` hash sub-buckets — bounded
-    * partitions regardless of host skew; stage 2 re-ranks the <= nSub*k
-    * survivors per host, which is O(nSub*k) rows per host by construction.
-    * Top-k of a union is contained in the union of per-bucket top-k's, so
-    * the result is EXACTLY the single-window answer (the DuckDB oracle is
-    * that single window).
+    * The corpus deliberately parks 30% of pages on one host, so the cap is
+    * the staged top-k ([[Ranks.topKPerGroup]]) over h32(url) sub-buckets,
+    * exactly the single window the DuckDB oracle computes.
     */
   def hostCap(pages: DataFrame, k: Int = 5, salt: String = "cap1",
       nSub: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = pages.select(col("url"),
-      urlAuthority(col("url")).as("host"),
+      urlHost(col("url")).as("host"),
       h32(concat(col("url"), lit(":" + salt))).as("pri"))
     // url breaks h32 ties (collisions are rare but must stay deterministic)
-    val sub = Window
-      .partitionBy(col("host"), pmod(h32(col("url")), lit(nSub.toLong)))
-      .orderBy(col("pri"), col("url"))
-    val whost = Window.partitionBy(col("host")).orderBy(col("pri"), col("url"))
-    base
-      .withColumn("rn1", row_number().over(sub)).filter(col("rn1") <= k)
-      .withColumn("rn", row_number().over(whost)).filter(col("rn") <= k)
-      .select(col("host"), col("url"), col("rn").cast("int").as("rn"))
+    Ranks.topKPerGroup(base, col("host"), h32(col("url")), Seq(col("pri"), col("url")),
+        k, "rn", nSub)
+      .select(col("host"), col("url"), col("rn"))
       .orderBy("host", "rn")
   }
 
@@ -456,7 +444,7 @@ object Prep {
     s"""SELECT host, url, CAST(rn AS INT) AS rn FROM (
        |  SELECT host, url,
        |    ROW_NUMBER() OVER (PARTITION BY host ORDER BY pri, url) AS rn
-       |  FROM (SELECT url, ${sqlUrlAuthority("url")} AS host,
+       |  FROM (SELECT url, ${sqlUrlHost("url")} AS host,
        |      ${sqlH32(s"url || ':$salt'")} AS pri
        |    FROM read_parquet('$pagesGlob', hive_partitioning=1)))
        |WHERE rn <= $k ORDER BY host, rn""".stripMargin
@@ -469,7 +457,7 @@ object Prep {
     */
   def crawlFreshness(pages: DataFrame): DataFrame =
     pages
-      .select(urlAuthority(col("url")).as("host"),
+      .select(urlHost(col("url")).as("host"),
         col("warc_ts").cast("timestamp").as("ts"))
       .groupBy(col("host"))
       .agg(count(lit(1)).as("n_pages"),
@@ -480,7 +468,7 @@ object Prep {
       .orderBy("host")
 
   def crawlFreshnessSql(pagesGlob: String): String =
-    s"""SELECT ${sqlUrlAuthority("url")} AS host,
+    s"""SELECT ${sqlUrlHost("url")} AS host,
        |  CAST(count(*) AS BIGINT) AS n_pages,
        |  min(warc_ts) AS oldest, max(warc_ts) AS newest,
        |  CAST((epoch_ms(max(warc_ts)) - epoch_ms(min(warc_ts))) // 86400000 AS BIGINT)
@@ -590,16 +578,12 @@ object Prep {
     *
     * The hard part at 10^8 hosts is the remainder rank: a
     * `ROW_NUMBER() OVER (ORDER BY rem DESC)` is one task over every host.
-    * This uses the [[epochOrder]] distributed global-rank idiom instead —
-    * range-bucket on the remainder (scaled into nBuckets by the total
-    * weight), per-bucket bounded windows, tiny bucket-count offsets
-    * broadcast back — provably equal to the single-window oracle. The two
-    * scalars (total weight W, leftover R) ride as broadcast one-row
-    * frames, never a collect.
+    * Here it is the bucketed global order ([[Ranks.bucketedPrefix]]):
+    * the remainder range-buckets into 32 buckets (scaled by the total
+    * weight), higher buckets first. The two scalars (total weight W,
+    * leftover R) ride as broadcast one-row frames, never a collect.
     */
-  def budgetApportion(pages: DataFrame, budget: Long = 1000L,
-      nBuckets: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def budgetApportion(pages: DataFrame, budget: Long = 1000L): DataFrame = {
     require(budget > 0, "positive budget")
     val hw = pages
       .select(urlHost(col("url")).as("host"))
@@ -609,17 +593,10 @@ object Prep {
       .select(col("host"), col("w"),
         expr(s"(${budget}L * w) div tw").as("base"),
         expr(s"(${budget}L * w) % tw").as("rem"),
-        expr(s"((${budget}L * w) % tw) * ${nBuckets}L div tw").as("bkt"))
+        expr(s"((${budget}L * w) % tw) * 32L div tw").as("bkt"))
     val leftover = based.agg((lit(budget) - sum(col("base"))).as("r"))
-    // offsets: hosts in HIGHER-remainder buckets rank first
-    val offsets = based.groupBy(col("bkt")).agg(count(lit(1)).as("n"))
-      .withColumn("off",
-        coalesce(sum(col("n")).over(Window.orderBy(col("bkt").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bkt"), col("off"))
-    val w = Window.partitionBy(col("bkt")).orderBy(col("rem").desc, col("host"))
-    based.join(broadcast(offsets), "bkt")
-      .withColumn("rnk", col("off") + row_number().over(w).cast("long"))
+    Ranks.bucketedPrefix(based, Seq("bkt"), Seq(col("bkt").desc),
+        Seq(col("rem").desc, col("host")), lit(1L), "rnk")
       .crossJoin(broadcast(leftover))
       .select(col("host"), col("w"),
         (col("base") + when(col("rnk") <= col("r"), 1L).otherwise(0L))
@@ -718,13 +695,11 @@ object Prep {
     * ([[curriculumOrder]]) -> fixed-token-budget chunking ALONG THE
     * CURRICULUM ORDER. The last stage is what p4's per-(lang,shard)
     * packing deliberately is not: chunk boundaries follow the exact
-    * global schedule, so it needs a corpus-scale GLOBAL PREFIX SUM —
-    * computed distributed: dense `pos` ranks range-bucket evenly
-    * ((pos-1) div bucketRows), per-bucket token sums fold into running
-    * offsets over the tiny bucket frame (broadcast back), and the
-    * within-bucket running sum windows over bounded partitions. Provably
-    * the single-window `SUM OVER (ORDER BY pos)` the oracle computes,
-    * with no single-task sort anywhere.
+    * global schedule, so it needs a corpus-scale GLOBAL PREFIX SUM of
+    * token counts — the bucketed global order ([[Ranks.bucketedPrefix]])
+    * over dense `pos` ranks range-bucketed evenly ((pos-1) div
+    * bucketRows), which is the single-window `SUM OVER (ORDER BY pos)`
+    * the oracle computes, with no single-task sort anywhere.
     *
     * Output: (doc_id, band, pos, chunk_id) — one row per fed doc in
     * curriculum order with its training-chunk assignment.
@@ -734,7 +709,6 @@ object Prep {
       bucketRows: Long = 4096L,
       // materialize=false is for PLAN-SHAPE tests only (see endToEnd)
       materialize: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     def mat(df: DataFrame): DataFrame =
       if (materialize) df.localCheckpoint() else df
     val kept = temperatureMixture(docs, budgetChars).select(col("doc_id"))
@@ -750,15 +724,8 @@ object Prep {
       size(split(col("text"), " ", -1)).cast("long").as("n_tokens"))
     val seq0 = mat(ordered.join(toks, Seq("doc_id"))
       .withColumn("pb", expr(s"(pos - 1) div ${bucketRows}L")))
-    val offs = seq0.groupBy(col("pb")).agg(sum(col("n_tokens")).as("bt"))
-      .withColumn("boff",
-        coalesce(sum(col("bt")).over(Window.orderBy(col("pb"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pb"), col("boff"))
-    val win = Window.partitionBy(col("pb")).orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    seq0.join(broadcast(offs), Seq("pb"))
-      .withColumn("cum", col("boff") + sum(col("n_tokens")).over(win))
+    Ranks.bucketedPrefix(seq0, Seq("pb"), Seq(col("pb")), Seq(col("pos")),
+        col("n_tokens"), "cum")
       .select(col("doc_id"), col("band"), col("pos"),
         expr(s"(cum - n_tokens) div ${budgetTokens}L").as("chunk_id"))
       .orderBy(col("pos"))
@@ -923,8 +890,8 @@ object Prep {
     *  - exact survivors: [[Dedup.exact]] (agg+join on md5, no hot-key window),
     *  - near-dup canonical per cluster: [[Dedup.dedupComponents]] over the
     *    survivors (capped band buckets, min-label propagation),
-    *  - per-source cap: [[Dedup.capBuckets]] keyed on `source` (two-stage
-    *    group-limit — the hostCap idiom on the provenance column),
+    *  - per-source cap: [[Dedup.capBuckets]] keyed on `source` (the staged
+    *    top-k, [[Ranks.topKPerGroup]], on the provenance column),
     *  - sample: the [[stratifiedSample]] hash gate (zero shuffles),
     *  - pack: [[packChunks]] with the shard count AUTO-SIZED from the
     *    sampled survivor count via [[shardsFor]] — the flagship chain must
@@ -1090,42 +1057,29 @@ object Prep {
     *
     * The naive form — `row_number() OVER (ORDER BY key)` — is a
     * SINGLE-PARTITION window: the whole corpus funnels through one task.
-    * This is the distributed global-rank idiom instead:
-    *  - bucket = the key's high bits (`key div width`, `nBuckets` RANGE
-    *    buckets — uniform because the key is a hash), so global key order
-    *    == (bucket, key) order;
-    *  - per-bucket rank via `row_number() OVER (PARTITION BY bucket)` —
-    *    nBuckets parallel bounded windows, never one task;
-    *  - bucket base offsets from a tiny count agg (nBuckets rows) with a
-    *    running sum over THAT frame only, broadcast back;
-    *  - pos = offset + within-bucket rank. Exactly the single-window
-    *    answer (which is what the oracle computes), at map-side cost.
+    * This is the bucketed global order ([[Ranks.bucketedPrefix]]) instead,
+    * bucketed by the key's high bits (`key div width`, `nBuckets` RANGE
+    * buckets — uniform because the key is a hash), so global key order ==
+    * (bucket, key) order.
     *
     * (pos, doc_id) is collision-free: ties on the hash break by doc_id
     * inside each bucket, and buckets partition the key space.
     */
   def epochOrder(docs: DataFrame, epoch: Int = 0, nBuckets: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nBuckets > 0 && (nBuckets & (nBuckets - 1)) == 0, "power-of-two buckets")
     val width = (1L << 32) / nBuckets
     val keyed = docs
       .select(col("doc_id"),
         h32(concat(col("doc_id").cast("string"), lit(s":ep$epoch"))).as("k"))
       .withColumn("bucket", expr(s"k div ${width}L"))
-    val offsets = keyed.groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-      .withColumn("off",
-        coalesce(sum(col("n")).over(Window.orderBy(col("bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bucket"), col("off"))
-    val w = Window.partitionBy(col("bucket")).orderBy(col("k"), col("doc_id"))
-    keyed.join(broadcast(offsets), "bucket")
-      .select(col("doc_id"),
-        (col("off") + row_number().over(w).cast("long")).as("pos"))
+    Ranks.bucketedPrefix(keyed, Seq("bucket"), Seq(col("bucket")),
+        Seq(col("k"), col("doc_id")), lit(1L), "pos")
+      .select(col("doc_id"), col("pos"))
       .orderBy("pos")
   }
 
-  /** DuckDB mirror of [[epochOrder]]: the single-window form the two-stage
-    * construction provably equals.
+  /** DuckDB mirror of [[epochOrder]]: the single-window form the bucketed
+    * construction equals ([[Ranks.bucketedPrefix]]).
     */
   def epochOrderSql(table: String, epoch: Int = 0): String =
     s"""WITH k AS (SELECT doc_id,
@@ -1146,15 +1100,13 @@ object Prep {
     * t2/t9/p1, so the curriculum can never disagree with the quality gate
     * about what "quality" means).
     *
-    * Same distributed global-rank construction as [[epochOrder]], with the
-    * band prepended to the ordering: windows partition by (band, hash
-    * sub-bucket) — bounded even when one band holds most of the corpus —
-    * and base offsets come from a tiny (bands x nBuckets)-row count frame
-    * broadcast back. Exactly the single-window answer the oracle computes.
+    * The order is the bucketed global order ([[Ranks.bucketedPrefix]])
+    * over (band, hash sub-bucket) buckets, bands descending: windows stay
+    * bounded even when one band holds most of the corpus, and the offsets
+    * come from a tiny (bands x nBuckets)-row frame.
     */
   def curriculumOrder(docs: DataFrame, epoch: Int = 0,
       bandWidth: Long = 100000L, nBuckets: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nBuckets > 0 && (nBuckets & (nBuckets - 1)) == 0, "power-of-two buckets")
     require(bandWidth > 0, "positive band width")
     val width = (1L << 32) / nBuckets
@@ -1166,15 +1118,9 @@ object Prep {
         expr(s"score_micro div ${bandWidth}L").as("band"),
         h32(concat(col("doc_id").cast("string"), lit(s":cur$epoch"))).as("k"))
       .withColumn("sub", expr(s"k div ${width}L"))
-    val offsets = keyed.groupBy(col("band"), col("sub")).agg(count(lit(1)).as("n"))
-      .withColumn("off",
-        coalesce(sum(col("n")).over(Window.orderBy(col("band").desc, col("sub").asc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("band"), col("sub"), col("off"))
-    val w = Window.partitionBy(col("band"), col("sub")).orderBy(col("k"), col("doc_id"))
-    keyed.join(broadcast(offsets), Seq("band", "sub"))
-      .select(col("doc_id"), col("band"),
-        (col("off") + row_number().over(w).cast("long")).as("pos"))
+    Ranks.bucketedPrefix(keyed, Seq("band", "sub"), Seq(col("band").desc, col("sub").asc),
+        Seq(col("k"), col("doc_id")), lit(1L), "pos")
+      .select(col("doc_id"), col("band"), col("pos"))
       .orderBy("pos")
   }
 

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import ColFns._
 
@@ -147,28 +146,17 @@ object Similarity {
        |SELECT node AS vec_id, min(lbl) AS component
        |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin
 
-  /** Skew-safe per-query top-k: the two-stage idiom ([[Prep.hostCap]]).
-    * A single `row_number() OVER (PARTITION BY q_id)` would shuffle the
-    * ENTIRE corpus × nQueries into nQueries tasks; stage 1 takes the
-    * per-(q_id, candidate-sub-bucket) top-k over `nSub` hash sub-buckets
-    * (bounded partitions; Spark 4 plans WindowGroupLimit = map-side
-    * partial top-k), stage 2 re-ranks the <= nSub*k survivors per query.
-    * Top-k of a union is contained in the union of per-bucket top-k's, so
-    * this is EXACTLY the single-window answer (which is what the DuckDB
-    * oracles compute).
+  /** Skew-safe per-query top-k: a single `row_number() OVER (PARTITION BY
+    * q_id)` would shuffle the ENTIRE corpus × nQueries into nQueries
+    * tasks, so this is the staged top-k ([[Ranks.topKPerGroup]]) over
+    * candidate sub-buckets, exactly the single window the DuckDB oracles
+    * compute.
     */
-  private def topK(joined: DataFrame, k: Int, nSub: Int = 16): DataFrame = {
-    val sub = Window
-      .partitionBy(col("q_id"), pmod(col("n_id"), lit(nSub.toLong)))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    joined
-      .withColumn("rn1", row_number().over(sub)).filter(col("rn1") <= k)
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  private def topK(joined: DataFrame, k: Int): DataFrame =
+    Ranks.topKPerGroup(joined, col("q_id"), col("n_id"),
+        Seq(col("cos").desc, col("n_id").asc), k, "rank")
       .select(col("q_id"), col("n_id"), col("rank"), micro(col("cos")).as("cos_micro"))
       .orderBy("q_id", "rank")
-  }
 
   /** Brute-force cosine top-k for a small broadcast query set. */
   def bruteForceTopK(emb: DataFrame, nQueries: Int = 8, k: Int = 5): DataFrame = {
@@ -773,8 +761,8 @@ object Similarity {
     *  - the only shuffles are index-build time (the per-subspace argmin
     *    aggs and the vec_id equi-joins assembling the code rows — built
     *    once, reused by every query batch);
-    *  - top-k is the s2 two-stage group-limit (per-(query, sub-bucket)
-    *    rank first), never one window task per query over the corpus.
+    *  - top-k is the staged top-k ([[Ranks.topKPerGroup]]), never one
+    *    window task per query over the corpus.
     *
     * Exactness: micro-int sub-vectors, the 3-dot identity per subspace
     * (each partial sum far below 2^53), and adist = a sum of `mSub` exact
@@ -858,12 +846,8 @@ object Similarity {
     val scored = withCodes
       .select(col("n_id"), explode(array(perQuery: _*)).as("qa"))
       .select(col("qa.q_id").as("q_id"), col("n_id"), col("qa.adist").as("adist"))
-    val nSub = 16
-    val wSub = Window.partitionBy(col("q_id"), pmod(col("n_id"), lit(nSub)))
-      .orderBy(col("adist"), col("n_id"))
-    val wAll = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("n_id"))
-    scored.withColumn("rs", row_number().over(wSub)).filter(col("rs") <= k)
-      .withColumn("rank", row_number().over(wAll)).filter(col("rank") <= k)
+    Ranks.topKPerGroup(scored, col("q_id"), col("n_id"), Seq(col("adist"), col("n_id")),
+        k, "rank")
       .select(col("q_id"), col("n_id"), col("rank"), col("adist"))
       .orderBy(col("q_id"), col("rank"))
   }

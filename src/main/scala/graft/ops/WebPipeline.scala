@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.Pipeline
@@ -20,9 +19,9 @@ import graft.ops.ColFns.{h32, sqlH32}
   *   3. [[LinkGraph.hostRank]] computed over the FULL crawl's link graph
   *      (authority comes from everyone who links to you, including pages
   *      you may not fetch) joins each extracted doc's host;
-  *   4. a per-host contribution cap (the H25b two-stage group-limit, k
-  *      smallest salted hashes) bounds any one host's share of the
-  *      output corpus.
+  *   4. a per-host contribution cap (the staged top-k,
+  *      [[Ranks.topKPerGroup]], k smallest salted hashes) bounds any one
+  *      host's share of the output corpus.
   *
   * Output: (url, host, nKv, pr, rn) per surviving doc. The oracle
   * composes the SAME pieces: the p15 SQL as a nested subquery, the g1
@@ -31,7 +30,7 @@ import graft.ops.ColFns.{h32, sqlH32}
   */
 object WebPipeline {
 
-  def webPipeline(pages: DataFrame, k: Int = 10, nSub: Int = 16): DataFrame = {
+  def webPipeline(pages: DataFrame, k: Int = 10): DataFrame = {
     // the robots gate is row-local (Prep.robotsAllowed): the former
     // allowed-set SEMI-JOIN shuffled every page's payload by url to make a
     // per-row yes/no decision (guide §8 anti-pattern); as a filter the
@@ -42,15 +41,8 @@ object WebPipeline {
       .toDF().select(col("url"), col("host"), col("nKv"))
     val ranked = ext.join(LinkGraph.hostRank(pages), Seq("host"))
       .withColumn("pri", h32(concat(col("url"), lit(":wp"))))
-    val sub = Window
-      .partitionBy(col("host"), pmod(col("pri"), lit(nSub.toLong)))
-      .orderBy(col("pri"), col("url"))
-    val whost = Window.partitionBy(col("host")).orderBy(col("pri"), col("url"))
-    ranked
-      .withColumn("rn1", row_number().over(sub)).filter(col("rn1") <= k)
-      .withColumn("rn", row_number().over(whost)).filter(col("rn") <= k)
-      .select(col("url"), col("host"), col("nKv"), col("pr"),
-        col("rn").cast("int").as("rn"))
+    Ranks.topKPerGroup(ranked, col("host"), col("pri"), Seq(col("pri"), col("url")), k, "rn")
+      .select(col("url"), col("host"), col("nKv"), col("pr"), col("rn"))
       .orderBy(col("url"))
   }
 

@@ -248,17 +248,11 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("hostOf: ports, scheme case, no trailing slash, userinfo, query and fragment") {
-    // current behaviour, pinned: DocOut.host is a golden column
-    Seq(
-      "https://a.b:8080/x" -> "a.b",
-      "HTTPS://Example.COM/x" -> "Example.COM",
-      "https://a.b" -> "a.b",
-      "https://u@h/" -> "u@h",
-      "https://u:p@h/" -> "u",
-      "https://a.b?q=1" -> "a.b",
-      "https://a.b#top" -> "a.b",
-      "a.b/x" -> "a.b"
-    ).foreach { case (url, host) => assert(Pipeline.hostOf(url) == host, url) }
+    // DocOut.host is a golden column; OpsSpec "url hosts" checks
+    // ColFns.urlHost and hostCap's host against the same table
+    PipelineSpec.HostCases.foreach { case (url, host) =>
+      assert(Pipeline.hostOf(url) == host, url)
+    }
   }
 
   test("incremental re-extraction: kernel leg bounded by the delta, result equals full extract") {
@@ -368,4 +362,21 @@ class PipelineSpec extends AnyFunSuite {
       }.toSet
     assert(windowed == kernel)
   }
+}
+
+object PipelineSpec {
+  /** The host of each url under the one definition, group 1 of
+   *  `^[a-z]+://([^/:?#]+)` or "": no match for an uppercase or missing
+   *  scheme, nor for a `://` that only appears in the query. */
+  val HostCases: Seq[(String, String)] = Seq(
+    "https://a.b:8080/x" -> "a.b",
+    "HTTPS://Example.COM/x" -> "",
+    "https://a.b" -> "a.b",
+    "https://u@h/" -> "u@h",
+    "https://u:p@h/" -> "u",
+    "https://a.b?q=1" -> "a.b",
+    "https://a.b#top" -> "a.b",
+    "ftp://a.b/x" -> "a.b",
+    "a.b/x" -> "",
+    "a.b/r?u=http://c.d/" -> "")
 }

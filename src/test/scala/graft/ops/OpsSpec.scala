@@ -1106,28 +1106,19 @@ class OpsSpec extends AnyFunSuite {
 
   test("url hosts: ColFns.urlHost and hostCap's host on ports, case, userinfo and queries") {
     import spark.implicits._
-    // current answers, pinned. The two forms (and Pipeline.hostOf, pinned
-    // in PipelineSpec) disagree here; one definition would change results.
-    val cases = Seq(
-      // url                     urlHost  hostCap
-      ("https://a.b:8080/x",     "a.b",   "a.b:8080"),
-      ("HTTPS://Example.COM/x",  "",      ""),
-      ("https://a.b",            "a.b",   "a.b"),
-      ("https://u@h/",           "u@h",   "u@h"),
-      ("https://u:p@h/",         "u",     "u:p@h"),
-      ("https://a.b?q=1",        "a.b",   "a.b?q=1"),
-      ("ftp://a.b/x",            "a.b",   ""))
+    // one definition: Pipeline.hostOf, ColFns.urlHost and hostCap's host
+    // agree on every row of PipelineSpec's host table (DocOut.host is a
+    // golden column)
+    val cases = graft.engine.PipelineSpec.HostCases
     val pages = cases.map(_._1).toDF("url")
     val urlHost = pages.select(col("url"), ColFns.urlHost(col("url")))
       .as[(String, String)].collect().toMap
     val capHost = Prep.hostCap(pages, k = cases.size).select("url", "host")
       .as[(String, String)].collect().toMap
-    val authority = pages.select(col("url"), ColFns.urlAuthority(col("url")))
-      .as[(String, String)].collect().toMap
-    cases.foreach { case (url, h, ch) =>
+    cases.foreach { case (url, h) =>
+      assert(graft.engine.Pipeline.hostOf(url) == h, s"hostOf($url)")
       assert(urlHost(url) == h, s"urlHost($url)")
-      assert(capHost(url) == ch, s"hostCap host of $url")
-      assert(authority(url) == ch, s"urlAuthority($url)")
+      assert(capHost(url) == h, s"hostCap host of $url")
     }
   }
 
@@ -1369,6 +1360,48 @@ class OpsSpec extends AnyFunSuite {
     assert(got == ref)
     assert(got.count(_._2 == "HOT") == 8, "hot bucket must be capped")
     assert(got.count(_._2.startsWith("tail")) == 20, "under-cap buckets keep all members")
+  }
+
+  test("Ranks.topKPerGroup equals the one-window row_number on a hot group") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // one 500-row hot group + 30 small groups; order keys tie, id breaks them
+    val rows = (0L until 500L).map(i => (i, "hot", (i * 7919) % 13)) ++
+      (0 until 30).flatMap(g => (0 until g % 9 + 1).map { j =>
+        val id = 1000L + g * 10 + j
+        (id, s"g$g", (id * 7919) % 3)
+      })
+    val df = rows.toDF("id", "g", "score")
+    val order = Seq(col("score").desc, col("id"))
+    def ranked(f: DataFrame): Set[(String, Long, Int)] =
+      f.select("g", "id", "rank").as[(String, Long, Int)].collect().toSet
+    val ref = ranked(df.withColumn("rank",
+        row_number().over(Window.partitionBy(col("g")).orderBy(order: _*)))
+      .filter(col("rank") <= 5))
+    assert(ref.count(_._1 == "hot") == 5)
+    for (nSub <- Seq(1, 4, 16); in <- Seq(df, df.repartition(7)))
+      assert(ranked(Ranks.topKPerGroup(in, col("g"), col("id"), order, 5, "rank", nSub)) == ref,
+        s"nSub=$nSub")
+  }
+
+  test("Ranks.bucketedPrefix equals one global running-sum window") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // buckets ranked DESC, tied order keys inside a bucket broken by id
+    val df = (0L until 300L).map(i => (i, (i * 37) % 11, (i * 31) % 17, i % 5))
+      .toDF("id", "b", "k", "v")
+    val order = Seq(col("k"), col("id"))
+    val global = Window.orderBy(col("b").desc +: order: _*)
+    val running = global.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def got(value: org.apache.spark.sql.Column): Map[Long, Long] =
+      Ranks.bucketedPrefix(df.repartition(7), Seq("b"), Seq(col("b").desc), order, value, "out")
+        .select("id", "out").as[(Long, Long)].collect().toMap
+    def ref(c: org.apache.spark.sql.Column): Map[Long, Long] =
+      df.select(col("id"), c.cast("long")).as[(Long, Long)].collect().toMap
+    val ones = got(lit(1L))
+    assert(ones == ref(sum(lit(1L)).over(running)))
+    assert(ones == ref(row_number().over(global)), "value 1 counts rows")
+    assert(got(col("v")) == ref(sum(col("v")).over(running)))
   }
 
   test("lshCandidatePairs: a mass of exact duplicates stays bounded by the bucket cap") {
