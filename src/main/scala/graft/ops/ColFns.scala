@@ -54,7 +54,7 @@ object ColFns {
   def micro(x: Column): Column = floor(x * lit(1000000.0)).cast("long")
 
   // ----- DuckDB-side fragments (kept beside the Spark forms so the two
-  // ----- dialects evolve together; used by SparkEntry.oracleSql) -----
+  // ----- dialects evolve together; used by SparkEntry's oracle texts) -----
 
   /** DuckDB equivalent of [[h32]] applied to SQL fragment `s`. */
   def sqlH32(s: String): String =

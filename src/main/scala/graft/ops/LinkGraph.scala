@@ -204,12 +204,15 @@ object LinkGraph {
       .orderBy(col("slot"), col("pr").desc, col("host"), col("url"))
   }
 
+  /** Pointer-doubling rounds of [[resolveRedirects]]; see its bound. */
+  private val RedirectRounds = 2
+
   /** Redirect-chain resolution by POINTER DOUBLING — the crawl-store
     * canonicalization a fetcher needs before dedup (a url that 301s
     * through k hops must map to its final target): after r rounds every
-    * chain of length <= 2^r is resolved, so `rounds` log-bounds the work
-    * regardless of chain length — the naive follow-one-hop-per-round walk
-    * would need max-chain-length corpus joins. Each round is ONE
+    * chain of length <= 2^r is resolved, so the work is log-bounded in the
+    * chain length — the naive follow-one-hop-per-round walk would need
+    * max-chain-length corpus joins. Each round is ONE
     * self-equi-join on the successor key (`next' = next(next)`, hops
     * accumulate as `hops(u) + hops(next(u))`), with finals as fixed
     * points (next = self, hops = 0), and a localCheckpoint per round so
@@ -221,13 +224,15 @@ object LinkGraph {
     * (reconstructed through the corpus url rule, kept only when the
     * target exists) — real chains of length up to 3, no cycles. Output:
     * (url, final_url, hops) with hops EXACT.
+    *
+    * [[RedirectRounds]] = 2 rounds are exact for EVERY input, not just this
+    * corpus: an edge always runs from doc index i to i + 1 and exists only
+    * while i % 4 != 3, so along any chain the index climbs by one per hop
+    * and the chain ends by the first index with i % 4 == 3 — at most 3
+    * hops, while 2 rounds resolve up to 2^2 = 4. (A url without a doc index
+    * has no edge.) So no chain is ever left half-resolved.
     */
-  def resolveRedirects(pages: DataFrame, rounds: Int = 2): DataFrame = {
-    // rounds=2 resolves chains up to 2^2 = 4 hops — the constructed map's
-    // chains are at most 3 (runs of i % 4 != 3), so the default is exact
-    // for this corpus at every sf while paying two fewer checkpointed
-    // self-join rounds than the former rounds=4; callers with longer
-    // chains raise `rounds` (the operator stays log-bounded).
+  def resolveRedirects(pages: DataFrame): DataFrame = {
     val langs = graft.synth.CorpusGen.Langs
     val base = pages.select(col("url"),
       regexp_extract(col("url"), "doc-([0-9]+)$", 1).cast("long").as("i"))
@@ -246,7 +251,7 @@ object LinkGraph {
         when(col("nxt").isNull, 0L).otherwise(1L).as("hops"))
       .localCheckpoint()
     var r = 0
-    while (r < rounds) {
+    while (r < RedirectRounds) {
       p = p.join(
           p.select(col("url").as("nxt"), col("nxt").as("nxt2"),
             col("hops").as("hops2")), Seq("nxt"))

@@ -14,6 +14,9 @@ import graft.app.Corpus
   * writes the recomputed one to target/oracle_sql.sha256 — and the diff of
   * that file names exactly the queries whose text changed. The corpus root
   * is masked before hashing: it depends on where the checkout lives.
+  * Every text is also bound at a second corpus directory, which it must
+  * follow: [[SparkEntry.oracleSqlFor]] builds each text from the paths of
+  * the corpus it is given, never from sf0.01's.
   */
 class OracleSqlSpec extends AnyFunSuite {
 
@@ -45,5 +48,18 @@ class OracleSqlSpec extends AnyFunSuite {
         s"added: ${added.mkString(", ")}; removed: ${removed.mkString(", ")}. " +
         s"If on purpose, copy $out to src/test/resources/ and declare the change.")
     }
+  }
+
+  test("every oracle text follows the corpus it is bound to") {
+    // building the registry rejects a repeated query name, so any such
+    // entry fails here before a single text is compared
+    val alt = SparkEntry.oracleSqlFor("sf-alt")
+    assert(alt.keySet == SparkEntry.queries.keySet)
+    val (altDir, baseDir) = (Corpus.corpusDir("sf-alt"), Corpus.corpusDir("sf0.01"))
+    val pinned = alt.collect { case (n, sql) if sql.contains(s"$baseDir/") => n }
+    assert(pinned.isEmpty, s"oracle texts pinned to sf0.01: ${pinned.toSeq.sorted.mkString(", ")}")
+    val base = SparkEntry.oracleSql
+    val moved = alt.collect { case (n, sql) if sql.replace(altDir, baseDir) != base(n) => n }
+    assert(moved.isEmpty, s"texts that differ beyond the corpus directory: ${moved.toSeq.sorted.mkString(", ")}")
   }
 }
