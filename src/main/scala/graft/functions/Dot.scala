@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /** Native sequential-fold dot product over float/double array columns.
   *
@@ -20,54 +16,6 @@ import org.apache.spark.sql.types._
   * Unequal-length inputs are an error (the HOF form silently yielded null);
   * embeddings are fixed-dimension, so a length mismatch is data corruption.
   */
-case class DotExpression(left: Expression, right: Expression) extends BinaryExpression {
-
-  private def elemType(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemType(left).isDefined && elemType(right).isDefined)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dot requires ARRAY<FLOAT|DOUBLE> arguments, got " +
-        s"${left.dataType.sql} and ${right.dataType.sql}")
-
-  override def dataType: DataType = DoubleType
-  // null even for non-null inputs when an array ELEMENT is null
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_dot"
-
-  private def fnName: String = {
-    val l = if (elemType(left).contains(FloatType)) "F" else "D"
-    val r = if (elemType(right).contains(FloatType)) "F" else "D"
-    s"dot$l$r"
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    fnName match {
-      case "dotFF" => DotExpression.dotFF(x, y)
-      case "dotFD" => DotExpression.dotFD(x, y)
-      case "dotDF" => DotExpression.dotDF(x, y)
-      case _       => DotExpression.dotDD(x, y)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Double ${ev.value}_r = graft.functions.DotExpression.$fnName($a, $b);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.doubleValue(); }
-    """)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotExpression =
-    copy(left = newLeft, right = newRight)
-}
-
 object DotExpression {
   @inline private def check(a: ArrayData, b: ArrayData): Int = {
     val n = a.numElements()

@@ -1,43 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core.TextNorm
 
-/** Native Catalyst expression for full-width -> half-width folding
-  * (reference semantics: /root/reference/data/data_utils.py:173-195;
+/** Full-width -> half-width folding, the kernel of `graft_f2h`
+  * (reference semantics: PEneo's data/data_utils.py:173-195;
   * U+3000 -> space, U+FF01..U+FF5E -> code-0xFEE0).
   *
-  * Implemented as a codegen'd `UnaryExpression` (not a Scala UDF): the
+  * A native function (see [[GraftExtensions]]), not a Scala UDF: the
   * generated code is a single static call, so the projection it appears in
   * stays inside WholeStageCodegen with no closure serialization or
   * row boxing. Shares [[graft.core.TextNorm.stringF2H]] with the pure
   * decode kernel and the golden oracle, so all three paths are
   * byte-identical by construction.
   */
-case class F2HExpression(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_f2h requires a STRING argument, got ${child.dataType.sql}")
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_f2h"
-
-  override def nullSafeEval(input: Any): Any =
-    F2HExpression.f2h(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.F2HExpression.f2h($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): F2HExpression =
-    copy(child = newChild)
-}
-
 object F2HExpression {
   /** Static entry point shared by interpreted eval and generated code. */
   def f2h(s: UTF8String): UTF8String = {

@@ -3,9 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,26 +22,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-evaluated the shared `words` array per consuming branch; this is one
   * compiled scan with a reused MessageDigest.
   */
-case class FingerprintExpression(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_fingerprint requires a STRING argument, got ${child.dataType.sql}")
-
-  override def dataType: DataType = FingerprintExpression.schema
-  override def prettyName: String = "graft_fingerprint"
-
-  override def nullSafeEval(input: Any): Any =
-    FingerprintExpression.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.FingerprintExpression.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): FingerprintExpression =
-    copy(child = newChild)
-}
-
 object FingerprintExpression {
 
   val FpMod = 1000000007L

@@ -3,10 +3,6 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native h32 — the engine's cross-engine 32-bit hash (first 4 md5 bytes of
@@ -23,26 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * bytes with a thread-local reused MessageDigest (the
   * [[FingerprintExpression]] discipline).
   */
-case class H32Expression(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_h32 requires a STRING argument, got ${child.dataType.sql}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_h32"
-
-  override def nullSafeEval(input: Any): Any =
-    H32Expression.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.H32Expression.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): H32Expression =
-    copy(child = newChild)
-}
-
 object H32Expression {
 
   private val md5Local = new ThreadLocal[MessageDigest] {

@@ -2,10 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 16-byte md5 digest — bit-identical to `unhex(md5(s))` (the
@@ -14,26 +10,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * and unhex()'s re-parse per call. On shingle/line-sized inputs the hex
   * round trip costs as much as the digest itself.
   */
-case class Md5BinExpression(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_md5bin requires a STRING argument, got ${child.dataType.sql}")
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_md5bin"
-
-  override def nullSafeEval(input: Any): Any =
-    Md5BinExpression.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5BinExpression.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5BinExpression =
-    copy(child = newChild)
-}
-
 object Md5BinExpression {
 
   private val md5Local = new ThreadLocal[MessageDigest] {

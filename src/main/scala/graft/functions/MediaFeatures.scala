@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native single-pass media feature kernels (SURVEY.md §2 H14/H15).
@@ -24,26 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * ASCII ('a'..'p'), so byte and character positions coincide with the
   * DuckDB oracles' string semantics.
   */
-case class ByteHistExpression(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_byte_hist requires a STRING argument, got ${child.dataType.sql}")
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_byte_hist"
-
-  override def nullSafeEval(input: Any): Any =
-    ByteHistExpression.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ByteHistExpression.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ByteHistExpression =
-    copy(child = newChild)
-}
-
 object ByteHistExpression {
   val Lo: Byte = 'a'
   val Bins: Int = 16 // 'a'..'p'
@@ -67,27 +43,6 @@ object ByteHistExpression {
     }
     UTF8String.fromString(sb.toString)
   }
-}
-
-case class FrameSampleExpression(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1, s"graft_frame_sample stride must be >= 1, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_frame_sample requires a STRING argument, got ${child.dataType.sql}")
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_frame_sample"
-
-  override def nullSafeEval(input: Any): Any =
-    FrameSampleExpression.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.FrameSampleExpression.compute($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): FrameSampleExpression =
-    copy(child = newChild)
 }
 
 object FrameSampleExpression {

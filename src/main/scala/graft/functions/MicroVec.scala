@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 /** Native micro-quantization of an embedding vector:
   * `out[i] = floor(double(in[i]) * 1e6)` as an ARRAY<DOUBLE> of
@@ -27,37 +23,6 @@ import org.apache.spark.sql.types._
   * element; this is one strided pass. Null ELEMENTS map to null elements
   * (matching the DuckDB lambda's NULL propagation).
   */
-case class MicroVecExpression(child: Expression) extends UnaryExpression {
-
-  private def ok(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _                                                  => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_micro_vec requires an ARRAY<FLOAT|DOUBLE> argument, got ${child.dataType.sql}")
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def prettyName: String = "graft_micro_vec"
-
-  private def isFloat: Boolean =
-    child.dataType match { case ArrayType(FloatType, _) => true; case _ => false }
-
-  override def nullSafeEval(input: Any): Any =
-    if (isFloat) MicroVecExpression.computeF(input.asInstanceOf[ArrayData])
-    else MicroVecExpression.computeD(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isFloat) "computeF" else "computeD"
-    defineCodeGen(ctx, ev, c => s"graft.functions.MicroVecExpression.$fn($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MicroVecExpression =
-    copy(child = newChild)
-}
-
 object MicroVecExpression {
   val Scale = 1000000.0
 

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,26 +21,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - hits_XX = words contained in that language's stopword list (a word
   *    can hit several profiles; at most once per profile).
   */
-case class TextStatsExpression(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_text_stats requires a STRING argument, got ${child.dataType.sql}")
-
-  override def dataType: DataType = TextStatsExpression.schema
-  override def prettyName: String = "graft_text_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    TextStatsExpression.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextStatsExpression.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TextStatsExpression =
-    copy(child = newChild)
-}
-
 object TextStatsExpression {
 
   /** Stopword profiles in declaration-priority order; single source shared

@@ -42,6 +42,12 @@ object ColFns {
     */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
+  /** An embedding in integer micro units, `floor(x * 1e6)` per component
+    * as ARRAY<DOUBLE> — the native [[graft.functions.MicroVecExpression]]
+    * (exact in both engines, so sums and dots over it are order-free).
+    */
+  def microVec(v: Column): Column = call_function("graft_micro_vec", v)
+
   /** A url's host, [[graft.engine.Pipeline.UrlHostRegex]]: the column
     * form of [[graft.engine.Pipeline.hostOf]]; OpsSpec pins the two equal.
     */

@@ -500,15 +500,22 @@ object Dedup {
     * rounds needed = component diameter, which for near-dup clusters
     * (copies of the same content) is tiny and independent of corpus size.
     * Labels persist per round and unpersist the previous round, so lineage
-    * stays bounded. maxIters is a loud-failure guard, not a silent cap.
+    * stays bounded. [[MaxComponentRounds]] is a loud-failure guard, not a
+    * silent cap.
     */
-  def dedupComponents(docs: DataFrame, k: Int = 8, n: Int = 4, maxIters: Int = 20): DataFrame =
-    componentsFrom(docs.select(col("doc_id")), lshCandidatePairsUnordered(docs, k, n), maxIters)
+  def dedupComponents(docs: DataFrame, k: Int = 8, n: Int = 4): DataFrame =
+    componentsFrom(docs.select(col("doc_id")), lshCandidatePairsUnordered(docs, k, n))
+
+  /** Convergence cycles [[componentsFrom]] may run before it fails loudly.
+    * Cycles grow as log(diameter) once the pointer jump engages (cycle 3),
+    * so 20 is far above what a near-dup graph needs.
+    */
+  private val MaxComponentRounds = 20
 
   /** Propagation core: nodes(doc_id) + undirected pairs(id_a, id_b) ->
     * (doc_id, component). Exposed for direct graph-shape tests.
     */
-  private[ops] def componentsFrom(nodes: DataFrame, pairs: DataFrame, maxIters: Int): DataFrame = {
+  private[ops] def componentsFrom(nodes: DataFrame, pairs: DataFrame): DataFrame = {
     // convergence statistic: sum of labels as DECIMAL(38,0) — labels only
     // ever decrease, so an unchanged sum == fixpoint. Decimal (not LONG) so
     // the O(1) test cannot overflow at 10^12-doc id ranges (ANSI mode would
@@ -568,7 +575,8 @@ object Dedup {
     val jumpFrom = 3 // cycle from which the pointer-jump shortcut engages
     while (!converged) {
       iters += 1
-      require(iters <= maxIters, s"componentsFrom did not converge in $maxIters rounds")
+      require(iters <= MaxComponentRounds,
+        s"componentsFrom did not converge in $MaxComponentRounds rounds")
       // MULTIPLE propagation hops per convergence cycle: the per-cycle
       // fixed costs (job launch, materialization, the O(1) convergence
       // scan) are what dominate on the small touched frame, so halving

@@ -769,11 +769,11 @@ object Media {
     * fixpoint loop.
     */
   private def components(media: Dataset[MediaRow], kind: String, maxHamming: Int,
-                         bucketCap: Int, maxIters: Int): DataFrame = {
+                         bucketCap: Int): DataFrame = {
     val nodes = media.toDF().filter(col("kind") === kind).select(col("doc_id"))
     val pairs = Dedup.banded64Pairs(fingerprint64(media, kind), bucketCap, maxHamming)
       .select(col("id_a"), col("id_b"))
-    Dedup.componentsFrom(nodes, pairs, maxIters)
+    Dedup.componentsFrom(nodes, pairs)
   }
 
   /** DuckDB mirror of a pairs query: fingerprint CTEs ending in `ah`, whose
@@ -818,8 +818,8 @@ object Media {
 
   /** Image near-dup clusters over the [[aHashPairs]] graph. */
   def imageComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
-                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame =
-    components(media, "image", maxHamming, bucketCap, maxIters)
+                      bucketCap: Int = 40): DataFrame =
+    components(media, "image", maxHamming, bucketCap)
 
   def imageComponentsSql(parquetGlob: String, maxHamming: Int = 3,
                          bucketCap: Int = 40): String =
@@ -867,8 +867,8 @@ object Media {
 
   /** Audio near-dup clusters over the [[audioPairs]] graph. */
   def audioComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
-                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame =
-    components(media, "audio", maxHamming, bucketCap, maxIters)
+                      bucketCap: Int = 40): DataFrame =
+    components(media, "audio", maxHamming, bucketCap)
 
   def audioComponentsSql(parquetGlob: String, maxHamming: Int = 3,
                          bucketCap: Int = 40): String =
@@ -929,8 +929,8 @@ object Media {
 
   /** Video near-dup clusters over the [[videoPairs]] graph. */
   def videoComponents(media: Dataset[MediaRow], maxHamming: Int = 3,
-                      bucketCap: Int = 40, maxIters: Int = 20): DataFrame =
-    components(media, "video", maxHamming, bucketCap, maxIters)
+                      bucketCap: Int = 40): DataFrame =
+    components(media, "video", maxHamming, bucketCap)
 
   def videoComponentsSql(parquetGlob: String, maxHamming: Int = 3,
                          bucketCap: Int = 40): String =

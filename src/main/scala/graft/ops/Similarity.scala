@@ -136,7 +136,7 @@ object Similarity {
   ): DataFrame = {
     val pairs = cosinePairsUnordered(emb, "label", thresh, cellCap)
       .select(col("id_a"), col("id_b"))
-    Dedup.componentsFrom(emb.select(col("vec_id").as("doc_id")), pairs, maxIters = 20)
+    Dedup.componentsFrom(emb.select(col("vec_id").as("doc_id")), pairs)
       .select(col("doc_id").as("vec_id"), col("component"))
   }
 
@@ -524,7 +524,7 @@ object Similarity {
 
   /** The (vec_id, q, sq) micro-int frame every k-means stage consumes. */
   private def microQd(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), expr("graft_micro_vec(embedding)").as("q"))
+    emb.select(col("vec_id"), microVec(col("embedding")).as("q"))
       .withColumn("sq", dot(col("q"), col("q")))
 
   /** Sequential-fold self dot product on the driver — the SAME
@@ -709,7 +709,7 @@ object Similarity {
       return emb.select(col("vec_id").as("q_id"), col("vec_id").as("n_id"),
         lit(1).as("rank"), lit(0L).as("cos_micro")).filter(lit(false))
     val e = withNorm(emb)
-      .withColumn("q", expr("graft_micro_vec(embedding)"))
+      .withColumn("q", microVec(col("embedding")))
       .withColumn("sq", dot(col("q"), col("q")))
       .withColumn("cid",
         argminStruct(cents, col("q"), col("sq")).getField("cid"))
@@ -808,7 +808,7 @@ object Similarity {
       acc
     }
     val qRows = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), expr("graft_micro_vec(embedding)").as("q"))
+      .select(col("vec_id"), microVec(col("embedding")).as("q"))
       .collect().sortBy(_.getLong(0))
     if (subCents.exists(_.isEmpty) || qRows.isEmpty)
       // empty corpus / no queries: empty result (former empty joins)
@@ -829,7 +829,7 @@ object Similarity {
     // exact ADC sum d0 + d1 + ... (same left-to-right order as the former
     // column sum) via map-literal lookups
     val base = emb.select(col("vec_id").as("n_id"),
-      expr("graft_micro_vec(embedding)").as("q"))
+      microVec(col("embedding")).as("q"))
     val withCodes = (0 until mSub).foldLeft(base) { (df, s) =>
       val qs = slice(col("q"), s * subDim + 1, subDim)
       df.withColumn(s"qs$s", qs)
@@ -935,14 +935,14 @@ object Similarity {
           col("dist_mic2"), lit(1).cast("int").as("kept"))
     val asg = kmeansAssignWith(cents, emb)
     val cells = emb
-      .withColumn("q", expr("graft_micro_vec(embedding)"))
+      .withColumn("q", microVec(col("embedding")))
       .withColumn("sq", dot(col("q"), col("q")))
       .select(col("vec_id"), col("embedding"),
         argminStruct(cents, col("q"), col("sq")).getField("cid").as("cid"))
     val pairs = cosinePairsUnordered(cells, "cid", thresh, cellCap)
       .select(col("id_a"), col("id_b"))
     val comp = Dedup
-      .componentsFrom(emb.select(col("vec_id").as("doc_id")), pairs, maxIters = 20)
+      .componentsFrom(emb.select(col("vec_id").as("doc_id")), pairs)
       .select(col("doc_id").as("vec_id"), col("component"))
     semDedupKeepOver(asg.join(comp, "vec_id")).orderBy("vec_id")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.TextNorm
-import graft.functions.{F2HExpression, GraftFunctions}
+import graft.functions.{GraftExtensions, GraftFunctions}
 
 /** Specs for the training-data pipeline operators (dedup / similarity /
   * text analysis / multimodal) and the native Catalyst f2h expression.
@@ -384,22 +384,23 @@ class OpsSpec extends AnyFunSuite {
     val nodes = (1L to 6L).toDF("doc_id")
     // path 1-2-3-4 (diameter 3 -> several propagation rounds), pair 5-6
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L)).toDF("id_a", "id_b")
-    val got = Dedup.componentsFrom(nodes, pairs, maxIters = 20)
+    val got = Dedup.componentsFrom(nodes, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 
   test("connected components: diameter-12 chain converges across checkpoint boundaries") {
     import spark.implicits._
-    // a 13-node path graph needs >5 propagation rounds, so the fixpoint
-    // loop crosses the every-5-rounds localCheckpoint at least twice —
+    // a 13-node path graph needs 4 convergence cycles (2 propagation hops
+    // each, plus the pointer jump from cycle 3), so the fixpoint loop
+    // crosses the localCheckpoint taken every 3rd cycle —
     // exercising both lineage truncation and the decimal-sum convergence
     // test on a high-diameter graph (plus a large-id singleton: the decimal
     // path must not care about id magnitude)
     val big = Long.MaxValue / 2
     val nodes = ((1L to 13L) :+ big).toDF("doc_id")
     val pairs = (1L until 13L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.componentsFrom(nodes, pairs, maxIters = 20)
+    val got = Dedup.componentsFrom(nodes, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (1L to 13L).map(_ -> 1L).toMap + (big -> big)
     assert(got == expected)
@@ -923,16 +924,87 @@ class OpsSpec extends AnyFunSuite {
     assert(out.toSeq == samples.map(TextNorm.stringF2H))
   }
 
-  test("f2h expression stays codegen-compatible and null-safe") {
-    import spark.implicits._
-    val df = Seq(Some("ａ"), None).toDF("s")
-      .select(GraftFunctions.f2hExpr("s").as("h"))
-    val rows = df.collect()
-    assert(rows(0).getString(0) == "a" && rows(1).isNullAt(0))
-    // interpreted path parity (codegen fallback)
-    val expr = F2HExpression(org.apache.spark.sql.catalyst.expressions.Literal(
-      org.apache.spark.unsafe.types.UTF8String.fromString("Ａ　x")))
-    assert(expr.eval(null).toString == "A x")
+  test("native graft functions: generated and interpreted paths agree, null-safe") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.ExplainMode
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(17)
+    val words = Seq("the", "a", "und", "ｆｕｌｌ", "Ａ　x", "abcdefghijklmnop", "ñandú", "le")
+    val rows = (0L until 12L).map { i =>
+      val v = Seq.fill(4)(rnd.nextGaussian())
+      Row(i, Seq.fill(1 + rnd.nextInt(8))(words(rnd.nextInt(words.size))).mkString(" "),
+        v.map(_.toFloat), v.map(_ * 2))
+    } ++ Seq(Row(12L, null, null, null),
+      Row(13L, "", Seq(1.0f, null, 2.0f), Seq(0.5, 1.5, null)))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("s", StringType),
+      StructField("ff", ArrayType(FloatType)), StructField("dd", ArrayType(DoubleType))))
+    // an RDD scan, not a local relation: the optimizer must not fold the calls
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val calls = Seq("graft_f2h(s)", "graft_h32(s)", "graft_md5bin(s)", "graft_text_stats(s)",
+      "graft_fingerprint(s)", "graft_byte_hist(s)", "graft_frame_sample(s, 3)",
+      "graft_bucket(s, 16)", "graft_micro_vec(ff)", "graft_micro_vec(dd)",
+      "graft_dot(ff, ff)", "graft_dot(ff, dd)", "graft_dot(dd, ff)", "graft_dot(dd, dd)")
+    assert(calls.map(_.takeWhile(_ != '(')).toSet == GraftExtensions.Native.map(_.name).toSet)
+    def run(factoryMode: String, wholeStage: Boolean): (Seq[Row], String) = {
+      spark.conf.set("spark.sql.codegen.factoryMode", factoryMode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage.toString)
+      try {
+        val q = df.selectExpr("id" +: calls: _*)
+        (q.collect().sortBy(_.getLong(0)).toSeq,
+          q.queryExecution.explainString(ExplainMode.fromString("codegen")))
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+    val (generated, code) = run("CODEGEN_ONLY", wholeStage = true)
+    val (interpreted, _) = run("NO_CODEGEN", wholeStage = false)
+    assert(generated == interpreted)
+    // the element types pick the kernel variant; the generated code calls it
+    Seq("F2HExpression.f2h", "H32Expression.compute", "Md5BinExpression.compute",
+      "TextStatsExpression.compute", "FingerprintExpression.compute",
+      "ByteHistExpression.compute", "FrameSampleExpression.compute",
+      "FnvBucketExpression.bucket", "MicroVecExpression.computeF",
+      "MicroVecExpression.computeD", "DotExpression.dotFF", "DotExpression.dotFD",
+      "DotExpression.dotDF", "DotExpression.dotDD").foreach { m =>
+      assert(code.contains(s"graft.functions.$m("), s"generated code never calls $m")
+    }
+    val byId = generated.map(r => r.getLong(0) -> r).toMap
+    assert((1 to calls.size).forall(byId(12L).isNullAt), byId(12L))
+    // a null element: a null dot, a null micro unit
+    assert((11 to 14).forall(byId(13L).isNullAt), byId(13L))
+    assert(byId(13L).getSeq[Any](9) == Seq(1e6, null, 2e6))
+    // the registry's builder, evaluated without any plan
+    val f2h = GraftExtensions.Native.find(_.name == "graft_f2h").get
+    assert(f2h.call(Seq(org.apache.spark.sql.catalyst.expressions.Literal("Ａ　x")))
+      .eval(null).toString == "A x")
+  }
+
+  test("native graft functions reject a wrong argument count or type at analysis") {
+    import org.apache.spark.sql.AnalysisException
+    Seq("graft_h32('a', 'b')" -> "`graft_h32` requires 1 parameters",
+        "graft_f2h('x', 'y')" -> "`graft_f2h` requires 1 parameters",
+        "graft_dot(array(1.0D), array(1.0D), array(1.0D))" -> "`graft_dot` requires 2 parameters",
+        "graft_h32()" -> "`graft_h32` requires 1 parameters",
+        "graft_dot(array(1.0D))" -> "`graft_dot` requires 2 parameters",
+        "graft_h32(1)" -> "graft_h32 requires a STRING argument, got INT",
+        "graft_dot(array('a'), array(1.0D))" ->
+          "graft_dot requires ARRAY<FLOAT|DOUBLE> arguments, got ARRAY<STRING> and ARRAY<DOUBLE>",
+        "graft_micro_vec(array(1))" ->
+          "graft_micro_vec requires an ARRAY<FLOAT|DOUBLE> argument, got ARRAY<INT>",
+        "graft_bucket('u', 0)" -> "graft_bucket requires buckets > 0, got 0",
+        "graft_frame_sample('ab', 0)" -> "graft_frame_sample stride must be >= 1, got 0",
+        "graft_frame_sample(s, length(s)) FROM VALUES ('ab') AS t(s)" ->
+          "graft_frame_sample(payload, k) requires a literal stride",
+        "graft_bucket(s, length(s)) FROM VALUES ('ab') AS t(s)" ->
+          "graft_bucket(url, buckets) requires a literal bucket count").foreach {
+      case (call, msg) =>
+        val e = intercept[AnalysisException](spark.sql(s"SELECT $call").collect())
+        assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    // a BIGINT literal count is read as an INT
+    assert(spark.sql("SELECT graft_bucket('u', 16L)").head().getInt(0) ==
+      graft.core.UrlBucket.of("u", 16))
   }
 
   // ---------- eval metrics query ----------
